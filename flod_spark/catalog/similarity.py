@@ -2728,12 +2728,8 @@ def stream_ivfpq_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     × 42× compression across base + slices; compaction folds slices
     nightly (sim_ivfpq_compacted). Swap the replay source for Kafka
     with zero changes downstream."""
-    import os
-    import shutil
-    import uuid
-
     from flod_spark.io import serve_and_cleanup
-    from flod_spark.streaming import replay_stream
+    from flod_spark.streaming.gate import drain, spool
 
     emb = _emb_v(spark, sf_dir)
     mm = emb.agg(F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")).first()
@@ -2744,35 +2740,13 @@ def stream_ivfpq_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = emb.filter(F.col("vec_id") > mid).withColumn(
         "ingest_ts", F.timestamp_micros(F.col("vec_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_ivfpq_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, feed, "ingest_ts", replay_dir, n_batches=3, tiebreak=("vec_id",)
-    )
-    from flod_spark.io import pinned_stream_partitions
-
-    sink = ivfpq_ingest_sink(idx_dir)
-    name = "ivfpq_ingest_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix=f"flod_ckpt_{name}_")
-    with pinned_stream_partitions(spark):  # _drain's rationale
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
+    with spool(spark, feed, "ingest_ts", n_batches=3, tiebreak=("vec_id",)) as sp:
+        drain(sp.stream, spark, foreach_batch=ivfpq_ingest_sink(idx_dir))
     queries = emb.filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("query_id"), "v"
     )
     return serve_and_cleanup(
-        ivfpq_index_query(spark, idx_dir, queries, include_slices=True),
-        idx_dir,
-        replay_dir,
+        ivfpq_index_query(spark, idx_dir, queries, include_slices=True), idx_dir
     )
 
 

@@ -28,18 +28,20 @@ from __future__ import annotations
 import glob
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.window import Window
 
 from flod_spark.catalog.analytics import _HH_C, basket_pair_structs
 from flod_spark.functions.hashbridge import salted_mod, salted_mod_sql
 from flod_spark.io import load
 from flod_spark.registry import query
-from flod_spark.streaming import replay_stream, streaming_take_per_key, tumbling_counts
+from flod_spark.streaming import streaming_take_per_key, tumbling_counts
+from flod_spark.streaming.gate import drain, spool
 from flod_spark.streaming.packfold import (
+    _drain_sorted,
     _gather,
     _hist_vals,
     _lookup,
@@ -54,51 +56,6 @@ from flod_spark.streaming.windows import as_naive, with_event_time
 _WINDOW = "1 hour"
 _WATERMARK = "2 hours"
 _TAKE_N = 3
-
-
-def _drain(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    output_mode: str = "append",
-    cleanup: tuple = (),
-    wide_state: bool = False,
-) -> DataFrame:
-    """Run a streaming DataFrame to completion into a memory sink and
-    return the materialized result (unique names: re-entrant per call).
-
-    Shuffle partitions are pinned low for the stream's lifetime via
-    io.pinned_stream_partitions (derived min(8, defaultParallelism),
-    restored on exit — see its docstring for the state-store-commit
-    rationale and the production scaling story). ``wide_state=True``
-    pins defaultParallelism instead, for gates whose state is
-    corpus-scale (see pinned_stream_partitions).
-
-    ``cleanup``: temp dirs (replay spools) to remove once the stream has
-    run dry — the memory sink holds the materialized result, so the
-    source files are dead weight afterwards; without this every gated
-    live query leaks a full copy of its input table to /tmp per run."""
-    from flod_spark.io import pinned_stream_partitions
-
-    name = "live_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix=f"flod_ckpt_{name}_")
-    try:
-        with pinned_stream_partitions(spark, wide=wide_state):
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        for d in cleanup:
-            shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name)
 
 
 @query(
@@ -122,14 +79,10 @@ def stream_window_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: watermark-bounded window state; partial aggregation collapses
     events map-side before the state store."""
     ev = load(spark, sf_dir, "events")
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_w_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=5, tiebreak=("event_id",))
-    got = _drain(tumbling_counts(stream, window=_WINDOW, watermark=_WATERMARK), spark,
-                 cleanup=(replay_dir,))
+    with spool(spark, ev, "ts", n_batches=5, tiebreak=("event_id",)) as sp:
+        got = drain(tumbling_counts(sp.stream, window=_WINDOW, watermark=_WATERMARK), spark)
     # windows closed by the final watermark: win_end <= max_ts - 2h
-    horizon = F.lit(max_ts) - F.expr("INTERVAL 3 HOURS")
+    horizon = F.lit(sp.max) - F.expr("INTERVAL 3 HOURS")
     return got.filter(F.col("win_start") <= horizon)
 
 
@@ -167,21 +120,18 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     by user_id across executors; the watermark bounds it to ~2h of open
     sessions per key."""
     ev = load(spark, sf_dir, "events")
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_s_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    sess = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        sess = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+            )
         )
-    )
-    got = _drain(sess, spark, cleanup=(replay_dir,))
-    horizon = F.lit(max_ts) - F.expr("INTERVAL 2 HOURS")
+        got = drain(sess, spark)
+    horizon = F.lit(sp.max) - F.expr("INTERVAL 2 HOURS")
     return got.select(
         "user_id",
         as_naive("w.start").alias("session_start"),
@@ -209,10 +159,8 @@ def stream_take_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is one counter per key, sharded by key hash."""
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_t_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    got = _drain(streaming_take_per_key(stream, _TAKE_N), spark, cleanup=(replay_dir,))
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        got = drain(streaming_take_per_key(sp.stream, _TAKE_N), spark)
     return got.select("event_id", "ts", "user_id", "event_type", "value", "props")
 
 
@@ -239,36 +187,34 @@ def stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the watermark + range bound evicts join state; state holds
     only the active window."""
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_j_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    stream = with_event_time(stream)
-    signups = (
-        stream.filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            F.col("user_id").alias("u"),
-            F.col("ts").alias("ts_s"),
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        stream = with_event_time(sp.stream)
+        signups = (
+            stream.filter(F.col("event_type") == "signup")
+            .select(
+                F.col("event_id").alias("signup_id"),
+                F.col("user_id").alias("u"),
+                F.col("ts").alias("ts_s"),
+            )
+            .withWatermark("ts_s", "2 hours")
         )
-        .withWatermark("ts_s", "2 hours")
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("u2"),
-            F.col("ts").alias("ts_c"),
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id").alias("u2"),
+                F.col("ts").alias("ts_c"),
+            )
+            .withWatermark("ts_c", "2 hours")
         )
-        .withWatermark("ts_c", "2 hours")
-    )
-    joined = signups.join(
-        clicks,
-        (F.col("u") == F.col("u2"))
-        & (F.col("click_id") != F.col("signup_id"))
-        & (F.col("ts_c") >= F.col("ts_s"))
-        & (F.col("ts_c") <= F.col("ts_s") + F.expr("INTERVAL 30 MINUTES")),
-    ).select("signup_id", "click_id")
-    return _drain(joined, spark, cleanup=(replay_dir,))
+        joined = signups.join(
+            clicks,
+            (F.col("u") == F.col("u2"))
+            & (F.col("click_id") != F.col("signup_id"))
+            & (F.col("ts_c") >= F.col("ts_s"))
+            & (F.col("ts_c") <= F.col("ts_s") + F.expr("INTERVAL 30 MINUTES")),
+        ).select("signup_id", "click_id")
+        return drain(joined, spark)
 
 
 @query(
@@ -289,14 +235,14 @@ def stream_queue_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform."""
     from flod_spark.streaming.queue import StreamingQueue
 
-    spool_dir = tempfile.mkdtemp(prefix="flod_sq_live_")
-    q = StreamingQueue(spark, spool_dir=spool_dir)
-    for c in range(6):
-        q.put(range(c * 100 * 7 + 1, (c + 1) * 100 * 7 + 1, 7))
-    enriched = q.stream().select(
-        F.col("value"), (F.col("value") % 10).alias("bucket")
-    )
-    return _drain(enriched, spark, cleanup=(spool_dir,))
+    with tempfile.TemporaryDirectory(prefix="flod_sq_live_") as spool_dir:
+        q = StreamingQueue(spark, spool_dir=spool_dir)
+        for c in range(6):
+            q.put(range(c * 100 * 7 + 1, (c + 1) * 100 * 7 + 1, 7))
+        enriched = q.stream().select(
+            F.col("value"), (F.col("value") % 10).alias("bucket")
+        )
+        return drain(enriched, spark)
 
 
 @query(
@@ -336,10 +282,8 @@ def stream_sessionize_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flod_spark.streaming.sessionize import streaming_sessionize
 
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_cs_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    return _drain(streaming_sessionize(stream), spark, cleanup=(replay_dir,))
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        return drain(streaming_sessionize(sp.stream), spark)
 
 
 @query(
@@ -369,7 +313,7 @@ def scan_pystream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("batch", 100)
         .load()
     )
-    return _drain(stream, spark)
+    return drain(stream, spark)
 
 
 @query(
@@ -397,16 +341,14 @@ def stream_agg_complete_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong one for unbounded keys; state shards by key hash across
     executors exactly like the append-mode aggregations."""
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_c_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=5, tiebreak=("event_id",))
-    agg = stream.groupBy("user_id", "event_type").agg(
-        F.count("*").alias("n_events"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-    )
-    return _drain(agg, spark, output_mode="complete", cleanup=(replay_dir,))
+    with spool(spark, ev, "ts", n_batches=5, tiebreak=("event_id",)) as sp:
+        agg = sp.stream.groupBy("user_id", "event_type").agg(
+            F.count("*").alias("n_events"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+        )
+        return drain(agg, spark, output_mode="complete")
 
 
 @query(
@@ -439,13 +381,12 @@ def stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flod_spark.streaming.windows import sliding_counts
 
     ev = load(spark, sf_dir, "events")
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_sl_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=5, tiebreak=("event_id",))
-    got = _drain(sliding_counts(stream, window="1 hour", slide="15 minutes",
-                                watermark=_WATERMARK), spark, cleanup=(replay_dir,))
-    horizon = F.lit(max_ts) - F.expr("INTERVAL 3 HOURS")
+    with spool(spark, ev, "ts", n_batches=5, tiebreak=("event_id",)) as sp:
+        got = drain(
+            sliding_counts(sp.stream, window="1 hour", slide="15 minutes", watermark=_WATERMARK),
+            spark,
+        )
+    horizon = F.lit(sp.max) - F.expr("INTERVAL 3 HOURS")
     return got.filter(F.col("win_start") <= horizon)
 
 
@@ -480,19 +421,17 @@ def stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flod_spark.streaming.dedup import drop_duplicates_unbounded
 
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_d_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    dd = drop_duplicates_unbounded(
-        stream.select("user_id", "event_type", "event_id", "ts"),
-        "user_id", "event_type",
-    )
-    return _drain(dd, spark, cleanup=(replay_dir,)).select(
-        "user_id",
-        "event_type",
-        F.col("event_id").alias("first_event_id"),
-        F.col("ts").alias("first_ts"),
-    )
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        dd = drop_duplicates_unbounded(
+            sp.stream.select("user_id", "event_type", "event_id", "ts"),
+            "user_id", "event_type",
+        )
+        return drain(dd, spark).select(
+            "user_id",
+            "event_type",
+            F.col("event_id").alias("first_event_id"),
+            F.col("ts").alias("first_ts"),
+        )
 
 
 @query(
@@ -521,9 +460,6 @@ def stream_foreach_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of stream length; each merge is one broadcast-or-shuffle
     join of batch-partials against the state table."""
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_fb_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=5, tiebreak=("event_id",))
     root = tempfile.mkdtemp(prefix="flod_fb_state_")
     state = {"path": None, "last_batch": -1}
 
@@ -566,25 +502,8 @@ def stream_foreach_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["path"] = nxt
         state["last_batch"] = batch_id
 
-    from flod_spark.io import pinned_stream_partitions
-
-    name = "fb_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix=f"flod_ckpt_{name}_")
-    try:
-        with pinned_stream_partitions(spark):  # _drain's rationale
-            q = (
-                stream.writeStream.foreachBatch(upsert)
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
+    with spool(spark, ev, "ts", n_batches=5, tiebreak=("event_id",)) as sp:
+        drain(sp.stream, spark, foreach_batch=upsert)
     # empty-first-run guard: a zero-batch stream (empty events input
     # writes no replay files, so foreachBatch never fires) leaves no
     # state version — the merged-schema empty aggregate IS the answer
@@ -651,14 +570,12 @@ def stream_prep_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_pp_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, docs, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id",))
-    kept = stream.filter(quality_keep_col()).select(
-        "doc_id", "lang", F.md5(_norm_col().cast("binary")).alias("fp")
-    )
-    deduped = drop_duplicates_unbounded(kept, "fp")
-    return _drain(deduped, spark, cleanup=(replay_dir,)).select("doc_id", "lang", "fp")
+    with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
+        kept = sp.stream.filter(quality_keep_col()).select(
+            "doc_id", "lang", F.md5(_norm_col().cast("binary")).alias("fp")
+        )
+        deduped = drop_duplicates_unbounded(kept, "fp")
+        return drain(deduped, spark).select("doc_id", "lang", "fp")
 
 
 def _dedup_substring_live_oracle() -> str:
@@ -715,11 +632,9 @@ def stream_dedup_substring_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_ss_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, docs, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id",))
-    survivors = drop_duplicates_unbounded(winnow_anchor_rows(stream), "h")
-    kept = _drain(survivors, spark, cleanup=(replay_dir,)).select("doc_id", "p")
+    with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
+        survivors = drop_duplicates_unbounded(winnow_anchor_rows(sp.stream), "h")
+        kept = drain(survivors, spark).select("doc_id", "p")
     # batch-side recount: the kernel is deterministic, so recomputing
     # anchors over the same table reproduces the stream's rows exactly
     anchors = winnow_anchor_rows(load(spark, sf_dir, "documents"))
@@ -820,13 +735,9 @@ def stream_dedup_minhash_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = sigs.withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_mh_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, feed, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id", "band")
-    )
-    claimed = drop_duplicates_unbounded(stream, "band", "bs")
-    kept = _drain(claimed, spark, cleanup=(replay_dir,)).select("doc_id", "band")
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "band")) as sp:
+        claimed = drop_duplicates_unbounded(sp.stream, "band", "bs")
+        kept = drain(claimed, spark).select("doc_id", "band")
     dup = (
         sigs.select("doc_id", "band")
         .join(kept, ["doc_id", "band"], "left_anti")
@@ -889,49 +800,46 @@ def _sentinel_click_join(spark: SparkSession, sf_dir: str, how: str) -> DataFram
     from flod_spark.streaming.replay import append_sentinel_batches
 
     ev = load(spark, sf_dir, "events")
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_oj_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    if max_ts is not None:
-        append_sentinel_batches(
-            spark,
-            replay_dir,
-            [
-                (-1, max_ts + _dt.timedelta(days=10), -1, "signup", 0.0, "{}"),
-                (-2, max_ts + _dt.timedelta(days=11), -2, "click", 0.0, "{}"),
-                (-3, max_ts + _dt.timedelta(days=12), -3, "signup", 0.0, "{}"),
-            ],
-            ev.schema,
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        if sp.max is not None:
+            append_sentinel_batches(
+                spark,
+                sp.dir,
+                [
+                    (-1, sp.max + _dt.timedelta(days=10), -1, "signup", 0.0, "{}"),
+                    (-2, sp.max + _dt.timedelta(days=11), -2, "click", 0.0, "{}"),
+                    (-3, sp.max + _dt.timedelta(days=12), -3, "signup", 0.0, "{}"),
+                ],
+                ev.schema,
+            )
+        stream = with_event_time(sp.stream)
+        signups = (
+            stream.filter(F.col("event_type") == "signup")
+            .select(
+                F.col("event_id").alias("signup_id"),
+                F.col("user_id").alias("u"),
+                F.col("ts").alias("ts_s"),
+            )
+            .withWatermark("ts_s", "2 hours")
         )
-    stream = with_event_time(stream)
-    signups = (
-        stream.filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            F.col("user_id").alias("u"),
-            F.col("ts").alias("ts_s"),
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id").alias("u2"),
+                F.col("ts").alias("ts_c"),
+            )
+            .withWatermark("ts_c", "2 hours")
         )
-        .withWatermark("ts_s", "2 hours")
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("u2"),
-            F.col("ts").alias("ts_c"),
-        )
-        .withWatermark("ts_c", "2 hours")
-    )
-    joined = signups.join(
-        clicks,
-        (F.col("u") == F.col("u2"))
-        & (F.col("click_id") != F.col("signup_id"))
-        & (F.col("ts_c") >= F.col("ts_s"))
-        & (F.col("ts_c") <= F.col("ts_s") + F.expr("INTERVAL 30 MINUTES")),
-        how,
-    ).select("signup_id", "click_id")
-    return _drain(joined, spark, cleanup=(replay_dir,))
+        joined = signups.join(
+            clicks,
+            (F.col("u") == F.col("u2"))
+            & (F.col("click_id") != F.col("signup_id"))
+            & (F.col("ts_c") >= F.col("ts_s"))
+            & (F.col("ts_c") <= F.col("ts_s") + F.expr("INTERVAL 30 MINUTES")),
+            how,
+        ).select("signup_id", "click_id")
+        return drain(joined, spark)
 
 
 @query(
@@ -967,36 +875,32 @@ def stream_sliding_distinct_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flod_spark.streaming.replay import append_sentinel_batches
 
     ev = load(spark, sf_dir, "events")
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    if max_ts is None:
-        # explicit empty-input branch (the sentinel append above already
-        # needs max_ts): no events -> no windows; don't rely on the final
-        # `win_start <= NULL` filter evaluating to NULL row-by-row
-        return spark.createDataFrame([], "win_start timestamp_ntz, n_users bigint")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_sd_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    if max_ts is not None:
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        if sp.max is None:
+            # explicit empty-input branch (the sentinels below need a
+            # max): no events -> no windows; don't rely on the final
+            # `win_start <= NULL` filter evaluating to NULL row-by-row
+            return spark.createDataFrame([], "win_start timestamp_ntz, n_users bigint")
         append_sentinel_batches(
             spark,
-            replay_dir,
+            sp.dir,
             [
-                (-1, max_ts + _dt.timedelta(days=10), -1, "view", 0.0, "{}"),
-                (-2, max_ts + _dt.timedelta(days=11), -2, "view", 0.0, "{}"),
+                (-1, sp.max + _dt.timedelta(days=10), -1, "view", 0.0, "{}"),
+                (-2, sp.max + _dt.timedelta(days=11), -2, "view", 0.0, "{}"),
             ],
             ev.schema,
         )
-    s = with_event_time(stream).filter(F.col("user_id").isNotNull())
-    pairs = (
-        s.withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("_n"))
-    )
-    counts = pairs.groupBy("w").agg(F.count("*").alias("n_users"))
-    got = _drain(counts, spark, cleanup=(replay_dir,))
+        s = with_event_time(sp.stream).filter(F.col("user_id").isNotNull())
+        pairs = (
+            s.withWatermark("ts", _WATERMARK)
+            .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "user_id")
+            .agg(F.count("*").alias("_n"))
+        )
+        counts = pairs.groupBy("w").agg(F.count("*").alias("n_users"))
+        got = drain(counts, spark)
     return got.select(
         as_naive(F.col("w.start")).alias("win_start"), "n_users"
-    ).filter(F.col("win_start") <= F.lit(max_ts))
+    ).filter(F.col("win_start") <= F.lit(sp.max))
 
 
 @query(
@@ -1059,25 +963,23 @@ def stream_agg_update_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of per closure — the downstream upsert sink
     (stream_foreach_upsert_live) is its natural pair."""
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_u_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=5, tiebreak=("event_id",))
-    agg = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", _WINDOW).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+    with spool(spark, ev, "ts", n_batches=5, tiebreak=("event_id",)) as sp:
+        agg = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .groupBy(F.window("ts", _WINDOW).alias("w"), "event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+            )
+            .select(
+                as_naive(F.col("w.start")).alias("win_start"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
         )
-        .select(
-            as_naive(F.col("w.start")).alias("win_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    got = _drain(agg, spark, output_mode="update", cleanup=(replay_dir,))
+        got = drain(agg, spark, output_mode="update")
     final = got.groupBy("win_start", "event_type").agg(
         F.max(F.struct("n_events", "sum_value")).alias("s")
     )
@@ -1125,9 +1027,6 @@ def stream_split_router_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_rt_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, docs, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id",))
     root = tempfile.mkdtemp(prefix="flod_router_")
     hp = _hash_prefix("p|", F.col("doc_id"))
     split = (
@@ -1144,25 +1043,8 @@ def stream_split_router_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             # double-append; empty parts still write a dir (harmless)
             part.write.mode("overwrite").parquet(f"{root}/{s}/b{batch_id}")
 
-    from flod_spark.io import pinned_stream_partitions
-
-    name = "rt_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix=f"flod_ckpt_{name}_")
-    try:
-        with pinned_stream_partitions(spark):  # _drain's rationale
-            q = (
-                stream.writeStream.foreachBatch(route)
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
+    with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
+        drain(sp.stream, spark, foreach_batch=route)
     outs = []
     for s in ("train", "val", "test"):
         if glob.glob(f"{root}/{s}/b*/part-*"):
@@ -1216,22 +1098,20 @@ def stream_sketch_countmin_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("user_id", "ts").filter(
         F.col("user_id").isNotNull()
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_cms_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("user_id",))
-    pos_arr = F.array(
-        *[
-            F.struct(F.lit(i).alias("i"), _cm_pos(F.col("user_id"), i).alias("p"))
-            for i in range(_CM_D)
-        ]
-    )
-    cells = (
-        with_event_time(stream)
-        .select(F.explode(pos_arr).alias("ip"))
-        .groupBy(F.col("ip.i").alias("i"), F.col("ip.p").alias("p"))
-        .agg(F.count("*").alias("c"))
-    )
-    got = _drain(cells, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("user_id",)) as sp:
+        pos_arr = F.array(
+            *[
+                F.struct(F.lit(i).alias("i"), _cm_pos(F.col("user_id"), i).alias("p"))
+                for i in range(_CM_D)
+            ]
+        )
+        cells = (
+            with_event_time(sp.stream)
+            .select(F.explode(pos_arr).alias("ip"))
+            .groupBy(F.col("ip.i").alias("i"), F.col("ip.p").alias("p"))
+            .agg(F.count("*").alias("c"))
+        )
+        got = drain(cells, spark, output_mode="update")
     sketch = got.groupBy("i", "p").agg(F.max("c").alias("c"))
     # batch-side estimate phase: identical to sketch_countmin's tail
     ev_b = load(spark, sf_dir, "events").select("user_id").filter(
@@ -1282,17 +1162,13 @@ def stream_hll_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_type", "user_id", "ts", "event_id"
     ).filter(F.col("user_id").isNotNull())
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_hll_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",)
-    )
-    cells = (
-        _hll_register_rows(with_event_time(stream))
-        .groupBy("event_type", "j")
-        .agg(F.max("rk").alias("rk"))
-    )
-    got = _drain(cells, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        cells = (
+            _hll_register_rows(with_event_time(sp.stream))
+            .groupBy("event_type", "j")
+            .agg(F.max("rk").alias("rk"))
+        )
+        got = drain(cells, spark, output_mode="update")
     regs = got.groupBy("event_type", "j").agg(F.max("rk").alias("mj"))
     ev_b = (
         load(spark, sf_dir, "events")
@@ -1338,11 +1214,9 @@ def stream_cdc_apply_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _cdc_log(spark, sf_dir).withColumn(
         "ingest_ts", F.timestamp_micros(F.col("seq") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_cdc_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, log, "ingest_ts", replay_dir, n_batches=4, tiebreak=("seq",))
-    agg = stream.groupBy("k").agg(F.max(F.struct("seq", "op", "val")).alias("s"))
-    got = _drain(agg, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, log, "ingest_ts", n_batches=4, tiebreak=("seq",)) as sp:
+        agg = sp.stream.groupBy("k").agg(F.max(F.struct("seq", "op", "val")).alias("s"))
+        got = drain(agg, spark, output_mode="update")
     final = got.groupBy("k").agg(F.max("s").alias("s"))
     return final.filter(F.col("s.op") != "D").select(
         "k", F.col("s.seq").alias("last_seq"), F.col("s.val").alias("val")
@@ -1429,29 +1303,25 @@ def stream_asof_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream interval join cannot express without buffering both
     sides). In production the same operator reads its initial state
     from a snapshot and the stream from the CDC tail."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.io import ts_micros
 
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("signup", "click")
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_ae_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    src = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .select("user_id", "event_type", "event_id", ts_micros("ts").alias("_us"))
-    )
-    out = src.groupBy("user_id").applyInPandasWithState(
-        _asof_enrich_fn,
-        outputStructType="click_id long, signup_id long",
-        stateStructType="sid long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(out, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .select("user_id", "event_type", "event_id", ts_micros("ts").alias("_us"))
+        )
+        out = src.groupBy("user_id").applyInPandasWithState(
+            _asof_enrich_fn,
+            outputStructType="click_id long, signup_id long",
+            stateStructType="sid long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(out, spark, output_mode="update")
     return got.select(
         "click_id", F.nullif("signup_id", F.lit(-1)).alias("signup_id")
     )
@@ -1481,36 +1351,33 @@ def stream_bars_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, not the stream); min_by/max_by merge, so partial aggregation
     collapses each micro-batch map-side before the state store — the
     same one-exchange shape as the batch bars."""
-    ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_oh_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
+    from flod_spark.catalog.streaming_batch import _ORDER_KEY_MULT
     from flod_spark.io import ts_micros
 
-    from flod_spark.catalog.streaming_batch import _ORDER_KEY_MULT
-
-    s = with_event_time(stream)
-    # 2^63 multiplier dominates any BIGINT event_id (ADVICE r6); the
-    # literal exceeds LongType, so route it through a string cast
-    key = ts_micros("ts").cast("decimal(38,0)") * F.lit(str(_ORDER_KEY_MULT)).cast(
-        "decimal(19,0)"
-    ) + F.col("event_id")
-    agg = (
-        s.groupBy(F.date_trunc("hour", F.col("ts")).alias("bar_start"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min_by("value", key).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", key).alias("close"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("volume"),
+    ev = load(spark, sf_dir, "events")
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        s = with_event_time(sp.stream)
+        # 2^63 multiplier dominates any BIGINT event_id (ADVICE r6); the
+        # literal exceeds LongType, so route it through a string cast
+        key = ts_micros("ts").cast("decimal(38,0)") * F.lit(str(_ORDER_KEY_MULT)).cast(
+            "decimal(19,0)"
+        ) + F.col("event_id")
+        agg = (
+            s.groupBy(F.date_trunc("hour", F.col("ts")).alias("bar_start"))
+            .agg(
+                F.count("*").alias("n_events"),
+                F.min_by("value", key).alias("open"),
+                F.max("value").alias("high"),
+                F.min("value").alias("low"),
+                F.max_by("value", key).alias("close"),
+                F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("volume"),
+            )
+            .select(
+                as_naive(F.col("bar_start")).alias("bar_start"),
+                "n_events", "open", "high", "low", "close", "volume",
+            )
         )
-        .select(
-            as_naive(F.col("bar_start")).alias("bar_start"),
-            "n_events", "open", "high", "low", "close", "volume",
-        )
-    )
-    got = _drain(agg, spark, output_mode="update", cleanup=(replay_dir,))
+        got = drain(agg, spark, output_mode="update")
     final = got.groupBy("bar_start").agg(
         F.max(F.struct("n_events", "open", "high", "low", "close", "volume")).alias("s")
     )
@@ -1585,25 +1452,21 @@ def stream_heavy_hitters_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger; the recount is heavy_hitters' semi-join pass. Shard count
     tracks executor count in production — more shards, same lemma."""
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_hh_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    src = (
-        with_event_time(stream)
-        .filter(F.col("user_id").isNotNull())
-        .withWatermark("ts", _WATERMARK)
-        .select(F.pmod(F.xxhash64("user_id"), F.lit(8)).alias("shard"), "user_id")
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    snapshots = src.groupBy("shard").applyInPandasWithState(
-        _mg_shard_fn,
-        outputStructType="shard long, user_id long",
-        stateStructType="ks array<long>, vs array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(snapshots, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = (
+            with_event_time(sp.stream)
+            .filter(F.col("user_id").isNotNull())
+            .withWatermark("ts", _WATERMARK)
+            .select(F.pmod(F.xxhash64("user_id"), F.lit(8)).alias("shard"), "user_id")
+        )
+        snapshots = src.groupBy("shard").applyInPandasWithState(
+            _mg_shard_fn,
+            outputStructType="shard long, user_id long",
+            stateStructType="ks array<long>, vs array<long>",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(snapshots, spark, output_mode="update")
     cand = got.select("user_id").distinct()
     from flod_spark.catalog.analytics import _HH_C, basket_pair_structs
 
@@ -1650,22 +1513,18 @@ def stream_bitmap_distinct_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_type", "user_id", "ts", "event_id"
     ).filter(F.col("user_id").isNotNull())
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_bm_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",)
-    )
-    words = (
-        with_event_time(stream)
-        .select(
-            "event_type",
-            F.expr("user_id div 32").alias("word"),
-            F.expr("shiftleft(cast(1 as bigint), cast(user_id % 32 as int))").alias("mask"),
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        words = (
+            with_event_time(sp.stream)
+            .select(
+                "event_type",
+                F.expr("user_id div 32").alias("word"),
+                F.expr("shiftleft(cast(1 as bigint), cast(user_id % 32 as int))").alias("mask"),
+            )
+            .groupBy("event_type", "word")
+            .agg(F.bit_or("mask").alias("bm"))
         )
-        .groupBy("event_type", "word")
-        .agg(F.bit_or("mask").alias("bm"))
-    )
-    got = _drain(words, spark, output_mode="update", cleanup=(replay_dir,))
+        got = drain(words, spark, output_mode="update")
     final = got.groupBy("event_type", "word").agg(F.max("bm").alias("bm"))
     return final.groupBy("event_type").agg(
         F.sum(F.bit_count("bm")).cast("long").alias("n_distinct"),
@@ -1758,27 +1617,21 @@ def stream_market_basket_bounded(
     ``emissions=True`` returns the raw drained emission stream
     (shard, k, c, d, bucket) for state-size audits."""
     from flod_spark.streaming.lossy import lossy_count
-    from flod_spark.streaming.replay import replay_buckets
 
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
     baskets = li.groupBy("o").agg(F.array_sort(F.collect_set("p")).alias("ps"))
     feed = baskets.withColumn("bkt", (F.col("o") % _MBB_BATCHES).cast("int"))
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_mbb_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_buckets(spark, feed.select("ps", "bkt"), "bkt", replay_dir)
-    pair_arr = basket_pair_structs(F.col("ps"))
-    pairs = stream.select(F.explode(pair_arr).alias("pr")).select(
-        F.concat_ws("|", "pr.p1", "pr.p2").alias("k")
-    )
-    # md5-derived shard: the oracle's exact expression (sharding lemma
-    # holds for any key-deterministic function; production uses xxhash64)
-    shard = salted_mod(F.col("k"), "", 8)
-    got = _drain(
-        lossy_count(pairs, shard=shard), spark, output_mode="update",
-        cleanup=(replay_dir,), wide_state=True,
-    )
+    with spool(spark, feed.select("ps", "bkt"), "bkt", buckets=True) as sp:
+        pair_arr = basket_pair_structs(F.col("ps"))
+        pairs = sp.stream.select(F.explode(pair_arr).alias("pr")).select(
+            F.concat_ws("|", "pr.p1", "pr.p2").alias("k")
+        )
+        # md5-derived shard: the oracle's exact expression (sharding lemma
+        # holds for any key-deterministic function; production uses xxhash64)
+        shard = salted_mod(F.col("k"), "", 8)
+        got = drain(lossy_count(pairs, shard=shard), spark, output_mode="update", wide_state=True)
     if emissions:
         return got
     # survivors = each shard's FINAL-bucket emission (an entry evicted in
@@ -1838,19 +1691,15 @@ def stream_market_basket_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = baskets.withColumn(
         "ingest_ts", F.timestamp_micros(F.col("o") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_mbl_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, feed, "ingest_ts", replay_dir, n_batches=4, tiebreak=("o",))
-    pair_arr = basket_pair_structs(F.col("ps"))
-    sup = (
-        with_event_time(stream, "ingest_ts")
-        .select(F.explode(pair_arr).alias("pr"))
-        .groupBy(F.col("pr.p1").alias("p1"), F.col("pr.p2").alias("p2"))
-        .agg(F.count("*").alias("support"))
-    )
-    got = _drain(
-        sup, spark, output_mode="update", cleanup=(replay_dir,), wide_state=True
-    )
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("o",)) as sp:
+        pair_arr = basket_pair_structs(F.col("ps"))
+        sup = (
+            with_event_time(sp.stream, "ingest_ts")
+            .select(F.explode(pair_arr).alias("pr"))
+            .groupBy(F.col("pr.p1").alias("p1"), F.col("pr.p2").alias("p2"))
+            .agg(F.count("*").alias("support"))
+        )
+        got = drain(sup, spark, output_mode="update", wide_state=True)
     pairs = (
         got.groupBy("p1", "p2")
         .agg(F.max("support").alias("support"))
@@ -1878,33 +1727,6 @@ def stream_market_basket_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _drain_sorted(pdfs, cols, keys=("us", "event_id")):
-    """Drain one key's Arrow chunks into numpy arrays sorted by
-    ``keys`` — the cheap path around pandas concat + sort_values.
-    Measured at 17-row batches (sf0.1's per-key-per-trigger size):
-    sort_values alone is ~315us and a Series-based output frame ~240us
-    per call, ~0.6 ms of pure machinery x |keys| x |triggers| — this
-    helper (single-chunk fast path, lexsort, take-only-when-unsorted)
-    cuts it to ~30us. Order semantics identical: lexsort's last key is
-    primary, and the take is skipped only when already totally sorted."""
-    import numpy as np
-    import pandas as pd
-
-    chunks = list(pdfs)
-    if not chunks:
-        # Timeout-only invocation (EventTimeTimeout callers get zero
-        # chunks): empty arrays, not pd.concat([]) which raises — the
-        # _fold_sessions pattern. Current callers are all NoTimeout,
-        # but any future timeout-driven caller hits this path.
-        return {c: np.empty(0, dtype=object) for c in cols}
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    arrs = {c: pdf[c].to_numpy() for c in cols}
-    order = np.lexsort(tuple(arrs[k] for k in reversed(keys)))
-    if not np.array_equal(order, np.arange(len(order))):
-        arrs = {c: a.take(order) for c, a in arrs.items()}
-    return arrs
-
-
 # --- sharded per-user detector folds (r17, guide §4) -----------------
 #
 # The five per-user detector gates (ewma / cusum / drawdown / rsi /
@@ -1922,7 +1744,7 @@ def _drain_sorted(pdfs, cols, keys=("us", "event_id")):
 # seeded with the same carried values — so every emitted row is
 # bit-identical and the gates keep their batch-window oracles VERBATIM.
 # Results are _DET_SHARDS-independent (each user's fold never crosses
-# shards); 8 matches the novelty gates and the _drain partition pin.
+# shards); 8 matches the novelty gates and the drain partition pin.
 
 _DET_SHARDS = 8
 
@@ -2032,35 +1854,31 @@ def stream_ewma_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     against local state, no join, no window, no shuffle beyond the
     key partitioning every stateful operator pays. The same operator
     seeded from a snapshot is the production warm-start."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.io import ts_micros
 
     ev = load(spark, sf_dir, "events")
     xq = (F.col("value").cast("decimal(18,6)") * F.lit(1000000)).cast("long")
     feed = ev.select("event_id", "user_id", "ts", xq.alias("xq"))
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_ew_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, feed, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    src = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            _det_shard("user_id"),
-            "user_id",
-            "event_id",
-            ts_micros("ts").alias("us"),
-            "xq",
+    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .select(
+                _det_shard("user_id"),
+                "user_id",
+                "event_id",
+                ts_micros("ts").alias("us"),
+                "xq",
+            )
         )
-    )
-    out = src.groupBy("shard").applyInPandasWithState(
-        _ewma_shard_fn,
-        outputStructType="user_id long, event_id long, us long, num long, den long",
-        stateStructType="users binary, hcnt binary, h binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(out, spark, output_mode="update", cleanup=(replay_dir,))
+        out = src.groupBy("shard").applyInPandasWithState(
+            _ewma_shard_fn,
+            outputStructType="user_id long, event_id long, us long, num long, den long",
+            stateStructType="users binary, hcnt binary, h binary",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(out, spark, output_mode="update")
     return got.select(
         "event_id",
         "user_id",
@@ -2134,8 +1952,6 @@ def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector there is; no join, no window, no shuffle beyond the key
     partitioning. The production alarm (S > h) is a map on the
     emission stream."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.catalog.relational import _CUSUM_K
     from flod_spark.io import ts_micros
 
@@ -2145,28 +1961,26 @@ def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.lit(1000000)
     ).cast("long")
     feed = ev.select("event_id", "user_id", "ts", dq.alias("dq"))
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_cu_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, feed, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    src = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            _det_shard("user_id"),
-            "user_id",
-            "event_id",
-            ts_micros("ts").alias("us"),
-            "dq",
+    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .select(
+                _det_shard("user_id"),
+                "user_id",
+                "event_id",
+                ts_micros("ts").alias("us"),
+                "dq",
+            )
         )
-    )
-    out = src.groupBy("shard").applyInPandasWithState(
-        _cusum_shard_fn,
-        outputStructType="user_id long, event_id long, us long, cusum_us long",
-        stateStructType="users binary, pf binary, mn binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(out, spark, output_mode="update", cleanup=(replay_dir,))
+        out = src.groupBy("shard").applyInPandasWithState(
+            _cusum_shard_fn,
+            outputStructType="user_id long, event_id long, us long, cusum_us long",
+            stateStructType="users binary, pf binary, mn binary",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(out, spark, output_mode="update")
     return got.select(
         "event_id",
         "user_id",
@@ -2237,35 +2051,31 @@ def stream_drawdown_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: O(1) state per user, no join, no window — the live risk
     ticker next to stream_cusum_live's drift alarm."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.io import ts_micros
 
     ev = load(spark, sf_dir, "events")
     xq = (F.col("value").cast("decimal(18,6)") * F.lit(1000000)).cast("long")
     feed = ev.select("event_id", "user_id", "ts", xq.alias("xq"))
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_dd_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, feed, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    src = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            _det_shard("user_id"),
-            "user_id",
-            "event_id",
-            ts_micros("ts").alias("us"),
-            "xq",
+    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .select(
+                _det_shard("user_id"),
+                "user_id",
+                "event_id",
+                ts_micros("ts").alias("us"),
+                "xq",
+            )
         )
-    )
-    out = src.groupBy("shard").applyInPandasWithState(
-        _drawdown_shard_fn,
-        outputStructType="user_id long, event_id long, us long, dd_us long, mdd_us long",
-        stateStructType="users binary, peak binary, mdd binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(out, spark, output_mode="update", cleanup=(replay_dir,))
+        out = src.groupBy("shard").applyInPandasWithState(
+            _drawdown_shard_fn,
+            outputStructType="user_id long, event_id long, us long, dd_us long, mdd_us long",
+            stateStructType="users binary, peak binary, mdd binary",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(out, spark, output_mode="update")
     return got.select(
         "event_id",
         "user_id",
@@ -2350,8 +2160,6 @@ def stream_weighted_sample_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     count); emissions are |shards| x k rows per trigger; the merge is
     a k x |shards|-row sort. The always-fresh 'weighted sample of
     everything seen so far' a labeling pipeline polls."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.catalog.sampling import _PRI_K
 
     docs = load(spark, sf_dir, "documents")
@@ -2371,25 +2179,21 @@ def stream_weighted_sample_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("priority"),
         F.timestamp_micros(F.col("doc_id") * 1_000_000).alias("ingest_ts"),
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_ws_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, feed, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id",)
-    )
-    src = with_event_time(stream, "ingest_ts").select(
-        F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("shard"),
-        "doc_id",
-        "n_chars",
-        "priority",
-    )
-    snaps = src.groupBy("shard").applyInPandasWithState(
-        _wsample_shard_fn,
-        outputStructType="shard long, doc_id long, n_chars long, priority double",
-        stateStructType="ids array<long>, ws array<long>, ps array<double>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(snaps, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
+        src = with_event_time(sp.stream, "ingest_ts").select(
+            F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("shard"),
+            "doc_id",
+            "n_chars",
+            "priority",
+        )
+        snaps = src.groupBy("shard").applyInPandasWithState(
+            _wsample_shard_fn,
+            outputStructType="shard long, doc_id long, n_chars long, priority double",
+            stateStructType="ids array<long>, ws array<long>, ps array<double>",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(snaps, spark, output_mode="update")
     # the FINAL top-k per doc survives every later snapshot of its
     # shard, so the max-priority row per doc over all emissions equals
     # its final-snapshot row; global top-k merges the dedup'd union
@@ -2521,35 +2325,31 @@ def stream_rsi_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: O(_RSI_N) longs of state per user; no join, no window, no
     shuffle beyond the key partitioning — the alert path a trading /
     SLO dashboard actually serves."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.io import ts_micros
 
     ev = load(spark, sf_dir, "events")
     xq = (F.col("value").cast("decimal(18,6)") * F.lit(1000000)).cast("long")
     feed = ev.select("event_id", "user_id", "ts", xq.alias("xq"))
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_rsi_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, feed, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    src = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            _det_shard("user_id"),
-            "user_id",
-            "event_id",
-            ts_micros("ts").alias("us"),
-            "xq",
+    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .select(
+                _det_shard("user_id"),
+                "user_id",
+                "event_id",
+                ts_micros("ts").alias("us"),
+                "xq",
+            )
         )
-    )
-    out = src.groupBy("shard").applyInPandasWithState(
-        _rsi_shard_fn,
-        outputStructType="user_id long, event_id long, us long, gain long, loss long, nd long",
-        stateStructType="users binary, prev binary, dcnt binary, dh binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(out, spark, output_mode="update", cleanup=(replay_dir,))
+        out = src.groupBy("shard").applyInPandasWithState(
+            _rsi_shard_fn,
+            outputStructType="user_id long, event_id long, us long, gain long, loss long, nd long",
+            stateStructType="users binary, prev binary, dcnt binary, dh binary",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(out, spark, output_mode="update")
     rsi = (
         (F.lit(100) * F.col("gain")).cast("double")
         / F.lit(1000000.0)
@@ -2654,35 +2454,31 @@ def stream_bollinger_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle beyond the key partitioning; the per-batch work is two
     sliding-window row-sums (numpy, zero Python loops). The live
     'price outside the band' alert is a map on the emission stream."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.io import ts_micros
 
     ev = load(spark, sf_dir, "events")
     xq = (F.col("value").cast("decimal(18,6)") * F.lit(1000000)).cast("long")
     feed = ev.select("event_id", "user_id", "ts", xq.alias("xq"))
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_bo_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, feed, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    src = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            _det_shard("user_id"),
-            "user_id",
-            "event_id",
-            ts_micros("ts").alias("us"),
-            "xq",
+    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .select(
+                _det_shard("user_id"),
+                "user_id",
+                "event_id",
+                ts_micros("ts").alias("us"),
+                "xq",
+            )
         )
-    )
-    out = src.groupBy("shard").applyInPandasWithState(
-        _boll_shard_fn,
-        outputStructType="user_id long, event_id long, us long, n long, sx long, ssq long",
-        stateStructType="users binary, seen binary, hcnt binary, h binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(out, spark, output_mode="update", cleanup=(replay_dir,))
+        out = src.groupBy("shard").applyInPandasWithState(
+            _boll_shard_fn,
+            outputStructType="user_id long, event_id long, us long, n long, sx long, ssq long",
+            stateStructType="users binary, seen binary, hcnt binary, h binary",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(out, spark, output_mode="update")
     var_num = (
         F.col("n").cast("decimal(3,0)") * F.col("ssq").cast("decimal(30,0)")
         - F.col("sx").cast("decimal(19,0)") * F.col("sx").cast("decimal(19,0)")
@@ -2766,8 +2562,6 @@ def stream_token_budget_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     at all. Orderly arrival is the contract the batch carve's
     determinism already requires — out-of-order ingestion composes by
     buffering on the same (rk, doc_id) key upstream."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.catalog.sampling import _TOK_SHARDS, _hash_prefix
 
     docs = load(spark, sf_dir, "documents")
@@ -2786,26 +2580,22 @@ def stream_token_budget_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             rk_int * F.lit(1_000_000) + F.pmod(F.col("doc_id"), F.lit(1_000_000))
         ).alias("ingest_ts"),
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_tb_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, feed, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id",)
-    )
-    src = with_event_time(stream, "ingest_ts").select(
-        "lang",
-        "shard",
-        "doc_id",
-        "n_tok",
-        F.unix_micros(F.col("ingest_ts")).alias("us"),
-    )
-    out = src.groupBy("lang", "shard").applyInPandasWithState(
-        _tok_budget_live_fn,
-        outputStructType="doc_id long, lang string, shard long, n_tok long, cum_tokens long",
-        stateStructType="cum long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(out, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
+        src = with_event_time(sp.stream, "ingest_ts").select(
+            "lang",
+            "shard",
+            "doc_id",
+            "n_tok",
+            F.unix_micros(F.col("ingest_ts")).alias("us"),
+        )
+        out = src.groupBy("lang", "shard").applyInPandasWithState(
+            _tok_budget_live_fn,
+            outputStructType="doc_id long, lang string, shard long, n_tok long, cum_tokens long",
+            stateStructType="cum long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(out, spark, output_mode="update")
     return got.select("doc_id", "lang", "shard", "n_tok", "cum_tokens")
 
 
@@ -2952,30 +2742,24 @@ def stream_ngram_novelty_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = g.withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_nn_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, feed, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id", "h")
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    # the 16-byte binary form of the gram hash crosses the exchange and
-    # lives in state; the hex form never leaves the batch side (shard
-    # assignment hashes the SAME hex string as before, so shard
-    # membership — and therefore every claim — is unchanged)
-    src = with_event_time(stream, "ingest_ts").select(
-        F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"),
-        "doc_id",
-        F.unhex("h").alias("hb"),
-    )
-    claims = src.groupBy("shard").applyInPandasWithState(
-        _novelty_claim_fn,
-        outputStructType="doc_id long, n long",
-        stateStructType="seen binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(claims, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "h")) as sp:
+        # the 16-byte binary form of the gram hash crosses the exchange and
+        # lives in state; the hex form never leaves the batch side (shard
+        # assignment hashes the SAME hex string as before, so shard
+        # membership — and therefore every claim — is unchanged)
+        src = with_event_time(sp.stream, "ingest_ts").select(
+            F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"),
+            "doc_id",
+            F.unhex("h").alias("hb"),
+        )
+        claims = src.groupBy("shard").applyInPandasWithState(
+            _novelty_claim_fn,
+            outputStructType="doc_id long, n long",
+            stateStructType="seen binary",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(claims, spark, output_mode="update")
     nv = got.groupBy("doc_id").agg(F.sum("n").alias("n_novel"))
     ng = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     base = docs.select("doc_id")
@@ -3086,24 +2870,18 @@ def stream_ngram_novelty_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = g.withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_nb_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, feed, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id", "h")
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    src = with_event_time(stream, "ingest_ts").select(
-        F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"), "doc_id", "h"
-    )
-    claims = src.groupBy("shard").applyInPandasWithState(
-        _novelty_ttl_fn,
-        outputStructType="doc_id long, n long",
-        stateStructType="hs array<string>, lasts array<long>, mx long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(claims, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "h")) as sp:
+        src = with_event_time(sp.stream, "ingest_ts").select(
+            F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"), "doc_id", "h"
+        )
+        claims = src.groupBy("shard").applyInPandasWithState(
+            _novelty_ttl_fn,
+            outputStructType="doc_id long, n long",
+            stateStructType="hs array<string>, lasts array<long>, mx long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(claims, spark, output_mode="update")
     nv = got.groupBy("doc_id").agg(F.sum("n").alias("n_novel"))
     ng = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     base = docs.select("doc_id")
@@ -3192,37 +2970,33 @@ def stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream length, the 100 TB regime where the unbounded form's state
     store becomes the bottleneck; per-batch work is one vectorized
     fold, no per-event Python."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.io import ts_micros
 
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_db_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    k = F.concat_ws("|", F.col("user_id").cast("string"), F.col("event_type"))
-    src = (
-        with_event_time(stream)
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.pmod(F.xxhash64(k), F.lit(8)).alias("shard"),
-            k.alias("k"),
-            "user_id",
-            "event_type",
-            "event_id",
-            ts_micros("ts").alias("us"),
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        k = F.concat_ws("|", F.col("user_id").cast("string"), F.col("event_type"))
+        src = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .select(
+                F.pmod(F.xxhash64(k), F.lit(8)).alias("shard"),
+                k.alias("k"),
+                "user_id",
+                "event_type",
+                "event_id",
+                ts_micros("ts").alias("us"),
+            )
         )
-    )
-    out = src.groupBy("shard").applyInPandasWithState(
-        _dedup_ttl_fn,
-        outputStructType=(
-            "user_id long, event_type string, event_id long, us long"
-        ),
-        stateStructType="ks array<string>, lasts array<long>, mx long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    got = _drain(out, spark, output_mode="update", cleanup=(replay_dir,))
+        out = src.groupBy("shard").applyInPandasWithState(
+            _dedup_ttl_fn,
+            outputStructType=(
+                "user_id long, event_type string, event_id long, us long"
+            ),
+            stateStructType="ks array<string>, lasts array<long>, mx long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        got = drain(out, spark, output_mode="update")
     return got.select(
         "user_id",
         "event_type",
@@ -3313,8 +3087,6 @@ def stream_dedup_minhash_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     searchsorted merge, zero per-event Python). The feed is the
     codegen signature table (the live twin's precompute argument,
     unchanged)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.catalog.dedup import BANDS, SEEDS, SHINGLE
     from flod_spark.operators.minhash import minhash_signatures, shingles
 
@@ -3330,26 +3102,22 @@ def stream_dedup_minhash_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = sigs.withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_mb_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(
-        spark, feed, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id", "band")
-    )
-    k = F.concat_ws("|", F.col("band").cast("string"), F.col("bs"))
-    src = with_event_time(stream, "ingest_ts").select(
-        F.pmod(F.xxhash64(k), F.lit(8)).alias("shard"),
-        k.alias("k"),
-        "doc_id",
-        "band",
-    )
-    claims = src.groupBy("shard").applyInPandasWithState(
-        _mh_ttl_fn,
-        outputStructType="doc_id long, band int",
-        stateStructType="ks array<string>, lasts array<long>, mx long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    kept = _drain(claims, spark, output_mode="update", cleanup=(replay_dir,))
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "band")) as sp:
+        k = F.concat_ws("|", F.col("band").cast("string"), F.col("bs"))
+        src = with_event_time(sp.stream, "ingest_ts").select(
+            F.pmod(F.xxhash64(k), F.lit(8)).alias("shard"),
+            k.alias("k"),
+            "doc_id",
+            "band",
+        )
+        claims = src.groupBy("shard").applyInPandasWithState(
+            _mh_ttl_fn,
+            outputStructType="doc_id long, band int",
+            stateStructType="ks array<string>, lasts array<long>, mx long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        kept = drain(claims, spark, output_mode="update")
     dup = (
         sigs.select("doc_id", "band")
         .join(kept, ["doc_id", "band"], "left_anti")
@@ -3443,30 +3211,26 @@ def stream_dedup_substring_bounded(spark: SparkSession, sf_dir: str) -> DataFram
     where the unbounded form's ever-seen anchor store grows without
     bound; per-batch work is the vectorized int64 fold. The recount is
     the live twin's: one anti-join on (doc, p) + per-doc array math."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from flod_spark.catalog.text import anchor_coverage_chars, winnow_anchor_rows
 
     docs = load(spark, sf_dir, "documents").withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_sb_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, docs, "ingest_ts", replay_dir, n_batches=4, tiebreak=("doc_id",))
-    anchors_s = winnow_anchor_rows(with_event_time(stream, "ingest_ts"))
-    src = anchors_s.select(
-        F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"), "h", "doc_id", "p"
-    )
-    claims = src.groupBy("shard").applyInPandasWithState(
-        _ss_ttl_fn,
-        outputStructType="doc_id long, p long",
-        stateStructType="ks array<long>, lasts array<long>, mx long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    kept = _drain(claims, spark, output_mode="update", cleanup=(replay_dir,)).select(
-        "doc_id", "p"
-    )
+    with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
+        anchors_s = winnow_anchor_rows(with_event_time(sp.stream, "ingest_ts"))
+        src = anchors_s.select(
+            F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"), "h", "doc_id", "p"
+        )
+        claims = src.groupBy("shard").applyInPandasWithState(
+            _ss_ttl_fn,
+            outputStructType="doc_id long, p long",
+            stateStructType="ks array<long>, lasts array<long>, mx long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        kept = drain(claims, spark, output_mode="update").select(
+            "doc_id", "p"
+        )
     anchors = winnow_anchor_rows(load(spark, sf_dir, "documents"))
     base = anchors.groupBy("doc_id").agg(
         F.first("n_chars").alias("n_chars"), F.first("n_anchors").alias("n_anchors")
@@ -3537,35 +3301,31 @@ def stream_merge_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     a = ev.filter(F.col("event_id") % 2 == 0)
     b = ev.filter(F.col("event_id") % 2 == 1)
-    max_a = a.agg(F.max("ts")).collect()[0][0]
-    max_b = b.agg(F.max("ts")).collect()[0][0]
-    dir_a = tempfile.mkdtemp(prefix="flod_replay_ma_")
-    dir_b = tempfile.mkdtemp(prefix="flod_replay_mb2_")
-    shutil.rmtree(dir_a, ignore_errors=True)
-    shutil.rmtree(dir_b, ignore_errors=True)
-    sa = replay_stream(spark, a, "ts", dir_a, n_batches=4, tiebreak=("event_id",))
-    sb = replay_stream(spark, b, "ts", dir_b, n_batches=3, tiebreak=("event_id",))
-    merged = (
-        with_event_time(sa)
-        .withWatermark("ts", _WATERMARK)
-        .unionByName(with_event_time(sb).withWatermark("ts", _WATERMARK))
-    )
-    agg = (
-        merged.groupBy(F.window("ts", _WINDOW).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+    with (
+        spool(spark, a, "ts", n_batches=4, tiebreak=("event_id",)) as sa,
+        spool(spark, b, "ts", n_batches=3, tiebreak=("event_id",)) as sb,
+    ):
+        merged = (
+            with_event_time(sa.stream)
+            .withWatermark("ts", _WATERMARK)
+            .unionByName(with_event_time(sb.stream).withWatermark("ts", _WATERMARK))
         )
-        .select(
-            as_naive(F.col("w.start")).alias("win_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
+        agg = (
+            merged.groupBy(F.window("ts", _WINDOW).alias("w"), "event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+            )
+            .select(
+                as_naive(F.col("w.start")).alias("win_start"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
         )
-    )
-    got = _drain(agg, spark, cleanup=(dir_a, dir_b))
-    if max_a is None or max_b is None:
+        got = drain(agg, spark)
+    if sa.max is None or sb.max is None:
         # a side never produced events: no window provably closes
         return got.filter(F.lit(False))
-    horizon = F.lit(min(max_a, max_b)) - F.expr("INTERVAL 3 HOURS")
+    horizon = F.lit(min(sa.max, sb.max)) - F.expr("INTERVAL 3 HOURS")
     return got.filter(F.col("win_start") <= horizon)

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from flod_spark.io import load
 from flod_spark.registry import query
+from flod_spark.streaming.gate import drain, spool
 
 # --------------------------------------------------------------- sources
 
@@ -741,21 +742,20 @@ def _archive_oracle() -> str:
     )
 
 
-def _pack_archive_fixture(docs: DataFrame) -> str:
-    """Pack the documents table into a fresh temp directory of mixed
-    ZIP/USTAR archives (_ARCH_DOCS members each; even group index ->
-    stored ZIP with the fixed DOS epoch timestamp, odd -> tar with
-    zeroed mtime — byte-stable packs) and return the directory. This is
-    FIXTURE CONSTRUCTION (the container ships no archive files),
-    driver-side and bounded by the gate corpus; the scanned plan starts
-    at the binaryFile read. Shared by scan_archive and
-    stream_archive_live."""
+def _pack_archive_fixture(docs: DataFrame, adir: str) -> None:
+    """Pack the documents table into ``adir`` as mixed ZIP/USTAR
+    archives (_ARCH_DOCS members each; even group index -> stored ZIP
+    with the fixed DOS epoch timestamp, odd -> tar with zeroed mtime —
+    byte-stable packs). This is FIXTURE CONSTRUCTION (the container
+    ships no archive files), driver-side and bounded by the gate
+    corpus; the scanned plan starts at the binaryFile read. Shared by
+    scan_archive and stream_archive_live."""
     import io
     import os
     import tarfile
     import zipfile
 
-    adir = tempfile.mkdtemp(prefix="flod_arch_")
+    os.makedirs(adir, exist_ok=True)
     groups: dict[int, list] = {}
     for row in docs.toLocalIterator():
         groups.setdefault(row.doc_id // _ARCH_DOCS, []).append(
@@ -779,7 +779,6 @@ def _pack_archive_fixture(docs: DataFrame) -> str:
                     ti.size = len(b)
                     ti.mtime = 0
                     t.addfile(ti, io.BytesIO(b))
-    return adir
 
 
 @query("scan_archive", oracle=_archive_oracle())
@@ -814,7 +813,8 @@ def scan_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flod_spark.io import serve_and_cleanup
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    adir = _pack_archive_fixture(docs)
+    adir = tempfile.mkdtemp(prefix="flod_arch_")
+    _pack_archive_fixture(docs, adir)
     raw = spark.read.format("binaryFile").load(adir)
     return serve_and_cleanup(archive_member_rows(raw), adir)
 
@@ -885,15 +885,14 @@ def stream_archive_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes meet the pipeline."""
     import os
 
-    from flod_spark.catalog.streaming_live import _drain
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    adir = _pack_archive_fixture(docs)
-    n_archives = len(os.listdir(adir))
-    members = stream_archive_members(
-        spark, adir, max_files_per_trigger=max(1, -(-n_archives // 4))
-    )
-    return _drain(members, spark, cleanup=(adir,))
+    with tempfile.TemporaryDirectory(prefix="flod_arch_") as adir:
+        _pack_archive_fixture(docs, adir)
+        n_archives = len(os.listdir(adir))
+        members = stream_archive_members(
+            spark, adir, max_files_per_trigger=max(1, -(-n_archives // 4))
+        )
+        return drain(members, spark)
 
 
 # stream_archive_dedup_live: the re-delivered duplicate copies get
@@ -943,7 +942,6 @@ def stream_archive_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     table."""
     import os
 
-    from flod_spark.catalog.streaming_live import _drain
     from flod_spark.streaming.dedup import drop_duplicates_unbounded
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -952,28 +950,21 @@ def stream_archive_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_docs = docs.count()
     shard_docs = max(1, -(-n_docs // 5))  # 5 original + 5 copy shards
-    adir = tempfile.mkdtemp(prefix="flod_arch_dedup_")
-    manifest = pack_tar_shards(
-        docs.unionByName(redelivered), adir, shard_docs=shard_docs
-    ).collect()
-    # pin strictly ascending mtimes in shard order: the file stream
-    # source replays by mtime, and copy shards must arrive AFTER the
-    # originals they duplicate (quick packs tie on mtime otherwise)
-    for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
-        os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
-    members = stream_archive_members(spark, adir, max_files_per_trigger=1)
-    admitted = drop_duplicates_unbounded(members, "content_md5")
-    return _drain(admitted, spark, cleanup=(adir,)).select(
-        "member", "n_bytes", "content_md5"
-    )
+    with tempfile.TemporaryDirectory(prefix="flod_arch_dedup_") as adir:
+        manifest = pack_tar_shards(
+            docs.unionByName(redelivered), adir, shard_docs=shard_docs
+        ).collect()
+        # pin strictly ascending mtimes in shard order: the file stream
+        # source replays by mtime, and copy shards must arrive AFTER the
+        # originals they duplicate (quick packs tie on mtime otherwise)
+        for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
+            os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
+        members = stream_archive_members(spark, adir, max_files_per_trigger=1)
+        admitted = drop_duplicates_unbounded(members, "content_md5")
+        return drain(admitted, spark).select("member", "n_bytes", "content_md5")
 
 
-def stream_pack_tar_shards(
-    docs_stream: DataFrame,
-    out_dir: str,
-    ckpt_dir: str,
-    shard_docs: int = _SHARD_DOCS,
-):
+def stream_pack_tar_shards(out_dir: str, shard_docs: int = _SHARD_DOCS):
     """STREAMING tar-shard SINK — the write half of the streaming
     ingestion loop (stream in -> WebDataset shards out, the shape a
     Kafka-fed training-corpus materializer has): each micro-batch runs
@@ -985,7 +976,8 @@ def stream_pack_tar_shards(
     bit-identical: the sink is idempotent per batch_id without a
     transaction log (the stream_foreach_upsert_live discipline applied
     to file output; pytest-pinned in tests/test_round12_ops.py).
-    Returns the started StreamingQuery. Registered (r12) as
+    Returns the foreachBatch function (run it with gate.drain's
+    ``foreach_batch``). Registered (r12) as
     stream_sink_tar_live (oracle = the member closed form through
     archive_member_rows — member names are doc_id arithmetic, so the
     set is batch-composition independent) and composed end-to-end in
@@ -1007,11 +999,7 @@ def stream_pack_tar_shards(
             name_prefix=f"shard_b{int(batch_id):05d}_",
         ).collect()  # bounded: one manifest row per shard in this batch
 
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .start()
-    )
+    return write_batch
 
 
 def _warc_shard_bytes(pairs) -> bytes:
@@ -1170,10 +1158,6 @@ def stream_sink_tar_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     storage; shard size (tar a dataloader streams) and trigger size
     (rows per batch) are independent knobs. Idempotence per batch_id
     comes without a transaction log."""
-    import shutil
-
-    from flod_spark.streaming.replay import replay_stream
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     timed = docs.withColumn(
         "ts",
@@ -1181,20 +1165,9 @@ def stream_sink_tar_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "timestampadd(MICROSECOND, doc_id, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
         ),
     )
-    spool = tempfile.mkdtemp(prefix="flod_sinktar_spool_")
     out = tempfile.mkdtemp(prefix="flod_sinktar_out_")
-    ck = tempfile.mkdtemp(prefix="flod_sinktar_ck_")
-    from flod_spark.io import pinned_stream_partitions
-
-    stream = replay_stream(spark, timed, "ts", spool, n_batches=4)
-    with pinned_stream_partitions(spark):  # _drain's rationale
-        q = stream_pack_tar_shards(stream.select("doc_id", "text"), out, ck)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    shutil.rmtree(spool, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
+    with spool(spark, timed, "ts", n_batches=4) as sp:
+        drain(sp.stream.select("doc_id", "text"), spark, foreach_batch=stream_pack_tar_shards(out))
     raw = spark.read.format("binaryFile").load(out)
     return archive_member_rows(raw).select("member", "n_bytes", "content_md5")
 
@@ -1241,7 +1214,6 @@ def stream_curate_loop_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     between split and sink — they never enter state (the md5 key
     does)."""
     import os
-    import shutil
 
     from flod_spark.streaming.dedup import drop_duplicates_unbounded
 
@@ -1251,37 +1223,24 @@ def stream_curate_loop_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_docs = docs.count()
     shard_docs = max(1, -(-n_docs // 5))  # 5 original + 5 copy shards
-    adir = tempfile.mkdtemp(prefix="flod_curate_in_")
-    manifest = pack_tar_shards(
-        docs.unionByName(redelivered), adir, shard_docs=shard_docs
-    ).collect()
-    for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
-        os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
-    members = stream_archive_members(
-        spark, adir, max_files_per_trigger=1, keep_content=True
-    )
-    admitted = drop_duplicates_unbounded(members, "content_md5")
-    clean = admitted.select(
-        F.regexp_extract("member", r"doc_(\d+)\.txt", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").cast("string").alias("text"),
-    )
-    from flod_spark.io import pinned_stream_partitions
-
     out = tempfile.mkdtemp(prefix="flod_curate_out_")
-    ck = tempfile.mkdtemp(prefix="flod_curate_ck_")
-    # _drain's rationale: the claim state pays a per-partition-per-batch
-    # commit (this loop ran at the session default 32 x 10 triggers
-    # before r16 — the only live gate that missed the pin)
-    with pinned_stream_partitions(spark):
-        q = stream_pack_tar_shards(clean, out, ck, shard_docs=100)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    shutil.rmtree(adir, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="flod_curate_in_") as adir:
+        manifest = pack_tar_shards(
+            docs.unionByName(redelivered), adir, shard_docs=shard_docs
+        ).collect()
+        for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
+            os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
+        members = stream_archive_members(
+            spark, adir, max_files_per_trigger=1, keep_content=True
+        )
+        admitted = drop_duplicates_unbounded(members, "content_md5")
+        clean = admitted.select(
+            F.regexp_extract("member", r"doc_(\d+)\.txt", 1)
+            .cast("long")
+            .alias("doc_id"),
+            F.col("content").cast("string").alias("text"),
+        )
+        drain(clean, spark, foreach_batch=stream_pack_tar_shards(out, shard_docs=100))
     raw = spark.read.format("binaryFile").load(out)
     return archive_member_rows(raw).select("member", "n_bytes", "content_md5")
 
@@ -1748,9 +1707,6 @@ def stream_wds_samples_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
-    adir = tempfile.mkdtemp(prefix="flod_wds_live_")
-    manifest = pack_wds_shards(docs, adir).collect()
-    assert manifest
     schema = StructType(
         [
             StructField("path", StringType()),
@@ -1759,21 +1715,22 @@ def stream_wds_samples_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("content", BinaryType()),
         ]
     )
-    # shard count grows with SF (one per _SHARD_DOCS docs); a fixed
-    # files-per-trigger would make TRIGGER COUNT grow with SF and the
-    # gate would measure replay machinery, not assembly — pace to a
-    # handful of triggers at any scale (production tunes this to
-    # ingestion latency; the assembly is stateless either way)
-    per_trigger = max(1, -(-len(manifest) // 8))
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("maxFilesPerTrigger", per_trigger)
-        .load(adir)
-    )
-    from flod_spark.catalog.streaming_live import _drain
-
-    return _drain(wds_assemble_members(raw), spark, cleanup=(adir,))
+    with tempfile.TemporaryDirectory(prefix="flod_wds_live_") as adir:
+        manifest = pack_wds_shards(docs, adir).collect()
+        assert manifest
+        # shard count grows with SF (one per _SHARD_DOCS docs); a fixed
+        # files-per-trigger would make TRIGGER COUNT grow with SF and the
+        # gate would measure replay machinery, not assembly — pace to a
+        # handful of triggers at any scale (production tunes this to
+        # ingestion latency; the assembly is stateless either way)
+        per_trigger = max(1, -(-len(manifest) // 8))
+        raw = (
+            spark.readStream.format("binaryFile")
+            .schema(schema)
+            .option("maxFilesPerTrigger", per_trigger)
+            .load(adir)
+        )
+        return drain(wds_assemble_members(raw), spark)
 
 
 # crawl_pipeline constructions shared by engine and oracle: docs whose
@@ -1938,26 +1895,23 @@ def stream_crawl_extract_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     the re-fetch horizon allows, exactly like the archive-dedup twin."""
     import os
 
-    from flod_spark.catalog.streaming_live import _drain
     from flod_spark.streaming.dedup import drop_duplicates_unbounded
 
     docs = load(spark, sf_dir, "documents")
     n_docs = docs.count()
     shard_docs = max(1, -(-n_docs // 5))  # 5 original + ~5 copy shards
     pages = _crawl_pages(docs)
-    adir = tempfile.mkdtemp(prefix="flod_crawl_live_")
-    manifest = pack_warc_shards(pages, adir, shard_docs=shard_docs).collect()
-    # strictly ascending mtimes in shard order: the file stream replays
-    # by mtime and copy shards must arrive AFTER the originals
-    for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
-        os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
-    members = stream_archive_members(
-        spark, adir, max_files_per_trigger=1, keep_content=True
-    )
-    admitted = drop_duplicates_unbounded(_crawl_extract_quality(members), "fp")
-    return _drain(admitted, spark, cleanup=(adir,)).select(
-        "doc_id", "fp", "n_chars"
-    )
+    with tempfile.TemporaryDirectory(prefix="flod_crawl_live_") as adir:
+        manifest = pack_warc_shards(pages, adir, shard_docs=shard_docs).collect()
+        # strictly ascending mtimes in shard order: the file stream replays
+        # by mtime and copy shards must arrive AFTER the originals
+        for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
+            os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
+        members = stream_archive_members(
+            spark, adir, max_files_per_trigger=1, keep_content=True
+        )
+        admitted = drop_duplicates_unbounded(_crawl_extract_quality(members), "fp")
+        return drain(admitted, spark).select("doc_id", "fp", "n_chars")
 
 
 def _dir_has_parquet(d: str) -> bool:
@@ -2122,8 +2076,6 @@ def stream_crawl_claims_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     cadence. This is the plan where a crawler's live dedup and its
     nightly reconciliation share ONE durable state."""
     import os
-    import shutil
-    import uuid
 
     from flod_spark.io import serve_and_cleanup
 
@@ -2131,44 +2083,24 @@ def stream_crawl_claims_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.count()
     shard_docs = max(1, -(-n_docs // 5))
     pages = _crawl_pages(docs)
-    adir = tempfile.mkdtemp(prefix="flod_crawl_clv_")
-    manifest = pack_warc_shards(pages, adir, shard_docs=shard_docs).collect()
-    for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
-        os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
-    members = stream_archive_members(
-        spark, adir, max_files_per_trigger=1, keep_content=True
-    )
-    ext = _crawl_extract_quality(members)
-
-    croot = tempfile.mkdtemp(prefix="flod_crawl_claims_live_")
-    claims_dir = os.path.join(croot, "claims")
-    advance = crawl_claims_sink(claims_dir)
-
-    from flod_spark.io import pinned_stream_partitions
-
-    name = "crawl_claims_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix=f"flod_ckpt_{name}_")
-    with pinned_stream_partitions(spark):  # _drain's rationale
-        q = (
-            ext.writeStream.foreachBatch(advance)
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with tempfile.TemporaryDirectory(prefix="flod_crawl_clv_") as root:
+        adir = os.path.join(root, "warc")
+        claims_dir = os.path.join(root, "claims")
+        manifest = pack_warc_shards(pages, adir, shard_docs=shard_docs).collect()
+        for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
+            os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
+        members = stream_archive_members(
+            spark, adir, max_files_per_trigger=1, keep_content=True
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-    if not _dir_has_parquet(claims_dir):
-        out = spark.createDataFrame([], "doc_id long, fp string, n_chars long")
-        shutil.rmtree(croot, ignore_errors=True)
-        shutil.rmtree(adir, ignore_errors=True)
-        return out
-    out = spark.read.parquet(claims_dir).select(
-        F.col("first_id").alias("doc_id"), "fp", "n_chars"
-    )
-    return serve_and_cleanup(out, croot, adir)
+        ext = _crawl_extract_quality(members)
+        drain(ext, spark, foreach_batch=crawl_claims_sink(claims_dir))
+        if not _dir_has_parquet(claims_dir):
+            return spark.createDataFrame([], "doc_id long, fp string, n_chars long")
+        return serve_and_cleanup(
+            spark.read.parquet(claims_dir).select(
+                F.col("first_id").alias("doc_id"), "fp", "n_chars"
+            )
+        )
 
 
 def _crawl_incr_oracle() -> str:

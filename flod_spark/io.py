@@ -6,19 +6,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -124,10 +111,6 @@ def load(
     return _respread(spark, df, path, amplify) if spread else df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def recover_swap_dir(target: str) -> None:
     """Finish a half-completed :func:`atomic_swap_dir`. The rename
     sequence there writes ``.compact`` FULLY before any rename, so if
@@ -180,8 +163,8 @@ def atomic_swap_dir(df: DataFrame, target: str, partition_by: str) -> None:
 
 def pinned_stream_partitions(spark: SparkSession, wide: bool = False):
     """Context manager pinning spark.sql.shuffle.partitions for one
-    gate-scale stream's LIFETIME, restored on exit — the _drain
-    rationale shared by every live gate: state stores pay a
+    gate-scale stream's LIFETIME, restored on exit — entered once per
+    stream by streaming/gate.py::drain: state stores pay a
     per-partition-per-trigger commit (32 partitions x 5 triggers of
     mostly-empty state measured ~12% of gate wall time), and results
     are partition-count independent (keys hash to exactly one state
@@ -194,7 +177,10 @@ def pinned_stream_partitions(spark: SparkSession, wide: bool = False):
     the core count. The session-global conf set/restore is safe
     because the engine drains gates serially; concurrent gates in one
     session would need Spark to grow a per-writer option for shuffle
-    partitions (none exists as of 4.1).
+    partitions (none exists as of 4.1). The narrow pin is intentional
+    for small-state (gate-scale) streams at any cluster size: their
+    state is too small for more partitions to add anything but more
+    per-partition commits.
 
     ``wide=True`` is for gates whose state is CORPUS-scale (one key per
     observed pair/content hash, not per user): those want every core's
@@ -291,9 +277,11 @@ def dir_has_parquet(d: str) -> bool:
 def serve_and_cleanup(df: DataFrame, *dirs: str) -> DataFrame:
     """Materialize a lifecycle query's serve result (eager
     localCheckpoint), then remove the temp state directories it was
-    computed from — the batch analog of the streaming twins'
-    ``_drain(cleanup=...)`` pattern (r13 advice: the gated lifecycle
-    queries leaked their ``mkdtemp`` index/claim trees on every run).
+    computed from — the batch analog of streaming/gate.py::spool, which
+    removes a stream's replay spool on exit (r13 advice: the gated
+    lifecycle queries leaked their ``mkdtemp`` index/claim trees on
+    every run). With no ``dirs`` it only materializes, for callers
+    whose temp dirs are already scoped by a ``with`` block.
     The checkpoint pins the result's partitions in executor storage,
     so the returned DataFrame no longer reads the swept paths; callers
     return it directly to the driver, which collects as usual.

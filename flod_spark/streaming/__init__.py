@@ -6,6 +6,10 @@ time; Spark's model adds event time + watermarks. This package provides:
 - replay:   file-backed deterministic micro-batch replay of a batch table
             (the test harness for stream/batch parity — FIXTURES.md
             events_replay)
+- gate:     the one stream-gate seam — spool() replays a table into a
+            temp dir it owns (and reads the order column's max from the
+            spool's footers); drain() runs a stream dry into a memory
+            sink or a foreachBatch function
 - windows:  tumbling / sliding / session event-time windows with
             watermarks (batch twins in catalog/streaming_batch.py)
 - take:     stateful streaming take(n) — flod's short-circuit semantics

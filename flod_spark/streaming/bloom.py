@@ -71,7 +71,7 @@ def _bloom_shard_fn(key, pdfs, state):
     import numpy as np
     import pandas as pd
 
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     words = (
         np.asarray(state.get[0], dtype="int64").view("uint64")

@@ -133,3 +133,30 @@ def _merge_packed(su, olds, uu, found, pos, news):
     mu = np.concatenate([su, uu[~found]])
     order = np.argsort(mu, kind="stable")
     return [mu.take(order)] + [u.take(order, axis=0) for u in upds]
+
+
+def _drain_sorted(pdfs, cols, keys=("us", "event_id")):
+    """Drain one key's Arrow chunks into numpy arrays sorted by
+    ``keys`` — the cheap path around pandas concat + sort_values.
+    Measured at 17-row batches (sf0.1's per-key-per-trigger size):
+    sort_values alone is ~315us and a Series-based output frame ~240us
+    per call, ~0.6 ms of pure machinery x |keys| x |triggers| — this
+    helper (single-chunk fast path, lexsort, take-only-when-unsorted)
+    cuts it to ~30us. Order semantics identical: lexsort's last key is
+    primary, and the take is skipped only when already totally sorted."""
+    import numpy as np
+    import pandas as pd
+
+    chunks = list(pdfs)
+    if not chunks:
+        # Timeout-only invocation (EventTimeTimeout callers get zero
+        # chunks): empty arrays, not pd.concat([]) which raises — the
+        # _fold_sessions pattern. Current callers are all NoTimeout,
+        # but any future timeout-driven caller hits this path.
+        return {c: np.empty(0, dtype=object) for c in cols}
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    arrs = {c: pdf[c].to_numpy() for c in cols}
+    order = np.lexsort(tuple(arrs[k] for k in reversed(keys)))
+    if not np.array_equal(order, np.arange(len(order))):
+        arrs = {c: a.take(order) for c, a in arrs.items()}
+    return arrs

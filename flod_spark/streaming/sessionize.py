@@ -30,7 +30,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StatefulProcessor
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flod_spark.io import ts_micros
@@ -241,110 +240,3 @@ def streaming_sessionize(
     ).select(
         F.col("key").alias(key_col), "start_us", "end_us", "n_events"
     )
-
-
-# ---- transformWithStateInPandas port (Spark 4 processor API) -----------
-# Same sessionizer on the NEWER arbitrary-state surface: explicit
-# StatefulProcessor object, named value state, first-class timers
-# (registerTimer/handleExpiredTimer replaces GroupState's single
-# setTimeoutTimestamp). The processor's Python worker requires
-# google.protobuf at RUNTIME (state serialization protocol); this module
-# stays importable without it — tws_available() gates execution, and the
-# identical-output test (tests/test_streaming.py) lights up the day the
-# environment gains protobuf. Semantics are kept field-for-field
-# identical to streaming_sessionize's sess_fn so both surfaces share the
-# same oracle.
-
-
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can actually RUN here (the
-    processor worker imports google.protobuf)."""
-    import importlib.util
-
-    try:  # find_spec raises when the parent 'google' package is absent
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-class SessionizeProcessor(StatefulProcessor):
-    """StatefulProcessor twin of sess_fn. The base class is importable
-    without protobuf — only the RUNNING worker needs it, which
-    tws_available() gates."""
-
-    def __init__(self, gap_us: int = GAP_US):
-        self.gap_us = gap_us
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.state = handle.getValueState("sess", "start_us long, last_us long, n long")
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self.state.exists():
-            start, last, n = self.state.get()
-            # one live timer per key: drop the stale one before re-arming
-            self.handle.deleteTimer((last + self.gap_us) // 1000)
-        else:
-            start, last, n = None, None, 0
-        out_start, out_end, out_n, (start, last, n) = _fold_sessions(
-            rows, start, last, n, self.gap_us
-        )
-        if start is None:
-            return
-        self.state.update((start, last, n))
-        # event-time timer: fires when the watermark passes the gap
-        # after the last event (ms — Spark's watermark granularity)
-        self.handle.registerTimer((last + self.gap_us) // 1000)
-        if len(out_start):
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(out_start),
-                    "start_us": out_start,
-                    "end_us": out_end,
-                    "n_events": out_n,
-                }
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        if self.state.exists():
-            start, last, n = self.state.get()
-            self.state.clear()
-            yield pd.DataFrame(
-                {"key": [key[0]], "start_us": [start], "end_us": [last], "n_events": [n]}
-            )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass  # no warm-start state in this pipeline
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_sessionize_tws(
-    events: DataFrame,
-    gap_us: int = GAP_US,
-    watermark: str = "2 hours",
-    key_col: str = "user_id",
-    time_col: str = "ts",
-) -> DataFrame:
-    """transformWithStateInPandas form of streaming_sessionize — same
-    inputs, same emission contract, same oracle. Raises ImportError
-    with a clear message when the processor runtime is unavailable
-    (tws_available() is the guard callers/tests use)."""
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf in the "
-            "Python worker; use streaming_sessionize (applyInPandasWithState) "
-            "in this environment"
-        )
-    src = (
-        with_event_time(events, time_col)
-        .withWatermark(time_col, watermark)
-        .select(key_col, time_col, ts_micros(time_col).alias("_us"))
-    )
-    return src.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=SessionizeProcessor(gap_us),
-        outputStructType="key long, start_us long, end_us long, n_events long",
-        outputMode="append",
-        timeMode="eventTime",
-    ).select(F.col("key").alias(key_col), "start_us", "end_us", "n_events")

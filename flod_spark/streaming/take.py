@@ -31,7 +31,7 @@ def _take_drain(pdfs, taken: int, n: int, cols, time_col: str):
     sort_values().head() could emit non-earliest rows when Arrow split
     a batch mid-key with interleaved times. Returns (DataFrame | None,
     new_taken)."""
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     if taken >= n:
         return None, taken

@@ -29,7 +29,6 @@ touches row data, adds a shuffle, or grows with input size.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable
 from typing import Any
 
@@ -147,12 +146,3 @@ class TagChangeListener(StreamingQueryListener):
 
     def onQueryTerminated(self, event) -> None:
         pass
-
-
-def dump_tags(df: DataFrame) -> str:
-    """Debug helper: JSON of every column's visible tags."""
-    return json.dumps(
-        {f.name: (f.metadata or {}).get(_NS) or {} for f in df.schema.fields},
-        sort_keys=True,
-        default=str,
-    )

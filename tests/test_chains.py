@@ -204,7 +204,7 @@ ROUND17_CHANGED = {
     "stream_ivfpq_ingest_live",
     # The literal-8 shuffle-partition pins became the derived
     # io.pinned_stream_partitions context manager at these explicit
-    # call sites (r16 verdict item 7; _drain's gates share the same
+    # call sites (r16 verdict item 7; the memory-sink gates share the same
     # helper and re-prove via the (d) tier over subsequent rounds).
     "stream_sink_tar_live",
     "stream_curate_loop_live",

@@ -363,27 +363,18 @@ def test_bloom_admit_streaming_end_to_end(spark, sf_dir):
     k = 4 and ~103 keys/shard the analytic false-suppression odds are
     ~1e-9 — an inequality assertion with headroom of ONE), and no key
     admits twice."""
-    from flod_spark.catalog.streaming_live import _WATERMARK, _drain
-    from flod_spark.streaming import replay_stream
+    from flod_spark.catalog.streaming_live import _WATERMARK
+    from flod_spark.io import load
     from flod_spark.streaming.bloom import bloom_admit
+    from flod_spark.streaming.gate import drain, spool
     from flod_spark.streaming.windows import with_event_time
 
-    import shutil
-    import tempfile
-
-    from flod_spark.io import load
-
     ev = load(spark, sf_dir, "events")
-    replay_dir = tempfile.mkdtemp(prefix="flod_replay_bl_")
-    shutil.rmtree(replay_dir, ignore_errors=True)
-    stream = replay_stream(spark, ev, "ts", replay_dir, n_batches=4, tiebreak=("event_id",))
-    src = with_event_time(stream).withWatermark("ts", _WATERMARK)
-    admitted = _drain(
-        bloom_admit(src, ("user_id", "event_type"), "event_id"),
-        spark,
-        output_mode="update",
-        cleanup=(replay_dir,),
-    )
+    with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = with_event_time(sp.stream).withWatermark("ts", _WATERMARK)
+        admitted = drain(
+            bloom_admit(src, ("user_id", "event_type"), "event_id"), spark, output_mode="update"
+        )
     got = {r.rid for r in admitted.collect()}
     firsts = {
         r.rid

@@ -60,7 +60,7 @@ def test_drain_sorted_empty_chunks():
     """The r10 ADVICE low: _drain_sorted on a zero-chunk invocation
     (EventTimeTimeout timeout-only call) must return empty arrays, not
     raise from pd.concat([])."""
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     arrs = _drain_sorted(iter([]), ("us", "event_id", "v"), keys=("us", "event_id"))
     assert set(arrs) == {"us", "event_id", "v"}

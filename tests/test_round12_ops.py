@@ -264,10 +264,12 @@ def test_archive_pack_split_roundtrip_edge_contents(spark, tmp_path):
         for i, t in enumerate(texts)
     }
     for layout, adir in (
-        ("fixture", _pack_archive_fixture(docs)),
+        ("fixture", str(tmp_path / "edge_fixture")),
         ("shards", str(tmp_path / "edge_shards")),
     ):
-        if layout == "shards":
+        if layout == "fixture":
+            _pack_archive_fixture(docs, adir)
+        else:
             pack_tar_shards(docs, adir, shard_docs=4).collect()
         raw = spark.read.format("binaryFile").load(adir)
         got = {
@@ -296,7 +298,7 @@ def test_stream_pack_tar_shards_roundtrip_and_batch_retry(spark, sf_dir, tmp_pat
         stream_pack_tar_shards,
     )
     from flod_spark.io import load
-    from flod_spark.streaming.replay import replay_stream
+    from flod_spark.streaming.gate import drain, spool
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # replay orders by a time column — derive one from doc_id (1 µs/doc)
@@ -306,17 +308,10 @@ def test_stream_pack_tar_shards_roundtrip_and_batch_retry(spark, sf_dir, tmp_pat
             "timestampadd(MICROSECOND, doc_id, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
         ),
     )
-    spool = str(tmp_path / "doc_spool")
-    stream = replay_stream(spark, timed, "ts", spool, n_batches=4)
     out = str(tmp_path / "stream_shards")
     os.makedirs(out)
-    q = stream_pack_tar_shards(
-        stream, out, str(tmp_path / "ck"), shard_docs=50
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    with spool(spark, timed, "ts", n_batches=4) as sp:
+        drain(sp.stream, spark, foreach_batch=stream_pack_tar_shards(out, shard_docs=50))
     # (a) byte-exact round trip of the full corpus
     raw = spark.read.format("binaryFile").load(out)
     got = {
@@ -374,6 +369,7 @@ def test_full_streaming_ingestion_loop_archives_to_clean_shards(
     )
     from flod_spark.io import load
     from flod_spark.streaming.dedup import drop_duplicates_unbounded
+    from flod_spark.streaming.gate import drain
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     redelivered = docs.select(
@@ -399,11 +395,7 @@ def test_full_streaming_ingestion_loop_archives_to_clean_shards(
     )
     out = str(tmp_path / "clean_shards")
     os.makedirs(out)
-    q = stream_pack_tar_shards(clean, out, str(tmp_path / "ck"), shard_docs=100)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(clean, spark, foreach_batch=stream_pack_tar_shards(out, shard_docs=100))
 
     got = {
         r.member: (r.n_bytes, r.content_md5)
@@ -491,13 +483,13 @@ def test_stream_pack_tar_shards_checkpoint_restart_continues(
     os.makedirs(out)
 
     def start():
-        return stream_pack_tar_shards(
+        return (
             spark.readStream.schema(timed.schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(spool),
-            out,
-            ck,
-            shard_docs=50,
+            .parquet(spool)
+            .writeStream.foreachBatch(stream_pack_tar_shards(out, shard_docs=50))
+            .option("checkpointLocation", ck)
+            .start()
         )
 
     q = start()

@@ -42,7 +42,7 @@ class FakeState:
 
 
 def _ref_ewma(key, pdfs, state):
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     hist = list(state.get[0]) if state.exists else []
     b = _drain_sorted(pdfs, ("event_id", "us", "xq"))
@@ -65,7 +65,7 @@ def _ref_ewma(key, pdfs, state):
 
 
 def _ref_cusum(key, pdfs, state):
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     if state.exists:
         pf, mn = state.get
@@ -92,7 +92,7 @@ def _ref_cusum(key, pdfs, state):
 
 
 def _ref_drawdown(key, pdfs, state):
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     if state.exists:
         peak, mdd = state.get
@@ -122,7 +122,7 @@ def _ref_drawdown(key, pdfs, state):
 
 
 def _ref_rsi(key, pdfs, state):
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     if state.exists:
         prev, hist = state.get
@@ -163,7 +163,7 @@ def _ref_rsi(key, pdfs, state):
 
 
 def _ref_boll(key, pdfs, state):
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     if state.exists:
         seen, hist = state.get

@@ -138,7 +138,7 @@ def test_drain_sorted_matches_pandas(rows, n_chunks):
     including duplicate sort keys (lexsort and stable sort_values agree
     because the remaining column order is then data-determined only up
     to ties — compare as sorted tuples)."""
-    from flod_spark.catalog.streaming_live import _drain_sorted
+    from flod_spark.streaming.packfold import _drain_sorted
 
     pdf = pd.DataFrame(rows, columns=["us", "event_id", "x"])
     bounds = sorted(

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from flod_spark.io import load
 from flod_spark.streaming import replay_stream, session_windows, streaming_take_per_key, tumbling_counts
+from flod_spark.streaming.gate import drain, spool
 
 
 @pytest.fixture(scope="module")
@@ -17,25 +18,9 @@ def events(spark, sf_dir):
     return load(spark, sf_dir, "events")
 
 
-def _run_to_memory(stream_df, name: str, spark):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"/tmp/flod_ckpt_{name}")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 def test_tumbling_stream_matches_batch(spark, events, tmp_path):
     stream = replay_stream(spark, events, "ts", str(tmp_path / "replay"), n_batches=5)
-    import shutil
-
-    shutil.rmtree("/tmp/flod_ckpt_tumbling", ignore_errors=True)
-    got = _run_to_memory(tumbling_counts(stream), "tumbling", spark).toPandas()
+    got = drain(tumbling_counts(stream), spark).toPandas()
     expect = tumbling_counts(events).toPandas()  # batch mode: watermark is a no-op
     # append mode only emits windows CLOSED by the watermark when the
     # stream ends; drop still-open windows from the batch expectation
@@ -51,10 +36,7 @@ def test_tumbling_stream_matches_batch(spark, events, tmp_path):
 
 def test_session_stream_matches_batch(spark, events, tmp_path):
     stream = replay_stream(spark, events, "ts", str(tmp_path / "replay_s"), n_batches=5)
-    import shutil
-
-    shutil.rmtree("/tmp/flod_ckpt_session", ignore_errors=True)
-    got = _run_to_memory(session_windows(stream), "session", spark).toPandas()
+    got = drain(session_windows(stream), spark).toPandas()
     expect = session_windows(events).toPandas()
     # exclude sessions the watermark had not closed at end-of-stream
     max_ts = events.agg(F.max("ts")).collect()[0][0]
@@ -70,10 +52,7 @@ def test_session_stream_matches_batch(spark, events, tmp_path):
 def test_streaming_take_per_key(spark, events, tmp_path):
     n = 3
     stream = replay_stream(spark, events, "ts", str(tmp_path / "replay_t"), n_batches=4)
-    import shutil
-
-    shutil.rmtree("/tmp/flod_ckpt_take", ignore_errors=True)
-    got = _run_to_memory(streaming_take_per_key(stream, n), "take", spark).toPandas()
+    got = drain(streaming_take_per_key(stream, n), spark).toPandas()
     # every key capped at n
     counts = got.groupby("user_id").size()
     assert (counts <= n).all()
@@ -97,16 +76,7 @@ def test_streaming_queue_and_dedup(spark, tmp_path):
     q.put([2, 3, 4])   # dupes of batch 1
     q.put([5, 1])      # one dupe, one new
     deduped = drop_duplicates_unbounded(q.stream(), "value")
-    sq = (
-        deduped.writeStream.format("memory")
-        .queryName("qdedup")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    sq.processAllAvailable()
-    sq.stop()
-    got = sorted(r.value for r in spark.sql("SELECT * FROM qdedup").collect())
+    got = sorted(r.value for r in drain(deduped, spark).collect())
     assert got == [1, 2, 3, 4, 5]
 
 
@@ -196,28 +166,21 @@ def test_drop_duplicates_within_watermark_bounds_state(spark, tmp_path):
     df = spark.createDataFrame(rows, "event_id long, k long, ts timestamp")
     stream = replay_stream(spark, df, "ts", str(tmp_path / "replay_dw"), n_batches=6)
     deduped = drop_duplicates_within(stream, "ts", "30 minutes", "k")
-    sq = (
-        deduped.writeStream.format("memory")
-        .queryName("qdedup_within")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dw"))
-        .start()
-    )
-    sq.processAllAvailable()
-    sq.stop()
-    got = {r.event_id for r in spark.sql("SELECT * FROM qdedup_within").collect()}
+    got = {r.event_id for r in drain(deduped, spark).collect()}
     # The GUARANTEE is only "dups within delay are dropped" (3, 11); a
     # later duplicate may drop too while eviction lags (7) but re-emits
     # once the sweep runs (9) — bounded state, bounded guarantee.
     assert got == {1, 2, 4, 5, 6, 8, 9, 10, 12}
 
 
-def test_replay_partition_contract(spark, tmp_path):
+def test_replay_partition_contract(spark, events, tmp_path):
     """replay_stream's written files conserve rows exactly, keep
     cross-batch ts ordering (every ts in file i <= every ts in file
     i+1), and put NULL order keys in the first batch — under duplicate
     quantile boundaries (few distinct ts values, many batches) and
-    empty buckets."""
+    empty buckets. The spool's max (read from the replay's files, no
+    Spark job) is exactly max(order_col): for events (TIMESTAMP_NTZ),
+    this session-zone frame, an empty input and an all-NULL column."""
     import datetime as dt
     import glob
     import os
@@ -251,6 +214,46 @@ def test_replay_partition_contract(spark, tmp_path):
         seen += [r.event_id for r in part]
     assert sorted(seen) == sorted(r[0] for r in rows)
 
+    nulls = df.filter(F.col("ts").isNull())
+    for frame in (events, df, df.limit(0), nulls):
+        with spool(spark, frame, "ts", n_batches=8) as sp:
+            assert sp.max == frame.agg(F.max("ts")).collect()[0][0]
+
+
+def test_drain_cleans_up_when_the_stream_raises(spark, events):
+    """A stream that fails inside drain still leaves nothing behind: the
+    spool dir and the checkpoint are removed and the shuffle-partition
+    pin is undone."""
+    import glob
+    import os
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    key = "spark.sql.shuffle.partitions"
+    ckpts = os.path.join(tempfile.gettempdir(), "flod_ckpt_*")
+    before = set(glob.glob(ckpts))
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    seen = {}
+
+    def boom(batch_df, batch_id):
+        seen["ckpt"] = set(glob.glob(ckpts)) - before
+        seen["pin"] = spark.conf.get(key)
+        raise RuntimeError("boom in batch")
+
+    try:
+        with pytest.raises(StreamingQueryException, match="boom in batch"):
+            with spool(spark, events, "ts", n_batches=2) as sp:
+                spool_dir = sp.dir
+                drain(sp.stream, spark, foreach_batch=boom)
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prev)
+    assert seen["ckpt"] and seen["pin"] != "7"
+    assert not os.path.exists(spool_dir)
+    assert not any(os.path.exists(d) for d in seen["ckpt"])
+
 
 def test_windowed_agg_under_rocksdb_state_store(spark, events, tmp_path):
     """The production state backend: swapping the HDFS-backed default
@@ -261,12 +264,9 @@ def test_windowed_agg_under_rocksdb_state_store(spark, events, tmp_path):
     provider = (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
-    import shutil
-
     key = "spark.sql.streaming.stateStore.providerClass"
     results = {}
     for tag, prov in (("default", None), ("rocksdb", provider)):
-        shutil.rmtree(f"/tmp/flod_ckpt_rocks_{tag}", ignore_errors=True)
         if prov is None:
             spark.conf.unset(key)
         else:
@@ -274,7 +274,7 @@ def test_windowed_agg_under_rocksdb_state_store(spark, events, tmp_path):
         stream = replay_stream(
             spark, events, "ts", str(tmp_path / f"replay_{tag}"), n_batches=3
         )
-        got = _run_to_memory(tumbling_counts(stream), f"rocks_{tag}", spark)
+        got = drain(tumbling_counts(stream), spark)
         results[tag] = (
             got.toPandas()
             .sort_values(["win_start", "event_type"])
@@ -371,39 +371,22 @@ def test_stateful_checkpoint_recovery_windowed_agg(spark, events, tmp_path):
     assert set(single) <= set(interrupted)  # restart never loses a window
 
 
-def test_sessionize_tws_guard_raises_clearly(spark, events, tmp_path):
-    """Without the processor runtime (google.protobuf), the
-    transformWithStateInPandas sessionizer refuses loudly and points at
-    the working surface — never a deep worker crash."""
-    from flod_spark.streaming.sessionize import streaming_sessionize_tws, tws_available
+def test_catalog_streams_only_through_the_gate_seam():
+    """No catalog module starts, drains or spools a stream by hand, and
+    none collects a max(...) for a horizon the spool already knows:
+    streaming/gate.py's spool and drain are the one path."""
+    import pathlib
+    import re
 
-    if tws_available():
-        pytest.skip("processor runtime present — covered by the parity test")
-    stream = replay_stream(spark, events, "ts", str(tmp_path / "replay_twsg"), n_batches=3)
-    with pytest.raises(ImportError, match="applyInPandasWithState"):
-        streaming_sessionize_tws(stream)
-
-
-def test_sessionize_tws_matches_applyinpandas(spark, events, tmp_path):
-    """The transformWithStateInPandas port and the applyInPandasWithState
-    sessionizer produce IDENTICAL closed sessions on the same replayed
-    stream (field-for-field twin processors). Skipped until the sandbox
-    gains google.protobuf; the assertion is ready the day it does."""
-    from flod_spark.streaming.sessionize import (
-        streaming_sessionize,
-        streaming_sessionize_tws,
-        tws_available,
+    catalog = pathlib.Path(__file__).resolve().parents[1] / "flod_spark" / "catalog"
+    banned = re.compile(
+        r"\.writeStream\b|\.processAllAvailable\(|\breplay_stream\(|\breplay_buckets\("
+        r"|\.agg\(F\.max\([^()]*\)\)\.collect\(\)"
     )
-
-    if not tws_available():
-        pytest.skip("transformWithStateInPandas worker needs google.protobuf")
-    s1 = replay_stream(spark, events, "ts", str(tmp_path / "replay_tw1"), n_batches=4,
-                       tiebreak=("event_id",))
-    s2 = replay_stream(spark, events, "ts", str(tmp_path / "replay_tw2"), n_batches=4,
-                       tiebreak=("event_id",))
-    a = _run_to_memory(streaming_sessionize(s1), "tws_a", spark).toPandas()
-    b = _run_to_memory(streaming_sessionize_tws(s2), "tws_b", spark).toPandas()
-    key = ["user_id", "start_us"]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_like=True)
+    hits = [
+        f"{path.name}:{n}: {line.strip()}"
+        for path in sorted(catalog.glob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, hits
