@@ -25,7 +25,9 @@ for windows, and the take operator's state is one counter per key.
 
 from __future__ import annotations
 
+import functools
 import glob
+import importlib
 import shutil
 import tempfile
 
@@ -35,27 +37,34 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.window import Window
 
 from flod_spark.catalog.analytics import _HH_C, basket_pair_structs
+from flod_spark.catalog.relational import _BOLL_W, _CUSUM_K, _EWMA_H, _EWMA_W, _RSI_N
 from flod_spark.functions.hashbridge import salted_mod, salted_mod_sql
-from flod_spark.io import load
-from flod_spark.registry import query
+from flod_spark.io import load, serve_and_cleanup, ts_micros
+from flod_spark.registry import ORACLES, query
 from flod_spark.streaming import streaming_take_per_key, tumbling_counts
 from flod_spark.streaming.gate import drain, spool
 from flod_spark.streaming.packfold import (
     _drain_sorted,
     _gather,
     _hist_vals,
-    _lookup,
-    _merge_packed,
-    _packed_get,
     _ragged_pos,
-    _segments,
     _take_last,
+    packed_user_fold,
 )
 from flod_spark.streaming.windows import as_naive, with_event_time
 
 _WINDOW = "1 hour"
 _WATERMARK = "2 hours"
 _TAKE_N = 3
+
+
+def _borrowed_oracle(module: str, qkey: str) -> str:
+    """The oracle a live gate borrows VERBATIM from its batch twin
+    ``qkey``: import the owning catalog module (registering its keys
+    at this point of the import, as a plain import would) and return
+    the twin's SQL."""
+    importlib.import_module(f"flod_spark.catalog.{module}")
+    return ORACLES[qkey]
 
 
 @query(
@@ -511,10 +520,11 @@ def stream_foreach_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = _partials(ev.limit(0))
     else:
         final = spark.read.parquet(state["path"])
-    return final.select(
+    out = final.select(
         "user_id", "event_type", "n_events", "first_ts", "last_ts",
         F.col("sum_dec").cast("double").alias("sum_value"),
     )
+    return serve_and_cleanup(out, root)
 
 
 def _prep_live_oracle() -> str:
@@ -988,15 +998,7 @@ def stream_agg_update_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _split_router_oracle() -> str:
-    from flod_spark.catalog.sampling import split_assign  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["split_assign"]
-
-
-@query("stream_split_router_live", oracle=_split_router_oracle())
+@query("stream_split_router_live", oracle=_borrowed_oracle("sampling", "split_assign"))
 def stream_split_router_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTI-SINK ROUTING — the foreachBatch pattern that fans one
     stream out to several destinations: documents arrive as
@@ -1067,15 +1069,10 @@ def stream_split_router_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(counts.astype({"n_docs": "int64"}), "split string, lang string, n_docs long")
 
 
-def _cm_live_oracle() -> str:
-    from flod_spark.catalog.analytics import sketch_countmin  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["sketch_countmin"]
-
-
-@query("stream_sketch_countmin_live", oracle=_cm_live_oracle())
+@query(
+    "stream_sketch_countmin_live",
+    oracle=_borrowed_oracle("analytics", "sketch_countmin"),
+)
 def stream_sketch_countmin_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch maintained ON THE LIVE PATH — the incremental
     form sketch_countmin's docstring promises: counter cells are an
@@ -1129,15 +1126,7 @@ def stream_sketch_countmin_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keys.join(est, "user_id")
 
 
-def _hll_live_oracle() -> str:
-    from flod_spark.catalog.analytics import agg_hyperloglog_exact  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["agg_hyperloglog_exact"]
-
-
-@query("stream_hll_live", oracle=_hll_live_oracle())
+@query("stream_hll_live", oracle=_borrowed_oracle("analytics", "agg_hyperloglog_exact"))
 def stream_hll_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog registers maintained ON THE LIVE PATH — streaming
     cardinality, the classic 'distinct users right now' dashboard
@@ -1303,8 +1292,6 @@ def stream_asof_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream interval join cannot express without buffering both
     sides). In production the same operator reads its initial state
     from a snapshot and the stream from the CDC tail."""
-    from flod_spark.io import ts_micros
-
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("signup", "click")
     )
@@ -1327,15 +1314,7 @@ def stream_asof_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bars_live_oracle() -> str:
-    from flod_spark.catalog.streaming_batch import bars_ohlc  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["bars_ohlc"]
-
-
-@query("stream_bars_ohlc_live", oracle=_bars_live_oracle())
+@query("stream_bars_ohlc_live", oracle=_borrowed_oracle("streaming_batch", "bars_ohlc"))
 def stream_bars_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE candlestick bars — bars_ohlc as an UPDATE-mode streaming
     aggregation, the real-time feed the batch query is the twin of:
@@ -1352,8 +1331,6 @@ def stream_bars_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses each micro-batch map-side before the state store — the
     same one-exchange shape as the batch bars."""
     from flod_spark.catalog.streaming_batch import _ORDER_KEY_MULT
-    from flod_spark.io import ts_micros
-
     ev = load(spark, sf_dir, "events")
     with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
         s = with_event_time(sp.stream)
@@ -1468,8 +1445,6 @@ def stream_heavy_hitters_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         got = drain(snapshots, spark, output_mode="update")
     cand = got.select("user_id").distinct()
-    from flod_spark.catalog.analytics import _HH_C, basket_pair_structs
-
     ev_b = load(spark, sf_dir, "events").select("user_id").filter(
         F.col("user_id").isNotNull()
     )
@@ -1484,15 +1459,10 @@ def stream_heavy_hitters_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bitmap_live_oracle() -> str:
-    from flod_spark.catalog.analytics import agg_bitmap_distinct  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["agg_bitmap_distinct"]
-
-
-@query("stream_bitmap_distinct_live", oracle=_bitmap_live_oracle())
+@query(
+    "stream_bitmap_distinct_live",
+    oracle=_borrowed_oracle("analytics", "agg_bitmap_distinct"),
+)
 def stream_bitmap_distinct_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT streaming distinct counts by bitmap state — the live twin
     of agg_bitmap_distinct and the exact counterpart to
@@ -1652,15 +1622,10 @@ def stream_market_basket_bounded(
     )
 
 
-def _mb_live_oracle() -> str:
-    from flod_spark.catalog.analytics import orders_market_basket  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["orders_market_basket"]
-
-
-@query("stream_market_basket_live", oracle=_mb_live_oracle())
+@query(
+    "stream_market_basket_live",
+    oracle=_borrowed_oracle("analytics", "orders_market_basket"),
+)
 def stream_market_basket_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'Frequently bought together' maintained LIVE — completed baskets
     arrive as a stream (replayed in order-key order, one row per
@@ -1727,25 +1692,6 @@ def stream_market_basket_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- sharded per-user detector folds (r17, guide §4) -----------------
-#
-# The five per-user detector gates (ewma / cusum / drawdown / rsi /
-# bollinger) used one applyInPandasWithState GROUP PER USER: ~1.5k
-# Python fn invocations + per-key state round trips per trigger, each
-# over a ~17-row frame — the Python-call machinery, not the arithmetic,
-# was the cost (the r16 verdict's top item; _novelty_claim_fn's 8-shard
-# pattern is the proven fix in this codebase). Each gate now groups by
-# pmod(xxhash64(user_id), _DET_SHARDS); per-shard state is the PACKED
-# per-user state of every user the shard owns (sorted int64 user ids +
-# aligned int64 blobs, serialized as raw bytes — the novelty blob
-# discipline), and the fold is vectorized ACROSS users (pandas groupby
-# cumops / zero-padded concat convolutions). Per-user arithmetic is
-# identical op for op — the same int64 operations in the same order,
-# seeded with the same carried values — so every emitted row is
-# bit-identical and the gates keep their batch-window oracles VERBATIM.
-# Results are _DET_SHARDS-independent (each user's fold never crosses
-# shards); 8 matches the novelty gates and the drain partition pin.
-
 _DET_SHARDS = 8
 
 
@@ -1753,18 +1699,49 @@ def _det_shard(col):
     return F.pmod(F.xxhash64(col), F.lit(_DET_SHARDS)).alias("shard")
 
 
-def _det_drain(pdfs, vcol):
-    """Drain one SHARD's chunks sorted by (user_id, us, event_id) —
-    each user's rows are contiguous and in the exact (us, event_id)
-    order the per-key form processed them in."""
-    return _drain_sorted(
-        pdfs,
-        ("user_id", "event_id", "us", vcol),
-        keys=("user_id", "us", "event_id"),
-    )
+def _detector_stream(spark: SparkSession, sf_dir: str, fold, value) -> DataFrame:
+    """The one stream runner of the five per-user detector gates
+    (ewma, cusum, drawdown, rsi, bollinger): events -> quantized
+    ``value`` (aliased to the fold's value column) -> spool ->
+    watermark -> shard select -> ``fold`` (a
+    streaming/packfold.py::packed_user_fold) -> drain.
+    Returns the drained emissions; each gate finishes batch-side.
+
+    Each gate groups by pmod(xxhash64(user_id), _DET_SHARDS) and keeps
+    every user's state packed inside its shard's row, so a trigger
+    costs one Python call per shard instead of one per user. The
+    per-user arithmetic is identical op for op (the same int64
+    operations in the same order, seeded with the same carried
+    values), so every emitted row is bit-identical to a per-user fold
+    and the gates keep their batch-window oracles verbatim. Results do
+    not depend on _DET_SHARDS, since a user's fold never crosses
+    shards; 8 matches the novelty gates and the drain partition pin."""
+    ev = load(spark, sf_dir, "events")
+    feed = ev.select("event_id", "user_id", "ts", value.alias(fold.value))
+    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
+        src = (
+            with_event_time(sp.stream)
+            .withWatermark("ts", _WATERMARK)
+            .select(
+                _det_shard("user_id"),
+                "user_id",
+                "event_id",
+                ts_micros("ts").alias("us"),
+                fold.value,
+            )
+        )
+        out = src.groupBy("shard").applyInPandasWithState(
+            fold,
+            outputStructType=fold.output_ddl,
+            stateStructType=fold.state_ddl,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        return drain(out, spark, output_mode="update")
 
 
-def _ewma_shard_fn(key, pdfs, state):
+@packed_user_fold("xq", {"hcnt": 1, "h": _EWMA_H - 1}, ("num", "den"))
+def _ewma_shard_fn(x, segs, found, pos, shc, shist):
     """Per-SHARD EWMA fold, vectorized across users: state = packed
     (users, hist length, last H-1 values per user); each user's block
     in one concatenated array is [H-1 zeros ++ carried hist ++ batch
@@ -1775,16 +1752,8 @@ def _ewma_shard_fn(key, pdfs, state):
     cumsum(W) clamped at the user-local frame length. All int64; each
     emitted (num, den) is bit-identical to the per-key fold's."""
     import numpy as np
-    import pandas as pd
 
-    from flod_spark.catalog.relational import _EWMA_H, _EWMA_W
-
-    su, shc, shist = _packed_get(state, (1, 1, _EWMA_H - 1))
-    b = _det_drain(pdfs, "xq")
-    uid = b["user_id"]
-    x = b["xq"]
-    starts, seg, uu, inner, lens = _segments(uid)
-    found, pos = _lookup(su, uu)
+    _, seg, _, inner, lens = segs
     hc = _gather(shc, pos, found)
     w = np.asarray(_EWMA_W, dtype="int64")
     pad = _EWMA_H - 1
@@ -1814,28 +1783,10 @@ def _ewma_shard_fn(key, pdfs, state):
     j = hc[seg] + inner
     den = np.cumsum(w)[np.minimum(j, _EWMA_H - 1)]
     hist2, hc2 = _take_last(cat, offs + pad, hc + lens, pad)
-    nu = _merge_packed(su, [shc, shist], uu, found, pos, [hc2, hist2])
-    state.update((nu[0].tobytes(), nu[1].tobytes(), nu[2].tobytes()))
-    yield pd.DataFrame(
-        {
-            "user_id": uid,
-            "event_id": b["event_id"],
-            "us": b["us"],
-            "num": num.astype("int64"),
-            "den": den.astype("int64"),
-        }
-    )
+    return (num, den), (hc2, hist2)
 
 
-def _ewma_live_oracle() -> str:
-    from flod_spark.catalog.relational import window_ewma  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["window_ewma"]
-
-
-@query("stream_ewma_live", oracle=_ewma_live_oracle())
+@query("stream_ewma_live", oracle=_borrowed_oracle("relational", "window_ewma"))
 def stream_ewma_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EWMA smoothing LIVE — window_ewma as a keyed stateful
     operator, the dashboard form that stamps every arriving event with
@@ -1854,31 +1805,8 @@ def stream_ewma_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     against local state, no join, no window, no shuffle beyond the
     key partitioning every stateful operator pays. The same operator
     seeded from a snapshot is the production warm-start."""
-    from flod_spark.io import ts_micros
-
-    ev = load(spark, sf_dir, "events")
     xq = (F.col("value").cast("decimal(18,6)") * F.lit(1000000)).cast("long")
-    feed = ev.select("event_id", "user_id", "ts", xq.alias("xq"))
-    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
-        src = (
-            with_event_time(sp.stream)
-            .withWatermark("ts", _WATERMARK)
-            .select(
-                _det_shard("user_id"),
-                "user_id",
-                "event_id",
-                ts_micros("ts").alias("us"),
-                "xq",
-            )
-        )
-        out = src.groupBy("shard").applyInPandasWithState(
-            _ewma_shard_fn,
-            outputStructType="user_id long, event_id long, us long, num long, den long",
-            stateStructType="users binary, hcnt binary, h binary",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(out, spark, output_mode="update")
+    got = _detector_stream(spark, sf_dir, _ewma_shard_fn, xq)
     return got.select(
         "event_id",
         "user_id",
@@ -1887,7 +1815,8 @@ def stream_ewma_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cusum_shard_fn(key, pdfs, state):
+@packed_user_fold("dq", {"pf": 1, "mn": 1}, ("cusum_us",))
+def _cusum_shard_fn(dq, segs, found, pos, spf, smn):
     """Per-SHARD CUSUM fold in EXACT integers, vectorized across users:
     state = packed (users, prefix sum, running min) in micros units;
     cusum_i = pf_i - min(0, runmin_i) — the clamp identity
@@ -1899,45 +1828,23 @@ def _cusum_shard_fn(key, pdfs, state):
     import numpy as np
     import pandas as pd
 
-    su, spf, smn = _packed_get(state, (1, 1, 1))
-    b = _det_drain(pdfs, "dq")
-    uid = b["user_id"]
-    dq = b["dq"]
-    starts, seg, uu, inner, lens = _segments(uid)
-    found, pos = _lookup(su, uu)
+    starts, seg, _, _, _ = segs
     pf0 = _gather(spf, pos, found)
-    f = pd.DataFrame({"u": uid, "v": dq})
+    f = pd.DataFrame({"u": seg, "v": dq})
     g = f.groupby("u", sort=False)
     pfs = g["v"].cumsum().to_numpy() + pf0[seg]
     f["p"] = pfs
     mns = f.groupby("u", sort=False)["p"].cummin().to_numpy()
-    if len(su):
+    if len(spf):
         # the carried running min clamps only users the state knows
         # (mn was None on a key's first batch in the per-key form)
         mns = np.where(found[seg], np.minimum(mns, _gather(smn, pos, found)[seg]), mns)
     cs = pfs - np.minimum(mns, 0)
-    ends = np.flatnonzero(np.concatenate([starts[1:], [True]])) if len(uid) else []
-    nu = _merge_packed(su, [spf, smn], uu, found, pos, [pfs[ends], mns[ends]])
-    state.update((nu[0].tobytes(), nu[1].tobytes(), nu[2].tobytes()))
-    yield pd.DataFrame(
-        {
-            "user_id": uid,
-            "event_id": b["event_id"],
-            "us": b["us"],
-            "cusum_us": cs.astype("int64"),
-        }
-    )
+    ends = np.flatnonzero(np.concatenate([starts[1:], [True]])) if len(dq) else []
+    return (cs,), (pfs[ends], mns[ends])
 
 
-def _cusum_live_oracle() -> str:
-    from flod_spark.catalog.relational import window_cusum  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["window_cusum"]
-
-
-@query("stream_cusum_live", oracle=_cusum_live_oracle())
+@query("stream_cusum_live", oracle=_borrowed_oracle("relational", "window_cusum"))
 def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DRIFT DETECTION LIVE — window_cusum as a keyed stateful
     operator, the alert-at-arrival form: state per user is TWO longs
@@ -1952,35 +1859,11 @@ def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector there is; no join, no window, no shuffle beyond the key
     partitioning. The production alarm (S > h) is a map on the
     emission stream."""
-    from flod_spark.catalog.relational import _CUSUM_K
-    from flod_spark.io import ts_micros
-
-    ev = load(spark, sf_dir, "events")
     dq = (
         (F.col("value").cast("decimal(18,6)") - F.lit(_CUSUM_K).cast("decimal(18,6)"))
         * F.lit(1000000)
     ).cast("long")
-    feed = ev.select("event_id", "user_id", "ts", dq.alias("dq"))
-    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
-        src = (
-            with_event_time(sp.stream)
-            .withWatermark("ts", _WATERMARK)
-            .select(
-                _det_shard("user_id"),
-                "user_id",
-                "event_id",
-                ts_micros("ts").alias("us"),
-                "dq",
-            )
-        )
-        out = src.groupBy("shard").applyInPandasWithState(
-            _cusum_shard_fn,
-            outputStructType="user_id long, event_id long, us long, cusum_us long",
-            stateStructType="users binary, pf binary, mn binary",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(out, spark, output_mode="update")
+    got = _detector_stream(spark, sf_dir, _cusum_shard_fn, dq)
     return got.select(
         "event_id",
         "user_id",
@@ -1989,7 +1872,8 @@ def stream_cusum_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _drawdown_shard_fn(key, pdfs, state):
+@packed_user_fold("xq", {"peak": 1, "mdd": 1}, ("dd_us", "mdd_us"))
+def _drawdown_shard_fn(x, segs, found, pos, speak, smdd):
     """Per-SHARD drawdown fold in EXACT integers, vectorized across
     users: state = packed (users, running peak, running max drawdown)
     in micros units. Per-user running maxes come from pandas groupby
@@ -2000,15 +1884,10 @@ def _drawdown_shard_fn(key, pdfs, state):
     import numpy as np
     import pandas as pd
 
-    su, speak, smdd = _packed_get(state, (1, 1, 1))
-    b = _det_drain(pdfs, "xq")
-    uid = b["user_id"]
-    x = b["xq"]
-    starts, seg, uu, inner, lens = _segments(uid)
-    found, pos = _lookup(su, uu)
+    starts, seg, _, _, _ = segs
     peak0 = _gather(speak, pos, found, default=np.iinfo("int64").min)
     mdd0 = _gather(smdd, pos, found)
-    f = pd.DataFrame({"u": uid, "v": x})
+    f = pd.DataFrame({"u": seg, "v": x})
     peaks = np.maximum(
         f.groupby("u", sort=False)["v"].cummax().to_numpy(), peak0[seg]
     )
@@ -2017,29 +1896,11 @@ def _drawdown_shard_fn(key, pdfs, state):
     mdds = np.maximum(
         f.groupby("u", sort=False)["d"].cummax().to_numpy(), mdd0[seg]
     )
-    ends = np.flatnonzero(np.concatenate([starts[1:], [True]])) if len(uid) else []
-    nu = _merge_packed(su, [speak, smdd], uu, found, pos, [peaks[ends], mdds[ends]])
-    state.update((nu[0].tobytes(), nu[1].tobytes(), nu[2].tobytes()))
-    yield pd.DataFrame(
-        {
-            "user_id": uid,
-            "event_id": b["event_id"],
-            "us": b["us"],
-            "dd_us": dd.astype("int64"),
-            "mdd_us": mdds.astype("int64"),
-        }
-    )
+    ends = np.flatnonzero(np.concatenate([starts[1:], [True]])) if len(x) else []
+    return (dd, mdds), (peaks[ends], mdds[ends])
 
 
-def _drawdown_live_oracle() -> str:
-    from flod_spark.catalog.relational import window_drawdown  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["window_drawdown"]
-
-
-@query("stream_drawdown_live", oracle=_drawdown_live_oracle())
+@query("stream_drawdown_live", oracle=_borrowed_oracle("relational", "window_drawdown"))
 def stream_drawdown_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DRAWDOWN LIVE — window_drawdown as a keyed stateful operator:
     state per user is TWO longs (running peak + running max drawdown,
@@ -2051,31 +1912,8 @@ def stream_drawdown_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: O(1) state per user, no join, no window — the live risk
     ticker next to stream_cusum_live's drift alarm."""
-    from flod_spark.io import ts_micros
-
-    ev = load(spark, sf_dir, "events")
     xq = (F.col("value").cast("decimal(18,6)") * F.lit(1000000)).cast("long")
-    feed = ev.select("event_id", "user_id", "ts", xq.alias("xq"))
-    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
-        src = (
-            with_event_time(sp.stream)
-            .withWatermark("ts", _WATERMARK)
-            .select(
-                _det_shard("user_id"),
-                "user_id",
-                "event_id",
-                ts_micros("ts").alias("us"),
-                "xq",
-            )
-        )
-        out = src.groupBy("shard").applyInPandasWithState(
-            _drawdown_shard_fn,
-            outputStructType="user_id long, event_id long, us long, dd_us long, mdd_us long",
-            stateStructType="users binary, peak binary, mdd binary",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(out, spark, output_mode="update")
+    got = _detector_stream(spark, sf_dir, _drawdown_shard_fn, xq)
     return got.select(
         "event_id",
         "user_id",
@@ -2131,15 +1969,10 @@ def _wsample_shard_fn(key, pdfs, state):
     )
 
 
-def _wsample_live_oracle() -> str:
-    from flod_spark.catalog.sampling import sample_weighted_k  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["sample_weighted_k"]
-
-
-@query("stream_weighted_sample_live", oracle=_wsample_live_oracle())
+@query(
+    "stream_weighted_sample_live",
+    oracle=_borrowed_oracle("sampling", "sample_weighted_k"),
+)
 def stream_weighted_sample_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHTED RESERVOIR on the live path — sample_weighted_k
     maintained incrementally, which is priority sampling's designed
@@ -2205,7 +2038,10 @@ def stream_weighted_sample_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rsi_shard_fn(key, pdfs, state):
+@packed_user_fold(
+    "xq", {"prev": 1, "dcnt": 1, "dh": _RSI_N - 1}, ("gain", "loss", "nd")
+)
+def _rsi_shard_fn(x, segs, found, pos, sprev, sdc, sdh):
     """Per-SHARD RSI fold in EXACT integers, vectorized across users:
     state = packed (users, previous quantized value, diff count, last
     _RSI_N - 1 diffs per user). Each user's diff block in one
@@ -2219,14 +2055,7 @@ def _rsi_shard_fn(key, pdfs, state):
     import numpy as np
     import pandas as pd
 
-    from flod_spark.catalog.relational import _RSI_N
-
-    su, sprev, sdc, sdh = _packed_get(state, (1, 1, 1, _RSI_N - 1))
-    b = _det_drain(pdfs, "xq")
-    uid = b["user_id"]
-    x = b["xq"]
-    starts, seg, uu, inner, lens = _segments(uid)
-    found, pos = _lookup(su, uu)
+    starts, seg, uu, inner, lens = segs
     dc = _gather(sdc, pos, found)
     prev0 = _gather(sprev, pos, found)
     foundi = found.astype("int64")
@@ -2286,31 +2115,12 @@ def _rsi_shard_fn(key, pdfs, state):
     gains = _pref(posi, e, base) - _pref(posi, s, base)
     losses = -(_pref(negi, e, base) - _pref(negi, s, base))
     nds = e - s
-    ends = np.flatnonzero(np.concatenate([starts[1:], [True]])) if len(uid) else []
+    ends = np.flatnonzero(np.concatenate([starts[1:], [True]])) if len(x) else []
     dh2, dc2 = _take_last(fd, offs, blk, _RSI_N - 1)
-    nu = _merge_packed(su, [sprev, sdc, sdh], uu, found, pos, [x[ends], dc2, dh2])
-    state.update((nu[0].tobytes(), nu[1].tobytes(), nu[2].tobytes(), nu[3].tobytes()))
-    yield pd.DataFrame(
-        {
-            "user_id": uid,
-            "event_id": b["event_id"],
-            "us": b["us"],
-            "gain": gains.astype("int64"),
-            "loss": losses.astype("int64"),
-            "nd": nds.astype("int64"),
-        }
-    )
+    return (gains, losses, nds), (x[ends], dc2, dh2)
 
 
-def _rsi_live_oracle() -> str:
-    from flod_spark.catalog.relational import window_rsi  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["window_rsi"]
-
-
-@query("stream_rsi_live", oracle=_rsi_live_oracle())
+@query("stream_rsi_live", oracle=_borrowed_oracle("relational", "window_rsi"))
 def stream_rsi_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RSI LIVE — the momentum oscillator at arrival, completing the
     live detector family (EWMA smoothing, CUSUM drift, drawdown risk,
@@ -2325,31 +2135,8 @@ def stream_rsi_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: O(_RSI_N) longs of state per user; no join, no window, no
     shuffle beyond the key partitioning — the alert path a trading /
     SLO dashboard actually serves."""
-    from flod_spark.io import ts_micros
-
-    ev = load(spark, sf_dir, "events")
     xq = (F.col("value").cast("decimal(18,6)") * F.lit(1000000)).cast("long")
-    feed = ev.select("event_id", "user_id", "ts", xq.alias("xq"))
-    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
-        src = (
-            with_event_time(sp.stream)
-            .withWatermark("ts", _WATERMARK)
-            .select(
-                _det_shard("user_id"),
-                "user_id",
-                "event_id",
-                ts_micros("ts").alias("us"),
-                "xq",
-            )
-        )
-        out = src.groupBy("shard").applyInPandasWithState(
-            _rsi_shard_fn,
-            outputStructType="user_id long, event_id long, us long, gain long, loss long, nd long",
-            stateStructType="users binary, prev binary, dcnt binary, dh binary",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(out, spark, output_mode="update")
+    got = _detector_stream(spark, sf_dir, _rsi_shard_fn, xq)
     rsi = (
         (F.lit(100) * F.col("gain")).cast("double")
         / F.lit(1000000.0)
@@ -2366,7 +2153,10 @@ def stream_rsi_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _boll_shard_fn(key, pdfs, state):
+@packed_user_fold(
+    "xq", {"seen": 1, "hcnt": 1, "h": _BOLL_W - 1}, ("n", "sx", "ssq")
+)
+def _boll_shard_fn(x, segs, found, pos, sseen, shc, shist):
     """Per-SHARD Bollinger fold in EXACT integers, vectorized across
     users: state = packed (users, events seen, hist length, last W-1
     quantized values per user). Each user's block in one concatenated
@@ -2378,16 +2168,8 @@ def _boll_shard_fn(key, pdfs, state):
     int64 headroom. Each (n, sx, ssq) is bit-identical to the per-key
     fold's; the decimal variance identity runs batch-side as before."""
     import numpy as np
-    import pandas as pd
 
-    from flod_spark.catalog.relational import _BOLL_W
-
-    su, sseen, shc, shist = _packed_get(state, (1, 1, 1, _BOLL_W - 1))
-    b = _det_drain(pdfs, "xq")
-    uid = b["user_id"]
-    x = b["xq"]
-    starts, seg, uu, inner, lens = _segments(uid)
-    found, pos = _lookup(su, uu)
+    _, seg, _, inner, lens = segs
     seen0 = _gather(sseen, pos, found)
     hc = _gather(shc, pos, found)
     pad = _BOLL_W - 1
@@ -2414,31 +2196,13 @@ def _boll_shard_fn(key, pdfs, state):
     ssq = swq[widx].sum(axis=1)
     n = np.minimum(seen0[seg] + 1 + inner, _BOLL_W)
     hist2, hc2 = _take_last(cat, offs + pad, hc + lens, pad)
-    nu = _merge_packed(
-        su, [sseen, shc, shist], uu, found, pos, [seen0 + lens, hc2, hist2]
-    )
-    state.update((nu[0].tobytes(), nu[1].tobytes(), nu[2].tobytes(), nu[3].tobytes()))
-    yield pd.DataFrame(
-        {
-            "user_id": uid,
-            "event_id": b["event_id"],
-            "us": b["us"],
-            "n": n.astype("int64"),
-            "sx": sx.astype("int64"),
-            "ssq": ssq.astype("int64"),
-        }
-    )
+    return (n, sx, ssq), (seen0 + lens, hc2, hist2)
 
 
-def _boll_live_oracle() -> str:
-    from flod_spark.catalog.relational import window_bollinger  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["window_bollinger"]
-
-
-@query("stream_bollinger_live", oracle=_boll_live_oracle())
+@query(
+    "stream_bollinger_live",
+    oracle=_borrowed_oracle("relational", "window_bollinger"),
+)
 def stream_bollinger_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOLLINGER BANDS LIVE — the volatility envelope at arrival,
     closing the live detector family (EWMA, CUSUM, drawdown, RSI,
@@ -2454,31 +2218,8 @@ def stream_bollinger_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle beyond the key partitioning; the per-batch work is two
     sliding-window row-sums (numpy, zero Python loops). The live
     'price outside the band' alert is a map on the emission stream."""
-    from flod_spark.io import ts_micros
-
-    ev = load(spark, sf_dir, "events")
     xq = (F.col("value").cast("decimal(18,6)") * F.lit(1000000)).cast("long")
-    feed = ev.select("event_id", "user_id", "ts", xq.alias("xq"))
-    with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
-        src = (
-            with_event_time(sp.stream)
-            .withWatermark("ts", _WATERMARK)
-            .select(
-                _det_shard("user_id"),
-                "user_id",
-                "event_id",
-                ts_micros("ts").alias("us"),
-                "xq",
-            )
-        )
-        out = src.groupBy("shard").applyInPandasWithState(
-            _boll_shard_fn,
-            outputStructType="user_id long, event_id long, us long, n long, sx long, ssq long",
-            stateStructType="users binary, seen binary, hcnt binary, h binary",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(out, spark, output_mode="update")
+    got = _detector_stream(spark, sf_dir, _boll_shard_fn, xq)
     var_num = (
         F.col("n").cast("decimal(3,0)") * F.col("ssq").cast("decimal(30,0)")
         - F.col("sx").cast("decimal(19,0)") * F.col("sx").cast("decimal(19,0)")
@@ -2532,15 +2273,10 @@ def _tok_budget_live_fn(key, pdfs, state):
     )
 
 
-def _tok_budget_live_oracle() -> str:
-    from flod_spark.catalog.sampling import sample_token_budget_sharded  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["sample_token_budget_sharded"]
-
-
-@query("stream_token_budget_live", oracle=_tok_budget_live_oracle())
+@query(
+    "stream_token_budget_live",
+    oracle=_borrowed_oracle("sampling", "sample_token_budget_sharded"),
+)
 def stream_token_budget_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKEN-BUDGET ADMISSION LIVE — sample_token_budget_sharded as an
     ingestion-time controller, the form a training pipeline actually
@@ -2661,6 +2397,60 @@ def _ttl_claim_fold(ks, lasts, mx, bk, bus, ttl):
     return claim, mk[keep], ml[keep], int(mx)
 
 
+def _ttl_shard_fold(kdtype, cols, keys, ttl):
+    """Declare a per-shard TTL claim gate over _ttl_claim_fold;
+    decorates its ``emit(b, claim)`` and returns the ``(key, pdfs,
+    state)`` function. State is (keys as ``kdtype``, last-seen times,
+    max time), seeded with _TTL_NONE. The batch drains ``cols`` sorted
+    by ``keys`` = (claim key, time, *tiebreaks) — the (key, time)
+    lexsort the fold requires — and folds with horizon ``ttl``.
+    ``emit`` turns the drained batch and its claim mask into the output
+    frame. The returned function keeps emit's name and module, so it
+    pickles by reference."""
+    kcol, tcol = keys[:2]
+
+    def deco(emit):
+        @functools.wraps(emit)
+        def fold(key, pdfs, state):
+            import numpy as np
+
+            ks, ls, mx = state.get if state.exists else ((), (), _TTL_NONE)
+            b = _drain_sorted(pdfs, cols, keys=keys)
+            claim, ks2, ls2, mx2 = _ttl_claim_fold(
+                np.asarray(ks, dtype=kdtype),
+                np.asarray(ls, dtype="int64"),
+                mx,
+                b[kcol],
+                b[tcol],
+                ttl,
+            )
+            state.update((ks2.tolist(), ls2.tolist(), mx2))
+            yield emit(b, claim)
+
+        return fold
+
+    return deco
+
+
+def _novelty_frac(docs, g, got):
+    """The novelty gates' batch-side finish: per doc, its gram count
+    (from the gram table ``g``), its novel-gram count (the drained
+    per-doc claim counts ``got``) and their ratio — ngram_novelty's
+    output shape, zero-filled for docs with no grams or no claims."""
+    nv = got.groupBy("doc_id").agg(F.sum("n").alias("n_novel"))
+    ng = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
+    base = docs.select("doc_id")
+    j = base.join(ng, "doc_id", "left").join(nv, "doc_id", "left")
+    ngc = F.coalesce("n_grams", F.lit(0)).cast("long")
+    nvc = F.coalesce("n_novel", F.lit(0)).cast("long")
+    return j.select(
+        "doc_id",
+        ngc.alias("n_grams"),
+        nvc.alias("n_novel"),
+        (nvc.cast("double") / F.nullif(ngc, F.lit(0))).alias("novelty_frac"),
+    )
+
+
 def _novelty_claim_fn(key, pdfs, state):
     """Per-shard gram claim state: state = the gram hashes this shard
     has ever seen, carried as ONE packed binary blob of 16-byte md5s
@@ -2701,15 +2491,7 @@ def _novelty_claim_fn(key, pdfs, state):
     )
 
 
-def _novelty_live_oracle() -> str:
-    from flod_spark.catalog.text import ngram_novelty  # noqa: F401
-
-    from flod_spark.registry import ORACLES
-
-    return ORACLES["ngram_novelty"]
-
-
-@query("stream_ngram_novelty_live", oracle=_novelty_live_oracle())
+@query("stream_ngram_novelty_live", oracle=_borrowed_oracle("text", "ngram_novelty"))
 def stream_ngram_novelty_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-GRAM NOVELTY at INGESTION — ngram_novelty as a live admission
     signal: docs stream in (replayed in doc_id order, the batch form's
@@ -2760,18 +2542,7 @@ def stream_ngram_novelty_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         got = drain(claims, spark, output_mode="update")
-    nv = got.groupBy("doc_id").agg(F.sum("n").alias("n_novel"))
-    ng = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
-    base = docs.select("doc_id")
-    j = base.join(ng, "doc_id", "left").join(nv, "doc_id", "left")
-    ngc = F.coalesce("n_grams", F.lit(0)).cast("long")
-    nvc = F.coalesce("n_novel", F.lit(0)).cast("long")
-    return j.select(
-        "doc_id",
-        ngc.alias("n_grams"),
-        nvc.alias("n_novel"),
-        (nvc.cast("double") / F.nullif(ngc, F.lit(0))).alias("novelty_frac"),
-    )
+    return _novelty_frac(docs, g, got)
 
 
 # Novelty horizon for the BOUNDED claim state: a gram is novel when its
@@ -2780,7 +2551,8 @@ def stream_ngram_novelty_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NOV_TTL_DOCS = 20
 
 
-def _novelty_ttl_fn(key, pdfs, state):
+@_ttl_shard_fold("object", ("h", "doc_id"), ("h", "doc_id"), _NOV_TTL_DOCS)
+def _novelty_ttl_fn(b, claim):
     """Per-shard BOUNDED gram claim state: _ttl_claim_fold over
     (gram hash, doc_id) — state holds only the grams seen within the
     last _NOV_TTL_DOCS docs (last-seen per gram + the shard's max
@@ -2789,19 +2561,6 @@ def _novelty_ttl_fn(key, pdfs, state):
     import numpy as np
     import pandas as pd
 
-    if state.exists:
-        hs_l, ls_l, mx = state.get
-        hs = np.asarray(hs_l, dtype="object")
-        ls = np.asarray(ls_l, dtype="int64")
-    else:
-        hs = np.empty(0, dtype="object")
-        ls = np.empty(0, dtype="int64")
-        mx = _TTL_NONE
-    b = _drain_sorted(pdfs, ("h", "doc_id"), keys=("h", "doc_id"))
-    claim, hs2, ls2, mx2 = _ttl_claim_fold(
-        hs, ls, mx, b["h"], b["doc_id"], _NOV_TTL_DOCS
-    )
-    state.update((hs2.tolist(), ls2.tolist(), mx2))
     # per-doc claim COUNTS, not claim rows (the _novelty_claim_fn r16
     # rationale: the drain only aggregates count(*) per doc_id)
     d = b["doc_id"][claim]
@@ -2810,9 +2569,7 @@ def _novelty_ttl_fn(key, pdfs, state):
         if len(d)
         else (np.empty(0, dtype="int64"), np.empty(0, dtype="int64"))
     )
-    yield pd.DataFrame(
-        {"doc_id": docs.astype("int64"), "n": counts.astype("int64")}
-    )
+    return pd.DataFrame({"doc_id": docs.astype("int64"), "n": counts.astype("int64")})
 
 
 def _novelty_bounded_oracle() -> str:
@@ -2882,18 +2639,7 @@ def stream_ngram_novelty_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         got = drain(claims, spark, output_mode="update")
-    nv = got.groupBy("doc_id").agg(F.sum("n").alias("n_novel"))
-    ng = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
-    base = docs.select("doc_id")
-    j = base.join(ng, "doc_id", "left").join(nv, "doc_id", "left")
-    ngc = F.coalesce("n_grams", F.lit(0)).cast("long")
-    nvc = F.coalesce("n_novel", F.lit(0)).cast("long")
-    return j.select(
-        "doc_id",
-        ngc.alias("n_grams"),
-        nvc.alias("n_novel"),
-        (nvc.cast("double") / F.nullif(ngc, F.lit(0))).alias("novelty_frac"),
-    )
+    return _novelty_frac(docs, g, got)
 
 
 # Duplicate horizon for the BOUNDED streaming dedup: an arrival is
@@ -2901,36 +2647,22 @@ def stream_ngram_novelty_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DEDUP_TTL_US = 2 * 60 * 60 * 1_000_000
 
 
-def _dedup_ttl_fn(key, pdfs, state):
+@_ttl_shard_fold(
+    "object",
+    ("k", "us", "event_id", "user_id", "event_type"),
+    ("k", "us", "event_id"),
+    _DEDUP_TTL_US,
+)
+def _dedup_ttl_fn(b, claim):
     """Per-shard BOUNDED first-arrival state: _ttl_claim_fold over
     (composite key, event time) — the TTL retrofit of
     stream_dedup_live's unbounded per-key claim state. Rows sort by
     (k, us, event_id); equal-time duplicates have gap 0 <= ttl and
     drop deterministically regardless of tiebreak order."""
-    import numpy as np
     import pandas as pd
 
-    if state.exists:
-        ks_l, ls_l, mx = state.get
-        ks = np.asarray(ks_l, dtype="object")
-        ls = np.asarray(ls_l, dtype="int64")
-    else:
-        ks = np.empty(0, dtype="object")
-        ls = np.empty(0, dtype="int64")
-        mx = _TTL_NONE
-    b = _drain_sorted(
-        pdfs, ("k", "us", "event_id", "user_id", "event_type"),
-        keys=("k", "us", "event_id"),
-    )
-    claim, ks2, ls2, mx2 = _ttl_claim_fold(ks, ls, mx, b["k"], b["us"], _DEDUP_TTL_US)
-    state.update((ks2.tolist(), ls2.tolist(), mx2))
-    yield pd.DataFrame(
-        {
-            "user_id": b["user_id"][claim],
-            "event_type": b["event_type"][claim],
-            "event_id": b["event_id"][claim],
-            "us": b["us"][claim],
-        }
+    return pd.DataFrame(
+        {c: b[c][claim] for c in ("user_id", "event_type", "event_id", "us")}
     )
 
 
@@ -2970,8 +2702,6 @@ def stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream length, the 100 TB regime where the unbounded form's state
     store becomes the bottleneck; per-batch work is one vectorized
     fold, no per-event Python."""
-    from flod_spark.io import ts_micros
-
     ev = load(spark, sf_dir, "events")
     with spool(spark, ev, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
         k = F.concat_ws("|", F.col("user_id").cast("string"), F.col("event_type"))
@@ -3010,7 +2740,8 @@ def stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MH_TTL_DOCS = 40
 
 
-def _mh_ttl_fn(key, pdfs, state):
+@_ttl_shard_fold("object", ("k", "doc_id", "band"), ("k", "doc_id"), _MH_TTL_DOCS)
+def _mh_ttl_fn(b, claim):
     """Per-shard BOUNDED band-claim state: _ttl_claim_fold over
     ((band|signature) composite key, doc_id) — the TTL retrofit of
     stream_dedup_minhash_live's unbounded (band, bs) claim state at
@@ -3019,25 +2750,9 @@ def _mh_ttl_fn(key, pdfs, state):
     docs; a band claims when its previous occurrence is further back
     (or absent). (k, doc_id) is unique — one signature per band per
     doc — so no tie handling is needed."""
-    import numpy as np
     import pandas as pd
 
-    if state.exists:
-        ks_l, ls_l, mx = state.get
-        ks = np.asarray(ks_l, dtype="object")
-        ls = np.asarray(ls_l, dtype="int64")
-    else:
-        ks = np.empty(0, dtype="object")
-        ls = np.empty(0, dtype="int64")
-        mx = _TTL_NONE
-    b = _drain_sorted(pdfs, ("k", "doc_id", "band"), keys=("k", "doc_id"))
-    claim, ks2, ls2, mx2 = _ttl_claim_fold(
-        ks, ls, mx, b["k"], b["doc_id"], _MH_TTL_DOCS
-    )
-    state.update((ks2.tolist(), ls2.tolist(), mx2))
-    yield pd.DataFrame(
-        {"doc_id": b["doc_id"][claim], "band": b["band"][claim]}
-    )
+    return pd.DataFrame({"doc_id": b["doc_id"][claim], "band": b["band"][claim]})
 
 
 def _dedup_minhash_bounded_oracle() -> str:
@@ -3134,7 +2849,8 @@ def stream_dedup_minhash_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SS_TTL_DOCS = 25
 
 
-def _ss_ttl_fn(key, pdfs, state):
+@_ttl_shard_fold("int64", ("h", "doc_id", "p"), ("h", "doc_id", "p"), _SS_TTL_DOCS)
+def _ss_ttl_fn(b, claim):
     """Per-shard BOUNDED anchor-claim state: _ttl_claim_fold over
     (anchor hash, doc_id) at ANCHOR granularity — the TTL retrofit of
     stream_dedup_substring_live's unbounded anchor-hash claim state
@@ -3144,23 +2860,9 @@ def _ss_ttl_fn(key, pdfs, state):
     shifted-equality over int64 arrays). Rows sort (h, doc_id, p), so
     a hash repeating inside one doc claims at min p and suppresses the
     rest (gap 0) — the oracle's (doc_id, p) LAG order."""
-    import numpy as np
     import pandas as pd
 
-    if state.exists:
-        ks_l, ls_l, mx = state.get
-        ks = np.asarray(ks_l, dtype="int64")
-        ls = np.asarray(ls_l, dtype="int64")
-    else:
-        ks = np.empty(0, dtype="int64")
-        ls = np.empty(0, dtype="int64")
-        mx = _TTL_NONE
-    b = _drain_sorted(pdfs, ("h", "doc_id", "p"), keys=("h", "doc_id", "p"))
-    claim, ks2, ls2, mx2 = _ttl_claim_fold(
-        ks, ls, mx, b["h"], b["doc_id"], _SS_TTL_DOCS
-    )
-    state.update((ks2.tolist(), ls2.tolist(), mx2))
-    yield pd.DataFrame({"doc_id": b["doc_id"][claim], "p": b["p"][claim]})
+    return pd.DataFrame({"doc_id": b["doc_id"][claim], "p": b["p"][claim]})
 
 
 def _dedup_substring_bounded_oracle() -> str:

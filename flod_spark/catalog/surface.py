@@ -12,7 +12,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flod_spark.io import load
+from flod_spark.io import load, serve_and_cleanup
 from flod_spark.registry import query
 from flod_spark.streaming.gate import drain, spool
 
@@ -810,8 +810,6 @@ def scan_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage unless projected on. Archives are one-file-one-task, so
     shard archives to ~100 MB-1 GB for parallelism, exactly how WARC
     corpora ship."""
-    from flod_spark.io import serve_and_cleanup
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     adir = tempfile.mkdtemp(prefix="flod_arch_")
     _pack_archive_fixture(docs, adir)
@@ -861,7 +859,7 @@ def sink_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = pack_tar_shards(docs, out_dir).collect()  # one row per shard
     assert all(os.path.getsize(r.path) == r.n_bytes for r in manifest)
     raw = spark.read.format("binaryFile").load(out_dir)
-    return archive_member_rows(raw)
+    return serve_and_cleanup(archive_member_rows(raw), out_dir)
 
 
 @query("stream_archive_live", oracle=_archive_oracle())
@@ -1122,7 +1120,7 @@ def sink_warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = pack_warc_shards(docs, out_dir).collect()  # one row per shard
     assert all(os.path.getsize(r.path) == r.n_bytes for r in manifest)
     raw = spark.read.format("binaryFile").load(out_dir)
-    return archive_member_rows(raw)
+    return serve_and_cleanup(archive_member_rows(raw), out_dir)
 
 
 @query(
@@ -1169,7 +1167,9 @@ def stream_sink_tar_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     with spool(spark, timed, "ts", n_batches=4) as sp:
         drain(sp.stream.select("doc_id", "text"), spark, foreach_batch=stream_pack_tar_shards(out))
     raw = spark.read.format("binaryFile").load(out)
-    return archive_member_rows(raw).select("member", "n_bytes", "content_md5")
+    return serve_and_cleanup(
+        archive_member_rows(raw).select("member", "n_bytes", "content_md5"), out
+    )
 
 
 @query(
@@ -1242,7 +1242,9 @@ def stream_curate_loop_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drain(clean, spark, foreach_batch=stream_pack_tar_shards(out, shard_docs=100))
     raw = spark.read.format("binaryFile").load(out)
-    return archive_member_rows(raw).select("member", "n_bytes", "content_md5")
+    return serve_and_cleanup(
+        archive_member_rows(raw).select("member", "n_bytes", "content_md5"), out
+    )
 
 
 def pack_wds_shards(
@@ -1377,8 +1379,6 @@ def scan_wds_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("ext") == "img", F.col("content"))).alias("img"),
     )
     js = F.col("js").cast("string")
-    from flod_spark.io import serve_and_cleanup
-
     return serve_and_cleanup(
         g.select(
             F.regexp_extract("stem", r"s_(\d+)", 1).cast("long").alias("sample_id"),
@@ -1610,7 +1610,9 @@ def scan_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("missing|"), F.col("id").cast("string")).cast("binary")
         ).alias("key"),
     )
-    return bloom_lookup(spark, ddir, bdir, present.unionByName(absent))
+    return serve_and_cleanup(
+        bloom_lookup(spark, ddir, bdir, present.unionByName(absent)), ddir, bdir
+    )
 
 
 def wds_assemble_members(raw: DataFrame) -> DataFrame:
@@ -1807,8 +1809,6 @@ def crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = archive_member_rows(raw, keep_content=True)
     ext = _crawl_extract_quality(members)
     w = Window.partitionBy("fp")
-    from flod_spark.io import serve_and_cleanup
-
     return serve_and_cleanup(
         ext.withColumn("admitted", F.col("doc_id") == F.min("doc_id").over(w)),
         out_dir,
@@ -2077,8 +2077,6 @@ def stream_crawl_claims_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly reconciliation share ONE durable state."""
     import os
 
-    from flod_spark.io import serve_and_cleanup
-
     docs = load(spark, sf_dir, "documents")
     n_docs = docs.count()
     shard_docs = max(1, -(-n_docs // 5))
@@ -2186,8 +2184,6 @@ def crawl_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_fp_claim_table,
         compact_claim_table,
     )
-    from flod_spark.io import serve_and_cleanup
-
     docs = load(spark, sf_dir, "documents")
     mm = docs.agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")).first()
     mid = (mm.mn + mm.mx) // 2

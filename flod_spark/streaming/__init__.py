@@ -10,6 +10,10 @@ time; Spark's model adds event time + watermarks. This package provides:
             temp dir it owns (and reads the order column's max from the
             spool's footers); drain() runs a stream dry into a memory
             sink or a foreachBatch function
+- packfold: keyed state packed per hash shard (sorted int64 keys +
+            aligned int64 blobs) and the one per-user fold seam,
+            packed_user_fold — a gate declares its value column, state
+            fields and outputs, and writes only its step arithmetic
 - windows:  tumbling / sliding / session event-time windows with
             watermarks (batch twins in catalog/streaming_batch.py)
 - take:     stateful streaming take(n) — flod's short-circuit semantics

@@ -14,10 +14,18 @@ Layout conventions:
 - every field is int64; a field of width w > 1 is a left-aligned
   zero-padded (n_keys, w) history matrix with a separate count field;
 - `_merge_packed` keeps the key array sorted so `_lookup` stays a
-  searchsorted.
+  searchsorted;
+- `_packed_put` writes the state back as each field's raw bytes, in
+  field order.
+
+`packed_user_fold` is the one per-user fold seam over this codec: a gate
+declares its value column, state fields and output columns, and writes
+only the step arithmetic.
 """
 
 from __future__ import annotations
+
+import functools
 
 
 def _packed_get(state, widths):
@@ -38,6 +46,12 @@ def _packed_get(state, widths):
         )
         out.append(a.reshape(-1, w) if w > 1 else a)
     return out
+
+
+def _packed_put(state, arrays):
+    """Write a shard's packed state: each array's raw int64 bytes, in
+    field order (the layout `_packed_get` reads back)."""
+    state.update(tuple(a.tobytes() for a in arrays))
 
 
 def _segments(uid):
@@ -150,9 +164,9 @@ def _drain_sorted(pdfs, cols, keys=("us", "event_id")):
     chunks = list(pdfs)
     if not chunks:
         # Timeout-only invocation (EventTimeTimeout callers get zero
-        # chunks): empty arrays, not pd.concat([]) which raises — the
-        # _fold_sessions pattern. Current callers are all NoTimeout,
-        # but any future timeout-driven caller hits this path.
+        # chunks): empty arrays, not pd.concat([]) which raises. Current
+        # callers are all NoTimeout, but any future timeout-driven
+        # caller hits this path.
         return {c: np.empty(0, dtype=object) for c in cols}
     pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
     arrs = {c: pdf[c].to_numpy() for c in cols}
@@ -160,3 +174,56 @@ def _drain_sorted(pdfs, cols, keys=("us", "event_id")):
     if not np.array_equal(order, np.arange(len(order))):
         arrs = {c: a.take(order) for c, a in arrs.items()}
     return arrs
+
+
+_FOLD_COLS = ("user_id", "event_id", "us")
+
+
+def packed_user_fold(value, fields, outputs):
+    """Declare a per-user fold over a shard's packed state; decorates
+    its ``step`` and returns the ``(key, pdfs, state)`` function that
+    applyInPandasWithState calls once per shard per trigger.
+
+    ``value`` is the int64 value column, ``fields`` maps each state
+    field to its width (after the leading ``users`` key field) and
+    ``outputs`` names the int64 columns the step emits. The fold drains
+    the shard sorted by (user_id, us, event_id), so each user's rows are
+    contiguous and in the order a per-user fold would see them, then
+    calls ``step(x, segs, found, pos, *carried)`` with the values, the
+    `_segments` tuple, the `_lookup` of the batch users in state and the
+    carried packed fields. The step returns ``(output columns, new
+    per-user field values)``; the fold merges the new values into state
+    and yields ``user_id, event_id, us`` plus the outputs.
+
+    The returned function keeps the step's name and module, so it
+    pickles by reference like any module-level function, and carries
+    its schemas as ``value``, ``state_ddl`` and ``output_ddl``."""
+    widths = tuple(fields.values())
+
+    def deco(step):
+        @functools.wraps(step)
+        def fold(key, pdfs, state):
+            import pandas as pd
+
+            su, *olds = _packed_get(state, (1, *widths))
+            b = _drain_sorted(
+                pdfs, (*_FOLD_COLS, value), keys=("user_id", "us", "event_id")
+            )
+            segs = _segments(b["user_id"])
+            uu = segs[2]
+            found, pos = _lookup(su, uu)
+            cols, news = step(b[value], segs, found, pos, *olds)
+            _packed_put(state, _merge_packed(su, olds, uu, found, pos, news))
+            yield pd.DataFrame(
+                {
+                    **{c: b[c] for c in _FOLD_COLS},
+                    **{c: v.astype("int64") for c, v in zip(outputs, cols)},
+                }
+            )
+
+        fold.value = value
+        fold.state_ddl = ", ".join(f"{f} binary" for f in ("users", *fields))
+        fold.output_ddl = ", ".join(f"{c} long" for c in (*_FOLD_COLS, *outputs))
+        return fold
+
+    return deco

@@ -38,50 +38,6 @@ from flod_spark.streaming.windows import with_event_time
 GAP_US = 30 * 60 * 1_000_000
 
 
-def _fold_sessions(pdfs, start, last, n, gap_us):
-    """Vectorized session fold over one key's micro-batch (round-10
-    machinery diet — this replaced a per-event Python loop over the
-    sorted timestamps): sessions are the maximal runs of the GLOBALLY
-    sorted event times with consecutive gaps <= gap_us, found with one
-    np.diff + flatnonzero; the carried open session either extends the
-    first run (gap <= gap_us) or closes ahead of it. Returns
-    (closed_starts, closed_ends, closed_ns, (start, last, n)) with the
-    last run left OPEN as the new state; an empty batch returns the
-    carry unchanged. One whole-batch sort (chunk-local sorts would let
-    a later-chunk event with an earlier ts fold out of order — the
-    _asof_enrich_fn lesson); tests/test_round10_props.py fuzzes this
-    fold against the textbook per-event reference."""
-    import numpy as np
-    import pandas as pd
-
-    chunks = list(pdfs)
-    if not chunks:
-        a = np.empty(0, dtype="int64")
-    else:
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        a = np.sort(pdf["_us"].to_numpy("int64"))
-    empty = np.empty(0, dtype="int64")
-    if not a.size:
-        return empty, empty, empty, (start, last, n)
-    brk = np.flatnonzero(np.diff(a) > gap_us)
-    s_idx = np.concatenate([np.zeros(1, dtype="int64"), brk + 1])
-    e_idx = np.append(brk, a.size - 1)
-    starts = a[s_idx]
-    ends = a[e_idx]
-    ns = (e_idx - s_idx + 1).astype("int64")
-    carry_closed = start is not None and a[0] - last > gap_us
-    if start is not None and not carry_closed:
-        starts[0] = start
-        ns[0] += n
-    new_state = (int(starts[-1]), int(ends[-1]), int(ns[-1]))
-    starts, ends, ns = starts[:-1], ends[:-1], ns[:-1]
-    if carry_closed:
-        starts = np.concatenate([np.array([start], dtype="int64"), starts])
-        ends = np.concatenate([np.array([last], dtype="int64"), ends])
-        ns = np.concatenate([np.array([n], dtype="int64"), ns])
-    return starts, ends, ns, new_state
-
-
 # Shard count for the packed-state form (r17): results are
 # shard-count independent — a key's sessions never cross shards — so
 # this is a machinery knob (Python invocations per trigger), not a
@@ -123,6 +79,7 @@ def streaming_sessionize(
         _lookup,
         _merge_packed,
         _packed_get,
+        _packed_put,
         _segments,
     )
 
@@ -168,8 +125,8 @@ def streaming_sessionize(
             r_n = (re_ - rs + 1).astype("int64")
             r_seg = seg[rs]
             # each key's FIRST run extends its carried open session iff
-            # the gap allows (the _fold_sessions carry rule, applied to
-            # every key at once); otherwise the carry closes ahead
+            # the gap allows (applied to every key at once); otherwise
+            # the carry closes ahead
             fr = np.flatnonzero(starts_m[rs])  # one first-run per key
             ext = np.zeros(len(rs), dtype=bool)
             ext[fr] = found & ((r_start[fr] - la0) <= gap_us)
@@ -215,9 +172,7 @@ def streaming_sessionize(
             su, sst, sla, sn = su[keep], sst[keep], sla[keep], sn[keep]
             dl = dl[keep]
         if len(su):
-            state.update(
-                (su.tobytes(), sst.tobytes(), sla.tobytes(), sn.tobytes())
-            )
+            _packed_put(state, (su, sst, sla, sn))
             state.setTimeoutTimestamp(int(dl.min()))
         elif state.exists:
             state.remove()

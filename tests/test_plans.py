@@ -421,7 +421,8 @@ HEADLINE_PINS = {
     "kmeans_fit": (0, 0),
     # round-12 additions (fingerprinted at sf0.001 at introduction)
     # the shard pack+write is eager (applyInPandas collect); the gated
-    # read-back is binaryFile + Arrow member split, map-only
+    # read-back (binaryFile + Arrow member split, map-only) serves
+    # through serve_and_cleanup, so the returned plan is its checkpoint
     "sink_tar_shards": (0, 0),
     # r15: the lifecycle gates serve through serve_and_cleanup (an
     # eager localCheckpoint so the temp state trees can be swept) —
@@ -436,8 +437,8 @@ HEADLINE_PINS = {
     # prefix-retrieve rank + full-dim rerank rank, one exchange
     "sim_mrl_rerank": (1, 0),
     # late round-12 additions (fingerprinted at sf0.001 at introduction)
-    # the streamed/eager writes happen before the gated read-back; the
-    # returned plan is binaryFile + Arrow member split, map-only
+    # the streamed/eager writes happen before the gated read-back, which
+    # serves through serve_and_cleanup (see sink_tar_shards)
     "sink_warc_shards": (0, 0),
     "stream_sink_tar_live": (0, 0),
     "stream_curate_loop_live": (0, 0),
@@ -450,9 +451,11 @@ HEADLINE_PINS = {
     # r15: serve_and_cleanup checkpoint scans (see dedup_incremental)
     "scan_wds_samples": (0, 0),
     "sim_ivfpq_advanced": (0, 0),
-    # index build/write are eager; the lookup plan is needle-sized
-    # groupBys + broadcast joins around the ONE pruned data scan
-    "scan_bloom_pruned": (4, 0),
+    # serve_and_cleanup checkpoint scan (see dedup_incremental): the
+    # corpus and index dirs are swept after the lookup materializes;
+    # the lookup plan itself stays pinned by test_round12_ops'
+    # bloom-index PartitionFilters and exchange-count pins
+    "scan_bloom_pruned": (0, 0),
     # shard-local split+pivot inside one Arrow stage — zero shuffle
     "stream_wds_samples_live": (0, 0),
     # lag window + running session-id sum + ordered-list agg all share

@@ -503,7 +503,7 @@ def test_ttl_state_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
 )
 def test_state_fns_invariant_under_tiny_arrow_chunks(spark, sf_dir, qk):
     """The multi-chunk drain paths (pd.concat + whole-group lexsort in
-    _drain_sorted / _fold_sessions / the wsample concat) are dead code
+    _drain_sorted / the packed sessionizer / the wsample concat) are dead code
     at gate scale — groups fit one Arrow batch. Force them live:
     maxRecordsPerBatch=7 splits every per-key group into many chunks,
     and the output must not move by a row. Catches any chunk-local
@@ -526,6 +526,22 @@ def test_state_fns_invariant_under_tiny_arrow_chunks(spark, sf_dir, qk):
     assert tiny == default and tiny, qk
 
 
+def _session_reference(uss, gap_us):
+    """The textbook per-event session fold over one key's event times:
+    the closed (start, last, n) sessions plus the final open one."""
+    start, last, n = None, None, 0
+    closed = []
+    for us in sorted(uss):
+        if start is None:
+            start, last, n = us, us, 1
+        elif us - last > gap_us:
+            closed.append((start, last, n))
+            start, last, n = us, us, 1
+        else:
+            last, n = us, n + 1
+    return closed, (start, last, n)
+
+
 def test_sessionize_timeout_checkpoint_recovery(spark, sf_dir, tmp_path):
     """Recovery for the TIMER path — the state-store surface the TTL
     test doesn't touch: streaming_sessionize's event-time timeouts
@@ -544,7 +560,7 @@ def test_sessionize_timeout_checkpoint_recovery(spark, sf_dir, tmp_path):
 
     from flod_spark.io import load, ts_micros
     from flod_spark.streaming import replay_stream
-    from flod_spark.streaming.sessionize import GAP_US, _fold_sessions, streaming_sessionize
+    from flod_spark.streaming.sessionize import GAP_US, streaming_sessionize
 
     ev = load(spark, sf_dir, "events")
     src_dir = str(tmp_path / "src_sess")
@@ -597,10 +613,8 @@ def test_sessionize_timeout_checkpoint_recovery(spark, sf_dir, tmp_path):
     wm_ms = (max_us // 1000) - 2 * 60 * 60 * 1000  # "2 hours" watermark
     want = set()
     for k, uss in by_key.items():
-        pdf = pd.DataFrame({"_us": pd.Series(uss, dtype="int64")})
-        s, e, c, (st_, la_, n_) = _fold_sessions([pdf], None, None, 0, GAP_US)
-        for a, b, c2 in zip(s.tolist(), e.tolist(), c.tolist()):
-            want.add((k, a, b, c2))
+        closed, (st_, la_, n_) = _session_reference(uss, GAP_US)
+        want.update((k, a, b, c2) for a, b, c2 in closed)
         if st_ is not None and wm_ms > (la_ + GAP_US) // 1000:
             want.add((k, st_, la_, n_))
     assert single == want

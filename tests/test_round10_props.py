@@ -3,8 +3,6 @@ machinery-diet folds against the textbook per-event/per-key references
 they replaced (the round-9 verdict's item 1: the state functions must be
 loop-free numpy AND bitwise-equal to the old interpreted forms):
 
-- _fold_sessions (streaming/sessionize.py) vs the per-event session
-  loop, over random event-time streams, batch splits, and chunkings;
 - the vectorized _mg_absorb (catalog/analytics.py) vs the textbook
   Misra-Gries dict fold, exact final map equality;
 - _wsample_shard_fn vs a Python sorted() top-k reference, exact state
@@ -31,75 +29,6 @@ class _FakeState:
     def update(self, v):
         self._v = v
         self.exists = True
-
-
-# ---------------------------------------------------------------- sessions
-
-
-def _session_reference(batches, gap_us):
-    """The per-event fold _fold_sessions replaced, run batch by batch:
-    returns per-batch closed-session lists plus the final open state."""
-    start, last, n = None, None, 0
-    per_batch = []
-    for batch in batches:
-        closed = []
-        for us in sorted(batch):
-            if start is None:
-                start, last, n = us, us, 1
-            elif us - last > gap_us:
-                closed.append((start, last, n))
-                start, last, n = us, us, 1
-            else:
-                last, n = us, n + 1
-        per_batch.append(closed)
-    return per_batch, (start, last, n)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    ts=st.lists(st.integers(0, 400), min_size=0, max_size=40),
-    n_batches=st.integers(1, 4),
-    gap_us=st.integers(1, 60),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_fold_sessions_matches_reference(ts, n_batches, gap_us, seed):
-    """_fold_sessions == the textbook per-event session loop for any
-    stream, any batch split (cross-batch event-time order, the replay
-    contract), any within-batch arrival order, and any chunking —
-    including duplicate timestamps and empty batches."""
-    from flod_spark.streaming.sessionize import _fold_sessions
-
-    rng = np.random.default_rng(seed)
-    ts = sorted(ts)
-    cuts = sorted(rng.integers(0, len(ts) + 1, size=n_batches - 1).tolist())
-    batches = [ts[a:b] for a, b in zip([0, *cuts], [*cuts, len(ts)])]
-    ref_emits, ref_state = _session_reference(batches, gap_us)
-
-    start, last, n = None, None, 0
-    for batch, ref_closed in zip(batches, ref_emits):
-        arr = np.asarray(batch, dtype="int64")
-        rng.shuffle(arr)
-        n_chunks = int(rng.integers(1, 4))
-        bounds = np.sort(rng.integers(0, len(arr) + 1, size=n_chunks - 1))
-        chunks = [
-            pd.DataFrame({"_us": pd.Series(part, dtype="int64")})
-            for part in np.split(arr, bounds)
-        ]
-        s, e, c, (start, last, n) = _fold_sessions(chunks, start, last, n, gap_us)
-        assert list(zip(s.tolist(), e.tolist(), c.tolist())) == ref_closed
-    assert (start, last, n) == ref_state
-
-
-def test_fold_sessions_empty_batch_keeps_carry():
-    from flod_spark.streaming.sessionize import _fold_sessions
-
-    s, e, c, carry = _fold_sessions(
-        [pd.DataFrame({"_us": pd.Series([], dtype="int64")})], 10, 20, 3, 100
-    )
-    assert len(s) == 0 and len(e) == 0 and len(c) == 0
-    assert carry == (10, 20, 3)
-    s, e, c, carry = _fold_sessions([], None, None, 0, 100)
-    assert carry == (None, None, 0)
 
 
 # ------------------------------------------------------------- Misra-Gries

@@ -847,6 +847,7 @@ def test_bloom_index_never_misses_and_actually_prunes(spark, sf_dir, tmp_path):
         build_shard_bloom,
     )
     from flod_spark.io import load
+    from tools.plan_report import fingerprint
 
     docs = load(spark, sf_dir, "documents")
     keyed = docs.select(
@@ -873,6 +874,11 @@ def test_bloom_index_never_misses_and_actually_prunes(spark, sf_dir, tmp_path):
     assert any(
         "shard" in seg[:200] for seg in plan.split("PartitionFilters")[1:]
     ), plan
+    # needle-sized groupBys + broadcast joins around the ONE pruned data
+    # scan (scan_bloom_pruned serves a checkpoint scan, so the headline
+    # pins no longer see this plan)
+    f = fingerprint(plan)
+    assert (f["ex"], f["smj"]) == (4, 0), f
 
     rows = {r.needle_id: r for r in out.collect()}
     # (a) every present needle found itself (no false negatives)

@@ -217,6 +217,14 @@ def test_bucketed_admission_invisible_and_shuffle_free(spark, sf_dir, tmp_path):
         # and the r15 registrations, born clean
         "dedup_claims_bucketed",
         "stream_ivfpq_ingest_live",
+        # the foreachBatch state root, the tar/WARC shard outputs and
+        # the bloom corpus + index, swept through serve_and_cleanup
+        "stream_foreach_upsert_live",
+        "stream_sink_tar_live",
+        "stream_curate_loop_live",
+        "sink_tar_shards",
+        "sink_warc_shards",
+        "scan_bloom_pruned",
     ],
 )
 def test_gated_query_leaves_no_tmp_trees(spark, sf_dir, qk):

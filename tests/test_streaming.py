@@ -390,3 +390,22 @@ def test_catalog_streams_only_through_the_gate_seam():
         if banned.search(line)
     ]
     assert not hits, hits
+
+
+def test_packed_user_state_codec_only_in_packfold():
+    """No catalog module packs or unpacks per-user shard state by hand:
+    the codec (_packed_get / _merge_packed / _packed_put) is called only
+    inside streaming/packfold.py, whose packed_user_fold is the one
+    per-user fold seam the detector gates declare their steps over."""
+    import pathlib
+    import re
+
+    catalog = pathlib.Path(__file__).resolve().parents[1] / "flod_spark" / "catalog"
+    banned = re.compile(r"\b(_packed_get|_merge_packed|_packed_put)\(")
+    hits = [
+        f"{path.name}:{n}: {line.strip()}"
+        for path in sorted(catalog.glob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, hits
