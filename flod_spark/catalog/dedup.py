@@ -20,12 +20,14 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import os
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flod_spark.io import load
+from flod_spark.io import atomic_swap_dir, load, recover_swap_dir, serve_and_cleanup
 from flod_spark.registry import query
 
 # normalized text, capped at 4 KB (both engines) — honest bounded fingerprinting
@@ -1235,133 +1237,162 @@ def dedup_semantic_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sig.select("doc_id", "simhash", F.min("doc_id").over(w).alias("canonical_id"))
 
 
-def build_claim_table(docs: DataFrame, claims_dir: str) -> None:
-    """Materialize the exact-dedup CLAIM TABLE — (fp, first_id), one
-    row per distinct content fingerprint with its first-arrival
-    doc_id — as a parquet table: the persisted state of an INCREMENTAL
-    batch dedup job (the nightly shape: each slice dedups against
-    everything admitted so far, then the table advances; the streaming
-    twin is stream_prep_live's per-key state). Registered (r12) with
-    dedup_against_claims as dedup_incremental.
+# ---------------------------------------------------------------------------
+# The persisted CLAIM TABLE: one seam over the key columns. The exact
+# (fp), fingerprint-row (fp), fuzzy (band, bs) and crawl-sink (fp +
+# n_chars) tables are key specs over these functions.
 
-    Layout: partitioned by the integer ``slice`` id (the base build is
-    slice=0) — advance_claim_table overwrites exactly one slice
-    partition per advance, which is what makes a retried/replayed
-    advance idempotent instead of row-duplicating (the batch_id-guard
-    discipline of stream_foreach_upsert_live, expressed as dynamic
-    partition overwrite). compact_claim_table folds the slices back to
-    one.
+FP_KEY = ("fp",)
+BAND_KEY = ("band", "bs")
 
-    Scale: map-side hashing + one exchange on the 16-byte
-    fingerprint; the table is |distinct contents| rows regardless of
-    corpus size. For the co-partitioned anti-join at scale, write the
-    compacted table BUCKETED by fp (write_claims_bucketed) — the slice
-    side shuffles once onto the same hash and the claims side scans
-    shuffle-free (plan pinned in tests/test_round12_ops.py)."""
-    (
-        docs.select("doc_id", F.md5(_norm_col().cast("binary")).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("first_id"))
-        .withColumn("slice", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("slice")
-        .parquet(claims_dir)
+
+def first_carriers(rows: DataFrame, key: tuple[str, ...]) -> DataFrame:
+    """(key…, first_id): each key's first carrier (min doc_id) in
+    ``rows`` — the fold every build and fuzzy advance writes."""
+    return rows.groupBy(*key).agg(F.min("doc_id").alias("first_id"))
+
+
+def first_in_slice(key: tuple[str, ...]) -> F.Column:
+    """True on the row that first carries its key within the slice
+    (min doc_id over the key) — the within-slice half of every
+    admission verdict."""
+    return F.col("doc_id") == F.min("doc_id").over(Window.partitionBy(*key))
+
+
+def _at_slice(rows: DataFrame, slice_id: int) -> DataFrame:
+    return rows.withColumn("slice", F.lit(int(slice_id)))
+
+
+def write_claim_slice(
+    rows: DataFrame, claims_dir: str, slice_id: int, whole_table: bool = False
+) -> None:
+    """Write ``rows`` as partition ``slice=<slice_id>`` of the claim
+    table (build_claims states the contract). Only that partition is
+    replaced: dynamic partition overwrite, passed as an option of this
+    one write so the session conf is never touched. ``whole_table``
+    replaces the entire directory instead — the builds, which write the
+    fold as slice 0."""
+    w = _at_slice(rows, slice_id).write.mode("overwrite")
+    if not whole_table:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.partitionBy("slice").parquet(claims_dir)
+
+
+def read_claims(
+    spark: SparkSession, claims_dir: str, own_slice: int | None = None, schema=None
+) -> DataFrame:
+    """The claim table as of now, repaired first (recover_swap_dir: a
+    compactor that crashed between its renames leaves the table as
+    ``<dir>.compact``, and a read would otherwise fail on the absent
+    dir). ``own_slice`` drops the slice an advance is about to
+    (re)write, so a retry never reads its own partial rows back as
+    already claimed. ``schema`` skips footer inference for callers that
+    cached it."""
+    recover_swap_dir(claims_dir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    cur = reader.parquet(claims_dir)
+    if own_slice is not None:
+        cur = cur.filter(F.col("slice") != F.lit(int(own_slice)))
+    return cur
+
+
+def build_claims(rows: DataFrame, key: tuple[str, ...], claims_dir: str) -> None:
+    """Materialize a CLAIM TABLE from (doc_id, key…) rows: one row per
+    distinct key with its first carrier. This docstring is the contract
+    the whole seam keeps.
+
+    Layout: parquet ``(key…, first_id[, extras], slice)``, partitioned
+    by the integer ``slice``. Slice 0 is RESERVED for the fold: the
+    build writes it (replacing the whole table) and compact_claim_table
+    folds every slice back into it. Advances and the live sink write
+    slices >= 1 (crawl_claims_sink: batch b is slice b + 1), so a
+    stream started on a fresh checkpoint can never overwrite the base.
+
+    Idempotent slice writes (Drizzle's recovery at batch boundaries):
+    write_claim_slice replaces exactly its own partition, and every
+    advance computes the partition from the OTHER slices
+    (read_claims' ``own_slice``), so a retried or replayed advance
+    rewrites identical rows instead of appending duplicates. A key
+    lives in exactly one slice, and its first_id never changes.
+
+    Reads: every read repairs a half-finished swap first
+    (read_claims). Admission reads either hold each key once (DISTINCT,
+    or the bucketed table, unique by construction of the fold) or join
+    LEFT ANTI, so a malformed table with duplicate keys cannot fan out
+    the slice side.
+
+    Crash order of compaction: the fold is written ``<dir>.compact``
+    and swapped in by a double rename (atomic_swap_dir). With a
+    bucketed table, the bucketed refresh runs BEFORE the swap, so the
+    bucketed base is never staler than the fold: before the refresh
+    nothing changed; between refresh and swap it over-covers (a
+    duplicate key in the live sink's ``seen`` union is harmless under
+    LEFT ANTI); between the renames the dir is absent and the bucketed
+    base alone covers every claim. The reverse order left a crash after
+    the swap with a base missing the just-folded slices, re-admitting
+    them (pinned via the pre-swap crash state in
+    tests/test_round15_ops.py).
+
+    Scale: map-side partial aggregation + one exchange on the key; the
+    table is |distinct keys| rows regardless of corpus size, and never
+    stores text."""
+    write_claim_slice(first_carriers(rows, key), claims_dir, 0, whole_table=True)
+
+
+def admit_against(rows: DataFrame, seen: DataFrame, key: tuple[str, ...]) -> DataFrame:
+    """``rows`` + ``admitted``: the key is absent from ``seen`` (which
+    must hold each key once) AND this row first carries it within the
+    slice. Carried columns ride through. One anti-join-shaped left join
+    + one within-slice window, both on the key only."""
+    return (
+        rows.join(seen.withColumn("_seen", F.lit(True)), list(key), "left")
+        .withColumn("admitted", first_in_slice(key) & F.col("_seen").isNull())
+        .drop("_seen")
     )
-
-
-def advance_claim_table(admitted: DataFrame, claims_dir: str, slice_id: int) -> None:
-    """ADVANCE the claim table with one slice's admission verdicts
-    (the dedup_against_claims output): the admitted rows' (fp,
-    first_id) land as partition ``slice=<slice_id>`` via DYNAMIC
-    partition overwrite — a retried or replayed advance of the same
-    slice overwrites its own partition instead of appending duplicate
-    fp rows (which would fan out every later slice's claim join).
-    Append-only across slices: an existing fp's first_id never
-    changes, because a claimed fp is never admitted again.
-
-    Scale: writes |newly admitted| rows, touches no prior slice;
-    pytest pins that N sequential advances + compact equal the
-    one-shot claim table bit-for-bit and that a replayed advance is a
-    no-op."""
-    spark = admitted.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            admitted.filter("admitted")
-            .select("fp", F.col("doc_id").alias("first_id"))
-            .withColumn("slice", F.lit(int(slice_id)))
-            .write.mode("overwrite")
-            .partitionBy("slice")
-            .parquet(claims_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def compact_claim_table(
-    spark: SparkSession, claims_dir: str, bucketed_table: str | None = None
+    spark: SparkSession,
+    claims_dir: str,
+    bucketed_table: str | None = None,
+    key: tuple[str, ...] = FP_KEY,
 ) -> None:
-    """Periodic claim-table COMPACTION: fold all slice partitions back
-    into slice=0 (groupBy fp, min first_id — a no-op on values, since
-    each fp exists in exactly one slice) and atomically swap the
-    directory. Keeps the nightly job's read side at one partition's
-    file count no matter how many slices have advanced.
+    """Periodic claim-table COMPACTION: fold every slice back into
+    slice 0 (group by ``key``, min first_id — value-neutral, since each
+    key lives in exactly one slice) and atomically swap the directory,
+    so the read side stays at one partition's file count however many
+    slices have advanced. Carried columns (the crawl table's n_chars)
+    fold with their first_id's row.
 
-    ``bucketed_table`` (r14 verdict item 4 — the bucketed layout as
-    CODE, not a docstring): when given, the compacted claims are ALSO
-    written fp-bucketed into the session catalog
-    (write_claims_bucketed), so every subsequent slice admission can
-    join co-partitioned with no claims-side exchange
-    (dedup_against_claims' bucketed_table path; plan pinned in
-    tests/test_round12_ops.py, value parity driver-gated by
+    ``bucketed_table`` (fp key only) also refreshes the fp-bucketed
+    catalog layout (write_claims_bucketed) BEFORE the swap — the crash
+    order in build_claims — so later admissions join it with no
+    claims-side exchange (dedup_against_claims' bucketed path; plan
+    pinned in tests/test_round12_ops.py, value parity oracle-gated by
     dedup_claims_bucketed).
 
-    CRASH ORDER MATTERS: the bucketed refresh runs BEFORE the
-    directory swap. The live sink reads ``seen = bucketed base ∪
-    (slice != 0)``, which is only safe when the bucketed table is
-    never STALER than the fold — refresh-first makes every crash
-    point sound: before the refresh nothing changed; between refresh
-    and swap the bucketed table OVER-covers (it already holds the
-    fps the still-unswapped slices carry — a duplicate fp in the seen
-    union is harmless under the LEFT ANTI admission); between the
-    swap's renames the dir is briefly absent and the bucketed base
-    alone still covers every claimed fp. The reverse order had a real
-    hole: a crash after the swap but before the refresh left a
-    bucketed base MISSING the just-folded slices' fps, re-admitting
-    them as duplicates (pytest-pinned via the pre-swap crash state).
-
-    Scale: one exchange on fp over |distinct contents| rows, folded
+    Scale: one exchange on the key over |distinct keys| rows, folded
     ONCE — with bucketed_table the folded frame is localCheckpoint()ed
-    and feeds both the bucketed refresh and the swap write (r15 verdict
-    item 5: the prior form recomputed the fold per write as the price
-    of refresh-first ordering; materializing it keeps the ordering and
-    drops the second fold); the swap is a rename (object stores use a
-    manifest/commit instead)."""
-    from flod_spark.io import atomic_swap_dir, recover_swap_dir
-
-    recover_swap_dir(claims_dir)
-    cur = spark.read.parquet(claims_dir)
-    # carried columns (e.g. the crawl table's n_chars) fold with their
-    # first_id's row — min_by is exact here (each fp lives in exactly
-    # one slice, so the group has one row) and deterministic even
-    # against a malformed duplicate-fp table
-    extras = [c for c in cur.columns if c not in ("fp", "first_id", "slice")]
-    compacted = (
-        cur.groupBy("fp")
-        .agg(
+    and feeds both writes; the swap is a rename (object stores use a
+    manifest commit instead)."""
+    cur = read_claims(spark, claims_dir)
+    # min_by is exact here (each key lives in exactly one slice, so the
+    # group has one row) and deterministic even against a malformed
+    # duplicate-key table
+    extras = [c for c in cur.columns if c not in (*key, "first_id", "slice")]
+    compacted = _at_slice(
+        cur.groupBy(*key).agg(
             F.min("first_id").alias("first_id"),
             *[F.min_by(c, "first_id").alias(c) for c in extras],
-        )
-        .withColumn("slice", F.lit(0))
+        ),
+        0,
     )
     if bucketed_table is not None:
-        # ONE materialized fold feeds BOTH writes (r15 verdict item 5):
-        # refresh-first crash ordering required the bucketed write to
-        # complete before the swap, and the naive form paid the full
-        # groupBy twice for it. localCheckpoint pins the folded rows in
-        # executor storage; the ordering of the two writes (and every
-        # crash-window argument below) is unchanged.
+        # ONE materialized fold feeds BOTH writes: refresh-first needs
+        # the bucketed write to complete before the swap, and the naive
+        # form paid the full groupBy twice for it. localCheckpoint pins
+        # the folded rows in executor storage; the write order (and
+        # every crash-window argument) is unchanged.
         compacted = compacted.localCheckpoint(eager=True)
         # the layout lives NEXT TO the claim state (<claims_dir>.bucketed,
         # an EXTERNAL table) so the whole lifecycle sweeps as one root
@@ -1400,8 +1431,8 @@ def write_claims_bucketed(
 
     ``path`` pins the table's file location (EXTERNAL table) — the
     self-contained gates use a temp dir so their state sweeps with the
-    rest (serve_and_cleanup) instead of landing in the session's
-    warehouse directory; a production catalog omits it."""
+    rest instead of landing in the session's warehouse directory; a
+    production catalog omits it."""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     w = (
         claims.select("fp", "first_id")
@@ -1416,96 +1447,62 @@ def write_claims_bucketed(
     w.saveAsTable(table)
 
 
-def _claims_fp_side(
-    spark: SparkSession, claims_dir: str, bucketed_table: str | None
-) -> DataFrame:
-    """The claims side of an admission join. Default: the parquet dir,
-    read DISTINCT on fp (a malformed table holding duplicate fp rows —
-    a partially retried legacy append — cannot fan out the join).
-    With ``bucketed_table``: the fp-bucketed catalog table
-    compact_claim_table refreshed — scanned straight from its buckets
-    (HashPartitioning on fp, no exchange; tests/test_round12_ops.py
-    pins the zero-exchange/zero-sort SortMergeJoin). NO distinct on
-    this path: the bucketed layout is written only from compacted
-    claims (groupBy fp), so fp is unique by construction, and a
-    distinct would re-insert exactly the exchange the layout exists to
-    remove.
-
-    Either way the dir is repaired first (recover_swap_dir): a
-    compactor crashed between its renames leaves the table as
-    .compact, and an admission running before the next compaction
-    would otherwise fail on the absent dir (the crawl_claims_sink
-    read-side discipline)."""
-    from flod_spark.io import recover_swap_dir
-
-    recover_swap_dir(claims_dir)
-    if bucketed_table is not None and spark.catalog.tableExists(bucketed_table):
-        return spark.table(bucketed_table).select("fp")
-    # the bucketed refresh is DROP + saveAsTable (non-atomic): a compactor
-    # crash between the two leaves no catalog table, and an admission
-    # that insisted on it would fail with TABLE_OR_VIEW_NOT_FOUND until
-    # the next compaction. Fall back to the distinct dir read — the
-    # crawl_claims_sink guard, mirrored (r15 ADVICE, low).
-    return spark.read.parquet(claims_dir).select("fp").distinct()
+# -- exact claims: the fp key ------------------------------------------------
 
 
-def dedup_against_claims(
-    docs: DataFrame,
-    spark: SparkSession,
-    claims_dir: str,
-    bucketed_table: str | None = None,
-) -> DataFrame:
-    """Dedup a NEW SLICE against the persisted claim table: a doc is
-    ADMITTED iff its fingerprint is absent from the table AND it is the
-    slice's first arrival (min doc_id) for that fingerprint — exactly
-    the one-shot dedup_exact admission set restricted to the slice
-    (pytest-pinned: claims(half1) + admit(half2) == the union job's
-    half2 survivors). Returns (doc_id, fp, admitted); the caller
-    appends the admitted rows' (fp, doc_id) to the claim table to
-    advance the state (append-only — the first_id of an existing fp
-    never changes, so retries are idempotent per slice).
+def _fp_rows(docs: DataFrame) -> DataFrame:
+    return docs.select("doc_id", F.md5(_norm_col().cast("binary")).alias("fp"))
 
-    Scale: one anti-join-shaped left join on the 16-byte fp (AQE
-    broadcasts the claim side only if it measures small — at 100 TB
-    it will not, and the join co-partitions when both sides are
-    fp-bucketed: pass ``bucketed_table`` = the layout
-    compact_claim_table refreshed, and the claims side scans
-    shuffle-free from its buckets — _claims_fp_side) + one
-    within-slice min; nothing rescans prior slices' text."""
-    claims = _claims_fp_side(spark, claims_dir, bucketed_table)
-    h = docs.select("doc_id", F.md5(_norm_col().cast("binary")).alias("fp"))
-    w = Window.partitionBy("fp")
-    first_in_slice = F.col("doc_id") == F.min("doc_id").over(w)
-    seen = claims.withColumn("_seen", F.lit(True))
-    return (
-        h.join(seen, "fp", "left")
-        .select(
-            "doc_id",
-            "fp",
-            (first_in_slice & F.col("_seen").isNull()).alias("admitted"),
-        )
-    )
+
+def build_claim_table(docs: DataFrame, claims_dir: str) -> None:
+    """The exact-dedup claim table (fp, first_id, slice) over the md5 of
+    each document's normalized text — the persisted state of an
+    INCREMENTAL batch dedup job (each slice dedups against everything
+    admitted so far, then the table advances; the streaming twin is
+    stream_prep_live's per-key state). Contract: build_claims. For the
+    co-partitioned anti-join at scale, compact with a bucketed table
+    (write_claims_bucketed)."""
+    build_fp_claim_table(_fp_rows(docs), claims_dir)
 
 
 def build_fp_claim_table(rows: DataFrame, claims_dir: str) -> None:
-    """build_claim_table over rows that ALREADY carry a fingerprint —
-    (doc_id, fp) in, the same slice=0 partitioned (fp, first_id)
-    parquet layout out. The crawl chain claims on the md5 of the
-    EXTRACTED text (computed mid-pipeline), not on a raw-document
-    hash, so its claim build starts from fp rows; the table layout,
-    advance, and compaction machinery are shared unchanged.
+    """build_claim_table over rows that already carry ``fp`` — the crawl
+    chain claims on the md5 of the EXTRACTED text."""
+    build_claims(rows, FP_KEY, claims_dir)
 
-    Scale: one exchange on the 16-byte fp; |distinct contents| rows
-    regardless of corpus size (build_claim_table's budget)."""
-    (
-        rows.select("fp", "doc_id")
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("first_id"))
-        .withColumn("slice", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("slice")
-        .parquet(claims_dir)
+
+def advance_claim_table(admitted: DataFrame, claims_dir: str, slice_id: int) -> None:
+    """ADVANCE the exact claim table with one slice's verdicts (the
+    dedup_against_claims output): the admitted rows' (fp, first_id)
+    replace partition ``slice=<slice_id>`` (build_claims' idempotent
+    slice write). Append-only across slices: a claimed fp is never
+    admitted again. Writes |newly admitted| rows; pytest pins that N
+    advances + compact equal the one-shot table and that a replayed
+    advance is a no-op."""
+    write_claim_slice(
+        admitted.filter("admitted").select(*FP_KEY, F.col("doc_id").alias("first_id")),
+        claims_dir,
+        slice_id,
     )
+
+
+def _claims_fp_side(
+    spark: SparkSession, claims_dir: str, bucketed_table: str | None
+) -> DataFrame:
+    """The claims side of an fp admission join, each fp once. Default:
+    the dir read DISTINCT on fp. With ``bucketed_table``: the
+    fp-bucketed catalog table compact_claim_table refreshed, scanned
+    straight from its buckets (no exchange; tests/test_round12_ops.py
+    pins the zero-exchange SortMergeJoin) and with NO distinct — fp is
+    unique by construction of the fold, and a distinct would re-insert
+    the exchange the layout removes. The dir is repaired first either
+    way. The bucketed refresh is DROP + saveAsTable (non-atomic), so a
+    missing table falls back to the dir read instead of failing with
+    TABLE_OR_VIEW_NOT_FOUND until the next compaction."""
+    if bucketed_table is not None and spark.catalog.tableExists(bucketed_table):
+        recover_swap_dir(claims_dir)
+        return spark.table(bucketed_table).select(*FP_KEY)
+    return read_claims(spark, claims_dir).select(*FP_KEY).distinct()
 
 
 def admit_fp_rows_against_claims(
@@ -1514,40 +1511,45 @@ def admit_fp_rows_against_claims(
     claims_dir: str,
     bucketed_table: str | None = None,
 ) -> DataFrame:
-    """dedup_against_claims over fingerprint-bearing rows: a row is
-    ADMITTED iff its fp is absent from the claim table AND it is the
-    slice's first arrival (min doc_id) for that fp. Carried columns
-    (n_chars, …) ride through; the verdict lands as ``admitted``.
-    The claim side reads DISTINCT on fp (malformed duplicate claim
-    rows cannot fan out the join — dedup_against_claims' guard), or
-    shuffle-free from the fp-bucketed layout when ``bucketed_table``
-    is given (_claims_fp_side).
-
-    Scale: one anti-join-shaped left join on the 16-byte fp + one
-    within-slice window min — the claim join never touches text or
-    page bytes, only fingerprints."""
-    claims = _claims_fp_side(spark, claims_dir, bucketed_table)
-    w = Window.partitionBy("fp")
-    first = F.col("doc_id") == F.min("doc_id").over(w)
-    seen = claims.withColumn("_seen", F.lit(True))
-    return (
-        rows.join(seen, "fp", "left")
-        .withColumn("admitted", first & F.col("_seen").isNull())
-        .drop("_seen")
-    )
+    """Admission of fingerprint-bearing rows against the claim table: a
+    row is ADMITTED iff its fp is unclaimed AND it is the slice's first
+    arrival for that fp (admit_against). Carried columns (n_chars, …)
+    ride through; the claim join touches fingerprints only."""
+    seen = _claims_fp_side(spark, claims_dir, bucketed_table)
+    return admit_against(rows, seen, FP_KEY)
 
 
-# dedup_incremental: the re-delivered duplicate copies get doc_id +
-# _SLICE_OFFSET (past any gate corpus's max id).
+def dedup_against_claims(
+    docs: DataFrame,
+    spark: SparkSession,
+    claims_dir: str,
+    bucketed_table: str | None = None,
+) -> DataFrame:
+    """Dedup a NEW SLICE of documents against the claim table:
+    (doc_id, fp, admitted) — admit_fp_rows_against_claims over the
+    documents' md5 rows, exactly the one-shot dedup_exact admission set
+    restricted to the slice (pytest-pinned: claims(half1) + admit(half2)
+    == the union job's half2 survivors). The caller advances the table
+    with advance_claim_table. Nothing rescans prior slices' text; pass
+    ``bucketed_table`` for the shuffle-free claims side at scale."""
+    return admit_fp_rows_against_claims(
+        _fp_rows(docs), spark, claims_dir, bucketed_table
+    ).select("doc_id", "fp", "admitted")
+
+
+# -- the lifecycle gates' fixture ----------------------------------------------
+
+# the re-delivered duplicate copies get doc_id + _SLICE_OFFSET (past any
+# gate corpus's max id).
 _SLICE_OFFSET = 1_000_000
 
-# Shared by dedup_incremental and dedup_claims_compacted (the r12
-# verdict's lifecycle-registration ask: compaction must be invisible to
-# admission, so the compacted query reuses this oracle VERBATIM):
-# half-split twin — claims = first half's fingerprints; the slice is
-# the WHOLE corpus plus a re-delivered copy at doc_id + offset, so all
-# three admission paths carry weight — claimed fps reject, within-slice
-# later arrivals reject, unclaimed firsts admit.
+# Shared by dedup_incremental, dedup_claims_compacted and
+# dedup_claims_bucketed (compaction and the serving layout must be
+# invisible to admission, so the lifecycle queries reuse this oracle
+# VERBATIM): half-split twin — claims = first half's fingerprints; the
+# slice is the WHOLE corpus plus a re-delivered copy at doc_id + offset,
+# so all three admission paths carry weight — claimed fps reject,
+# within-slice later arrivals reject, unclaimed firsts admit.
 _INCR_CLAIMS_ORACLE = (
     "WITH m AS (SELECT (MIN(doc_id) + MAX(doc_id)) // 2 AS mid FROM documents), "
     "s AS (SELECT doc_id, text FROM documents "
@@ -1562,41 +1564,53 @@ _INCR_CLAIMS_ORACLE = (
 )
 
 
+def quarter_cuts(docs: DataFrame) -> tuple[int, int]:
+    """(q1, mid): the doc_id cut points the lifecycle gates split the
+    corpus at — mid = (min + max) // 2 (the oracles' ``m`` CTE) and q1
+    = (min + mid) // 2. One aggregate job."""
+    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+    mid = (lo + hi) // 2
+    return (lo + mid) // 2, mid
+
+
+def _redelivered(docs: DataFrame) -> DataFrame:
+    """The lifecycle gates' slice: the whole corpus plus a re-delivered
+    copy of itself at doc_id + _SLICE_OFFSET."""
+    return docs.select("doc_id", "text").unionByName(
+        docs.select((F.col("doc_id") + F.lit(_SLICE_OFFSET)).alias("doc_id"), "text")
+    )
+
+
 @query("dedup_incremental", oracle=_INCR_CLAIMS_ORACLE)
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL batch dedup against a PERSISTED claim table,
-    driver-gated (r11 verdict item 1 — the nightly-pipeline shape):
-    build_claim_table materializes the first half of the corpus's
-    fingerprints, then dedup_against_claims admits a new slice — here
-    the full corpus UNIONed with a re-delivered copy of itself at
-    doc_id + _SLICE_OFFSET, so every admission path does real work at
-    gate scale: fps claimed by the table REJECT (first half), later
-    within-slice arrivals of the same fp REJECT (every re-delivered
-    copy), and unclaimed slice-firsts ADMIT (second half). The oracle
-    states the same three-way verdict in closed form. Table
-    advancement + replay idempotence + N-advances==one-shot are
-    pinned in tests (advance_claim_table/compact_claim_table).
+    oracle-gated (the nightly-pipeline shape): build_claim_table
+    materializes the first half of the corpus's fingerprints, then
+    dedup_against_claims admits a new slice — the full corpus UNIONed
+    with a re-delivered copy of itself at doc_id + _SLICE_OFFSET, so
+    every admission path does real work at gate scale: fps claimed by
+    the table REJECT (first half), later within-slice arrivals of the
+    same fp REJECT (every re-delivered copy), and unclaimed
+    slice-firsts ADMIT (second half). The oracle states the same
+    three-way verdict in closed form. Table advancement + replay
+    idempotence + N-advances==one-shot are pinned in tests.
 
-    Scale: the anti-join-shaped claim join touches fingerprints only
-    (16 bytes/row; AQE broadcasts iff the table measures small, and
-    the bucketed layout removes the claims-side shuffle entirely —
-    write_claims_bucketed); nothing rescans prior slices' text, which
-    is the entire point of the persisted state at 100 TB."""
+    Scale: the claim join touches fingerprints only; nothing rescans
+    prior slices' text, which is the entire point of the persisted
+    state at 100 TB."""
     docs = load(spark, sf_dir, "documents")
-    mm = docs.agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")).first()
-    mid = (mm.mn + mm.mx) // 2
-    claims_dir = tempfile.mkdtemp(prefix="flod_claims_")
-    build_claim_table(docs.filter(F.col("doc_id") <= mid), claims_dir)
-    slice_df = docs.select("doc_id", "text").unionByName(
-        docs.select(
-            (F.col("doc_id") + F.lit(_SLICE_OFFSET)).alias("doc_id"), "text"
+    _, mid = quarter_cuts(docs)
+    with tempfile.TemporaryDirectory(
+        prefix="flod_claims_", ignore_cleanup_errors=True
+    ) as root:
+        claims_dir = os.path.join(root, "claims")
+        build_claim_table(docs.filter(F.col("doc_id") <= mid), claims_dir)
+        return serve_and_cleanup(
+            dedup_against_claims(_redelivered(docs), spark, claims_dir)
         )
-    )
-    from flod_spark.io import serve_and_cleanup
 
-    return serve_and_cleanup(
-        dedup_against_claims(slice_df, spark, claims_dir), claims_dir
-    )
+
+# -- fuzzy claims: the (band, bs) key ------------------------------------------
 
 
 def _band_sig_rows(docs: DataFrame) -> DataFrame:
@@ -1624,100 +1638,49 @@ def admit_by_first_carrier(sig: DataFrame, claims: DataFrame) -> DataFrame:
     Scale: one (band, bs) window min within the slice + one
     anti-join-shaped left join against claims — both on signature-sized
     keys; text never reaches either exchange."""
-    w = Window.partitionBy("band", "bs")
-    first = F.col("doc_id") == F.min("doc_id").over(w)
-    seen = claims.select("band", "bs").distinct().withColumn("_seen", F.lit(True))
-    per_sig = sig.join(seen, ["band", "bs"], "left").select(
-        "doc_id",
-        (first & F.col("_seen").isNull()).cast("int").alias("_novel"),
+    seen = claims.select(*BAND_KEY).distinct()
+    per_sig = admit_against(sig, seen, BAND_KEY).select(
+        "doc_id", F.col("admitted").cast("int").alias("_novel")
     )
-    return per_sig.groupBy("doc_id").agg(
-        (F.min("_novel") == 1).alias("admitted")
-    )
+    return per_sig.groupBy("doc_id").agg((F.min("_novel") == 1).alias("admitted"))
 
 
 def build_minhash_claims(docs: DataFrame, claims_dir: str) -> None:
-    """Materialize the FUZZY claim table — (band, bs, first_id), one
-    row per band signature ever seen with its first carrier — the
-    dedup_incremental analog for NEAR-duplicates (the nightly fuzzy
-    dedup job's persisted state). Same slice-partitioned layout and
-    idempotent-advance discipline as the exact claim table.
-
-    Scale: signatures are |docs| x BANDS short strings; the build is
-    one partial-agg exchange on (band, bs); the table never stores
-    text or shingles."""
-    (
-        _band_sig_rows(docs)
-        .groupBy("band", "bs")
-        .agg(F.min("doc_id").alias("first_id"))
-        .withColumn("slice", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("slice")
-        .parquet(claims_dir)
-    )
+    """The FUZZY claim table (band, bs, first_id, slice): every band
+    signature with its first carrier. Contract: build_claims."""
+    build_claims(_band_sig_rows(docs), BAND_KEY, claims_dir)
 
 
 def dedup_minhash_against_claims(
     docs: DataFrame, spark: SparkSession, claims_dir: str
 ) -> DataFrame:
-    """Near-dup dedup of a NEW SLICE against the persisted fuzzy claim
-    table: (doc_id, admitted) by admit_by_first_carrier over the
-    slice's band signatures. The caller then advances the table with
+    """Near-dup dedup of a NEW SLICE against the fuzzy claim table:
+    (doc_id, admitted) by admit_by_first_carrier over the slice's band
+    signatures. The caller then advances the table with
     advance_minhash_claims; nothing ever rescans prior slices' text —
-    the claim table carries everything transitivity needs.
-
-    Scale: dedup_minhash's signature cost (map-side shingle hashing +
-    one per-doc partial agg) + the signature-keyed admission joins.
-    The dir is repaired first (recover_swap_dir — the _claims_fp_side
-    read-side discipline for the fuzzy table's compactor)."""
-    from flod_spark.io import recover_swap_dir
-
-    recover_swap_dir(claims_dir)
-    claims = spark.read.parquet(claims_dir)
-    return admit_by_first_carrier(_band_sig_rows(docs), claims)
+    the claim table carries everything transitivity needs."""
+    return admit_by_first_carrier(_band_sig_rows(docs), read_claims(spark, claims_dir))
 
 
 def advance_minhash_claims(
     docs: DataFrame, spark: SparkSession, claims_dir: str, slice_id: int
 ) -> None:
     """ADVANCE the fuzzy claim table with one slice's signatures: every
-    (band, bs) the slice carries that is not yet claimed lands as
+    (band, bs) the slice carries that no OTHER slice claims lands as
     partition ``slice=<slice_id>`` with its within-slice first carrier
-    (dynamic partition overwrite — replayed advances are idempotent,
-    the advance_claim_table discipline). ALL slice signatures advance,
-    not only admitted docs' — rejected docs' signatures must become
-    'seen' or transitive rejection breaks on the next slice.
+    (build_claims' idempotent slice write). ALL slice signatures
+    advance, not only admitted docs' — rejected docs' signatures must
+    become 'seen' or transitive rejection breaks on the next slice."""
+    existing = read_claims(spark, claims_dir, own_slice=slice_id)
+    fresh = first_carriers(_band_sig_rows(docs), BAND_KEY).join(
+        existing.select(*BAND_KEY).distinct(), list(BAND_KEY), "left_anti"
+    )
+    write_claim_slice(fresh, claims_dir, slice_id)
 
-    Scale: one signature-level groupBy + one anti-join against the
-    current claims; compact with compact_claim_table's pattern when
-    slice count grows."""
-    sig = (
-        _band_sig_rows(docs)
-        .groupBy("band", "bs")
-        .agg(F.min("doc_id").alias("first_id"))
-    )
-    # exclude the slice being (re)written from the dedup base: a crashed
-    # half-written advance must not hide its own partial rows from the
-    # retry — the retry recomputes the FULL partition and dynamic
-    # overwrite replaces it whole
-    existing = (
-        spark.read.parquet(claims_dir)
-        .filter(F.col("slice") != int(slice_id))
-        .select("band", "bs")
-        .distinct()
-    )
-    fresh = sig.join(existing, ["band", "bs"], "left_anti")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            fresh.withColumn("slice", F.lit(int(slice_id)))
-            .write.mode("overwrite")
-            .partitionBy("slice")
-            .parquet(claims_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+def compact_minhash_claims(spark: SparkSession, claims_dir: str) -> None:
+    """compact_claim_table over the (band, bs) key."""
+    compact_claim_table(spark, claims_dir, key=BAND_KEY)
 
 
 def _minhash_incremental_oracle() -> str:
@@ -1765,105 +1728,77 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys only; no prior slice's text is ever rescanned, which is the
     point of the persisted fuzzy state at 100 TB."""
     docs = load(spark, sf_dir, "documents")
-    mm = docs.agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")).first()
-    mid = (mm.mn + mm.mx) // 2
-    claims_dir = tempfile.mkdtemp(prefix="flod_mh_claims_")
-    build_minhash_claims(docs.filter(F.col("doc_id") <= mid), claims_dir)
-    slice_df = docs.select("doc_id", "text").unionByName(
-        docs.select(
-            (F.col("doc_id") + F.lit(_SLICE_OFFSET)).alias("doc_id"), "text"
+    _, mid = quarter_cuts(docs)
+    with tempfile.TemporaryDirectory(
+        prefix="flod_mh_claims_", ignore_cleanup_errors=True
+    ) as root:
+        claims_dir = os.path.join(root, "claims")
+        build_minhash_claims(docs.filter(F.col("doc_id") <= mid), claims_dir)
+        return serve_and_cleanup(
+            dedup_minhash_against_claims(_redelivered(docs), spark, claims_dir)
         )
-    )
-    from flod_spark.io import serve_and_cleanup
-
-    return serve_and_cleanup(
-        dedup_minhash_against_claims(slice_df, spark, claims_dir), claims_dir
-    )
 
 
-def compact_minhash_claims(spark: SparkSession, claims_dir: str) -> None:
-    """Periodic FUZZY claim-table compaction: fold all slice partitions
-    back into slice=0 (groupBy (band, bs), min first_id — values
-    unchanged: each signature lives in exactly one slice) and
-    atomically swap the directory — compact_claim_table's pattern over
-    the (band, bs) key.
-
-    Scale: one exchange on the signature key over |distinct
-    signatures| rows; the swap is a rename (manifest commit on object
-    stores)."""
-    from flod_spark.io import atomic_swap_dir, recover_swap_dir
-
-    recover_swap_dir(claims_dir)
-    compacted = (
-        spark.read.parquet(claims_dir)
-        .groupBy("band", "bs")
-        .agg(F.min("first_id").alias("first_id"))
-        .withColumn("slice", F.lit(0))
-    )
-    atomic_swap_dir(compacted, claims_dir, "slice")
+def _compacted_lifecycle(
+    spark: SparkSession, sf_dir: str, prefix: str, bucketed: bool
+) -> DataFrame:
+    """The FULL exact claim-table lifecycle: build the corpus's first
+    QUARTER, admit-and-advance the second quarter as slice 1, COMPACT
+    (optionally refreshing an fp-bucketed catalog table), then dedup
+    dedup_incremental's slice against the compacted table — through
+    the bucketed table when there is one. N advances == the one-shot
+    build and compaction is value-neutral, so the verdicts equal
+    dedup_incremental's bit for bit."""
+    docs = load(spark, sf_dir, "documents")
+    q1, mid = quarter_cuts(docs)
+    with tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True) as root:
+        claims_dir = os.path.join(root, "claims")
+        tbl = prefix + uuid.uuid4().hex[:10] if bucketed else None
+        build_claim_table(docs.filter(F.col("doc_id") <= q1), claims_dir)
+        verdicts = dedup_against_claims(
+            docs.filter((F.col("doc_id") > q1) & (F.col("doc_id") <= mid)).select(
+                "doc_id", "text"
+            ),
+            spark,
+            claims_dir,
+        )
+        advance_claim_table(verdicts, claims_dir, slice_id=1)
+        compact_claim_table(spark, claims_dir, bucketed_table=tbl)
+        out = serve_and_cleanup(
+            dedup_against_claims(
+                _redelivered(docs), spark, claims_dir, bucketed_table=tbl
+            )
+        )
+        if tbl is not None:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        return out
 
 
 @query("dedup_claims_compacted", oracle=_INCR_CLAIMS_ORACLE)
 def dedup_claims_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL claim-table lifecycle as one driver-gated query (r12
-    verdict item 3): build the table over the corpus's first QUARTER,
-    admit-and-advance the second quarter as slice 1, COMPACT the two
-    slices back to one (compact_claim_table -> atomic_swap_dir), then
-    dedup the same union slice dedup_incremental uses against the
-    compacted table. Because N advances == the one-shot build
-    (pytest-pinned) and compaction is value-neutral on (fp, first_id),
-    the admission verdicts are bit-identical to dedup_incremental's —
-    so this reuses dedup_incremental's ORACLE VERBATIM: any drift in
-    build, advance, the swap, or the fold shows up as a hash mismatch.
+    """The FULL claim-table lifecycle as one oracle-gated query
+    (_compacted_lifecycle: build, advance, compact, admit). Because the
+    admission verdicts are bit-identical to dedup_incremental's, this
+    reuses dedup_incremental's ORACLE VERBATIM: any drift in build,
+    advance, the swap, or the fold shows up as a hash mismatch.
 
     Scale: the compaction is one exchange on fp over |distinct
     contents| rows plus a rename (manifest commit on object stores);
     everything else is dedup_incremental's plan — fingerprints only,
     nothing rescans prior slices' text. The gate's temp claim tree is
-    swept after the verdicts materialize (serve_and_cleanup — r13
-    advice: the lifecycle gates used to leak their mkdtemp state)."""
-    docs = load(spark, sf_dir, "documents")
-    mm = docs.agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")).first()
-    mid = (mm.mn + mm.mx) // 2
-    q1 = (mm.mn + mid) // 2
-    claims_dir = tempfile.mkdtemp(prefix="flod_claims_cpt_")
-    build_claim_table(docs.filter(F.col("doc_id") <= q1), claims_dir)
-    verdicts = dedup_against_claims(
-        docs.filter((F.col("doc_id") > q1) & (F.col("doc_id") <= mid)).select(
-            "doc_id", "text"
-        ),
-        spark,
-        claims_dir,
-    )
-    advance_claim_table(verdicts, claims_dir, slice_id=1)
-    compact_claim_table(spark, claims_dir)
-    slice_df = docs.select("doc_id", "text").unionByName(
-        docs.select(
-            (F.col("doc_id") + F.lit(_SLICE_OFFSET)).alias("doc_id"), "text"
-        )
-    )
-    from flod_spark.io import serve_and_cleanup
-
-    return serve_and_cleanup(
-        dedup_against_claims(slice_df, spark, claims_dir), claims_dir
-    )
+    swept after the verdicts materialize."""
+    return _compacted_lifecycle(spark, sf_dir, "flod_claims_cpt_", bucketed=False)
 
 
 @query("dedup_claims_bucketed", oracle=_INCR_CLAIMS_ORACLE)
 def dedup_claims_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The claim lifecycle served through the FP-BUCKETED layout — the
-    100 TB admission join as CODE, driver-gated (r14 verdict item 4:
-    write_claims_bucketed used to exist only as a pytest-pinned plan
-    property; this row proves the layout is admission-INVISIBLE).
-    dedup_claims_compacted's exact sequence — build the first quarter,
-    admit+advance the second quarter, compact — except the compaction
-    ALSO refreshes the fp-bucketed catalog table, and tonight's
-    admission joins against THAT (dedup_against_claims'
-    bucketed_table path: bucket-sorted scans feed the SortMergeJoin
-    with no claims-side exchange and no distinct — uniqueness is by
-    construction of the compacted fold). Oracle =
-    dedup_incremental's VERBATIM, the compacted-gate discipline: the
-    serving layout must change NOTHING about who is admitted.
+    100 TB admission join as CODE, oracle-gated: dedup_claims_compacted's
+    exact sequence, except the compaction ALSO refreshes the fp-bucketed
+    catalog table, and the admission joins against THAT (bucket-sorted
+    scans feed the SortMergeJoin with no claims-side exchange and no
+    distinct). Oracle = dedup_incremental's VERBATIM: the serving layout
+    must change NOTHING about who is admitted.
 
     Scale: this is the plan the nightly job runs at 100 TB — the
     claims side (billions of 16-byte fps) never shuffles again after
@@ -1871,35 +1806,4 @@ def dedup_claims_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bucket function and merges. The gate's temp claim tree,
     bucketed files, and catalog entry are all swept after the
     verdicts materialize."""
-    import uuid as _uuid
-
-    from flod_spark.io import serve_and_cleanup
-
-    docs = load(spark, sf_dir, "documents")
-    mm = docs.agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")).first()
-    mid = (mm.mn + mm.mx) // 2
-    q1 = (mm.mn + mid) // 2
-    claims_dir = tempfile.mkdtemp(prefix="flod_claims_bkt_")
-    tbl = "flod_claims_bkt_" + _uuid.uuid4().hex[:10]
-    build_claim_table(docs.filter(F.col("doc_id") <= q1), claims_dir)
-    verdicts = dedup_against_claims(
-        docs.filter((F.col("doc_id") > q1) & (F.col("doc_id") <= mid)).select(
-            "doc_id", "text"
-        ),
-        spark,
-        claims_dir,
-    )
-    advance_claim_table(verdicts, claims_dir, slice_id=1)
-    compact_claim_table(spark, claims_dir, bucketed_table=tbl)
-    slice_df = docs.select("doc_id", "text").unionByName(
-        docs.select(
-            (F.col("doc_id") + F.lit(_SLICE_OFFSET)).alias("doc_id"), "text"
-        )
-    )
-    out = serve_and_cleanup(
-        dedup_against_claims(slice_df, spark, claims_dir, bucketed_table=tbl),
-        claims_dir,
-        claims_dir.rstrip("/") + ".bucketed",
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    return out
+    return _compacted_lifecycle(spark, sf_dir, "flod_claims_bkt_", bucketed=True)

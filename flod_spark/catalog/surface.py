@@ -12,7 +12,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flod_spark.io import load, serve_and_cleanup
+from flod_spark.io import dir_has_parquet, load, recover_swap_dir, serve_and_cleanup
 from flod_spark.registry import query
 from flod_spark.streaming.gate import drain, spool
 
@@ -1914,43 +1914,32 @@ def stream_crawl_extract_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         return drain(admitted, spark).select("doc_id", "fp", "n_chars")
 
 
-def _dir_has_parquet(d: str) -> bool:
-    """io.dir_has_parquet under its original local name (the r14 ADVICE
-    fix landed here first; the helper moved to io.py when the IVF-PQ
-    slice reads needed the same guard)."""
-    from flod_spark.io import dir_has_parquet
-
-    return dir_has_parquet(d)
-
-
 def crawl_claims_sink(claims_dir: str, bucketed_table: str | None = None):
     """The foreachBatch sink that admits a micro-batch against the
     persisted parquet claim table and ADVANCES it — module-level so the
     checkpoint-restart test drives the EXACT sink the gated query runs.
+    The table is the fp-keyed claim table of catalog/dedup.py, with
+    n_chars carried; its layout, reserved slice 0, idempotent slice
+    writes and compaction crash order are the contract stated in
+    dedup.build_claims.
 
-    Slice ids: the sink writes batch b as partition ``slice = b + 1`` —
-    slice 0 is RESERVED for compact_claim_table's fold (r15 ADVICE,
-    medium: with slice = batch_id, a stream started on a FRESH
-    checkpoint over an existing compacted table got batch_id 0 and its
-    dynamic overwrite replaced the entire compacted base with one
-    batch's admissions, while the dir-path seen read excluded the base
-    as the batch's own slice).
+    Slice ids: the sink writes batch b as partition ``slice = b + 1``,
+    because slice 0 is the compaction fold's: with slice = batch_id, a
+    stream started on a FRESH checkpoint over an existing compacted
+    table got batch_id 0 and replaced the entire compacted base with
+    one batch's admissions.
 
-    Idempotence holds by construction, not by committer luck (r14
-    verdict, What's wrong #1): the ``seen`` read EXCLUDES the batch's
-    own ``slice == batch_id + 1`` partition, so a trigger re-delivered
-    after a restart-from-checkpoint (where the in-memory ``last`` guard
-    has reset) recomputes its admission set against only the OTHER
-    slices and dynamically overwrites its own slice with identical
-    rows — a partially-written prior attempt is fully replaced rather
-    than read back as already-seen (which would silently admit nothing
-    and strand a half-visible slice). The in-memory guard stays as the
-    same-run fast path. All reads gate on real part files
-    (_dir_has_parquet), so an all-rejected first batch cannot poison
-    later reads (r14 ADVICE, medium).
+    Idempotence holds by construction, not by committer luck: the
+    ``seen`` read EXCLUDES the batch's own slice, so a trigger
+    re-delivered after a restart-from-checkpoint (where the in-memory
+    ``last`` guard has reset) recomputes its admission set against only
+    the OTHER slices and rewrites its own slice with identical rows — a
+    partially-written prior attempt is fully replaced rather than read
+    back as already-seen. The in-memory guard stays as the same-run
+    fast path. All reads gate on real part files (io.dir_has_parquet),
+    so an all-rejected first batch cannot poison later reads.
 
-    ``bucketed_table`` is the 100 TB ``seen`` read (closing the r14
-    scale note as code, not a docstring): when the nightly
+    ``bucketed_table`` is the 100 TB ``seen`` read: when the nightly
     compact_claim_table(bucketed_table=...) has refreshed the
     fp-bucketed layout, every compacted fp lives in slice=0 AND in the
     bucketed table, and any ``slice != 0`` partition was by
@@ -1961,79 +1950,61 @@ def crawl_claims_sink(claims_dir: str, bucketed_table: str | None = None):
     only the small post-compaction slices (pytest-pinned bit-equal to
     the full-dir read). Without it the per-trigger read is the whole
     claim table — fine nightly, the gate's documented form."""
+    from flod_spark.catalog.dedup import (
+        FP_KEY,
+        first_in_slice,
+        read_claims,
+        write_claim_slice,
+    )
+
     state = {"last": -1, "schema": None}
 
-    def _read_claims(sess):
-        # schema-cached dir read (r17, §6/§1.2): the per-trigger seen
-        # read used to re-infer the table schema from parquet footers
-        # every trigger; the schema is fixed for the table's lifetime,
-        # so infer it ONCE (first trigger with data) and pass it
-        # explicitly afterwards — the read still re-lists the dir (new
-        # slices must appear) but skips the footer-inference job.
-        # Bit-identical by construction: the cached schema IS the
-        # inferred one.
+    def _read_claims(sess, own):
+        # schema-cached dir read: the per-trigger seen read used to
+        # re-infer the table schema from parquet footers every trigger;
+        # the schema is fixed for the table's lifetime, so infer it ONCE
+        # (first trigger with data) and pass it explicitly afterwards —
+        # the read still re-lists the dir (new slices must appear) but
+        # skips the footer-inference job. Bit-identical by construction:
+        # the cached schema IS the inferred one.
+        df = read_claims(sess, claims_dir, own_slice=own, schema=state["schema"])
         if state["schema"] is None:
-            df = sess.read.parquet(claims_dir)
             state["schema"] = df.schema
-            return df
-        return sess.read.schema(state["schema"]).parquet(claims_dir)
+        return df
 
     def advance(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= state["last"]:
             return  # same-run replayed trigger: its slice is already on disk
         sess = batch_df.sparkSession
         # a nightly compactor can crash between its two renames, leaving
-        # the table as <dir>.compact — repair before reading (idempotent
-        # no-op in the healthy state), else this trigger would see an
-        # absent dir and re-admit everything (recover_swap_dir's
-        # documented crash window, now covered on the SINK side too)
-        from flod_spark.io import recover_swap_dir
-
+        # the table as <dir>.compact — repair before the part-file gate
+        # below, else this trigger would see an absent dir and re-admit
+        # everything
         recover_swap_dir(claims_dir)
-        w = Window.partitionBy("fp")
-        firsts = batch_df.withColumn(
-            "admitted", F.col("doc_id") == F.min("doc_id").over(w)
-        ).filter("admitted")
-        # slice 0 is RESERVED for the compaction fold (r15 ADVICE,
-        # medium): live slices land as batch_id + 1, so a stream started
-        # on a FRESH checkpoint over an existing compacted table cannot
-        # overwrite the base with batch 0's admissions, and the
-        # non-bucketed seen read keeps covering the base. The own-slice
-        # exclusion (replay idempotence) follows the same shift.
+        firsts = batch_df.withColumn("admitted", first_in_slice(FP_KEY)).filter(
+            "admitted"
+        )
         own = int(batch_id) + 1
         seen = None
         if bucketed_table is not None and sess.catalog.tableExists(bucketed_table):
-            seen = sess.table(bucketed_table).select("fp")
-            if _dir_has_parquet(claims_dir):
+            seen = sess.table(bucketed_table).select(*FP_KEY)
+            if dir_has_parquet(claims_dir):
                 seen = seen.unionByName(
-                    _read_claims(sess)
-                    .filter(
-                        (F.col("slice") != 0) & (F.col("slice") != F.lit(own))
-                    )
-                    .select("fp")
+                    _read_claims(sess, own).filter(F.col("slice") != 0).select(*FP_KEY)
                 )
-        elif _dir_has_parquet(claims_dir):
-            seen = (
-                _read_claims(sess)
-                .filter(F.col("slice") != F.lit(own))
-                .select("fp")
-            )
+        elif dir_has_parquet(claims_dir):
+            seen = _read_claims(sess, own).select(*FP_KEY)
         if seen is not None:
             # LEFT ANTI, not flag-join: immune to fp duplicates in a
             # malformed claim table (an anti join never fans out the
             # batch side), and it drops the per-trigger distinct
             # exchange the flag-join needed for the same guarantee
-            firsts = firsts.join(seen, "fp", "left_anti")
-        adm = (
-            firsts.select("fp", F.col("doc_id").alias("first_id"), "n_chars")
-            .withColumn("slice", F.lit(own))
+            firsts = firsts.join(seen, list(FP_KEY), "left_anti")
+        write_claim_slice(
+            firsts.select(*FP_KEY, F.col("doc_id").alias("first_id"), "n_chars"),
+            claims_dir,
+            own,
         )
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            adm.write.mode("overwrite").partitionBy("slice").parquet(claims_dir)
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         state["last"] = batch_id
 
     return advance
@@ -2058,9 +2029,9 @@ def stream_crawl_claims_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch (stateless), then a foreachBatch sink admits the batch
     against the claim TABLE (anti-join on fp + within-batch first
     arrival) and ADVANCES it — each batch lands as its own
-    slice=batch_id+1 partition via dynamic partition overwrite, so a
+    slice=batch_id+1 partition (dedup.write_claim_slice), so a
     replayed trigger overwrites its own slice instead of
-    double-claiming (advance_claim_table's idempotence discipline +
+    double-claiming (the claim-table contract in dedup.build_claims +
     the stream_foreach_upsert_live monotone batch_id guard). The
     admitted rows ARE the table: the final answer reads (first_id,
     fp, n_chars) straight from the claims — output and durable state
@@ -2092,7 +2063,7 @@ def stream_crawl_claims_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ext = _crawl_extract_quality(members)
         drain(ext, spark, foreach_batch=crawl_claims_sink(claims_dir))
-        if not _dir_has_parquet(claims_dir):
+        if not dir_has_parquet(claims_dir):
             return spark.createDataFrame([], "doc_id long, fp string, n_chars long")
         return serve_and_cleanup(
             spark.read.parquet(claims_dir).select(
@@ -2133,17 +2104,16 @@ def _crawl_incr_oracle() -> str:
     )
 
 
-def _crawl_slice_extract(spark: SparkSession, pages: DataFrame, prefix: str):
-    """Crawl ONE slice of planted pages: pack to WARC shards, scan the
-    members back with content bytes, extract + quality-filter — the
-    stateless front of the crawl chain, returning the (doc_id, fp,
-    n_chars) survivors and the shard dir (caller sweeps it). Each
-    nightly slice pays exactly this: one shard-key shuffle + map-side
-    WARC writes, then member split + extraction fused per shard."""
-    out_dir = tempfile.mkdtemp(prefix=prefix)
+def _crawl_slice_extract(spark: SparkSession, pages: DataFrame, out_dir: str):
+    """Crawl ONE slice of planted pages into ``out_dir``: pack to WARC
+    shards, scan the members back with content bytes, extract +
+    quality-filter — the stateless front of the crawl chain, returning
+    the (doc_id, fp, n_chars) survivors. Each nightly slice pays exactly
+    this: one shard-key shuffle + map-side WARC writes, then member
+    split + extraction fused per shard."""
     pack_warc_shards(pages, out_dir).collect()  # bounded: one row per shard
     raw = spark.read.format("binaryFile").load(out_dir)
-    return _crawl_extract_quality(archive_member_rows(raw, keep_content=True)), out_dir
+    return _crawl_extract_quality(archive_member_rows(raw, keep_content=True))
 
 
 @query("crawl_pipeline_incremental", oracle=_crawl_incr_oracle())
@@ -2176,37 +2146,40 @@ def crawl_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     admit, one fp exchange per compaction); NOTHING rescans a prior
     slice's pages — the entire point of persisting the claim table at
     100 TB, where re-crawled URLs dominate nightly volume. The gate's
-    temp shard + claim trees are swept once the verdicts materialize
-    (serve_and_cleanup)."""
+    shard and claim trees live under one temp root, swept once the
+    verdicts materialize."""
+    import os
+
     from flod_spark.catalog.dedup import (
         admit_fp_rows_against_claims,
         advance_claim_table,
         build_fp_claim_table,
         compact_claim_table,
+        quarter_cuts,
     )
+
     docs = load(spark, sf_dir, "documents")
-    mm = docs.agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")).first()
-    mid = (mm.mn + mm.mx) // 2
-    q1 = (mm.mn + mid) // 2
+    q1, mid = quarter_cuts(docs)
     pages = _crawl_pages(docs)
+    with tempfile.TemporaryDirectory(
+        prefix="flod_crawl_incr_", ignore_cleanup_errors=True
+    ) as root:
+        claims_dir = os.path.join(root, "claims")
+        ext1 = _crawl_slice_extract(
+            spark, pages.filter(F.col("doc_id") <= q1), os.path.join(root, "shards1")
+        )
+        build_fp_claim_table(ext1, claims_dir)
 
-    ext1, dir1 = _crawl_slice_extract(
-        spark, pages.filter(F.col("doc_id") <= q1), "flod_crawl_incr1_"
-    )
-    claims_dir = tempfile.mkdtemp(prefix="flod_crawl_claims_")
-    build_fp_claim_table(ext1, claims_dir)
+        ext2 = _crawl_slice_extract(
+            spark,
+            pages.filter((F.col("doc_id") > q1) & (F.col("doc_id") <= mid)),
+            os.path.join(root, "shards2"),
+        )
+        verdicts2 = admit_fp_rows_against_claims(ext2, spark, claims_dir)
+        advance_claim_table(verdicts2, claims_dir, slice_id=1)
+        compact_claim_table(spark, claims_dir)
 
-    ext2, dir2 = _crawl_slice_extract(
-        spark,
-        pages.filter((F.col("doc_id") > q1) & (F.col("doc_id") <= mid)),
-        "flod_crawl_incr2_",
-    )
-    verdicts2 = admit_fp_rows_against_claims(ext2, spark, claims_dir)
-    advance_claim_table(verdicts2, claims_dir, slice_id=1)
-    compact_claim_table(spark, claims_dir)
-
-    ext3, dir3 = _crawl_slice_extract(
-        spark, pages.filter(F.col("doc_id") > mid), "flod_crawl_incr3_"
-    )
-    out = admit_fp_rows_against_claims(ext3, spark, claims_dir)
-    return serve_and_cleanup(out, dir1, dir2, dir3, claims_dir)
+        ext3 = _crawl_slice_extract(
+            spark, pages.filter(F.col("doc_id") > mid), os.path.join(root, "shards3")
+        )
+        return serve_and_cleanup(admit_fp_rows_against_claims(ext3, spark, claims_dir))

@@ -24,6 +24,7 @@ Determinism rules (so the driver's order-insensitive value-hash matches):
 from __future__ import annotations
 
 import functools
+import hashlib
 import importlib
 import os
 import tempfile
@@ -36,6 +37,35 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+
+
+def _package_zip(pkg_dir: str, ship_dir: str) -> str:
+    """The zip of ``pkg_dir``'s ``.py`` files under ``ship_dir``, named
+    by a hash of their relative paths and bytes and built only when no
+    zip of that content exists. Keying on content, not mtimes, means
+    two checkouts sharing one temp root can never ship each other's
+    code, whatever their file times."""
+    sources = sorted(
+        os.path.relpath(os.path.join(root, f), pkg_dir)
+        for root, _dirs, files in os.walk(pkg_dir)
+        for f in files
+        if f.endswith(".py")
+    )
+    h = hashlib.sha256()
+    for rel in sources:
+        with open(os.path.join(pkg_dir, rel), "rb") as fh:
+            data = fh.read()
+        h.update(f"{rel}\0{len(data)}\0".encode())
+        h.update(data)
+    os.makedirs(ship_dir, exist_ok=True)
+    zpath = os.path.join(ship_dir, f"flod_spark_pkg_{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(zpath):
+        tmp = zpath + ".tmp"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for rel in sources:
+                z.write(os.path.join(pkg_dir, rel), os.path.join("flod_spark", rel))
+        os.replace(tmp, zpath)
+    return zpath
 
 
 def ensure_shipped(spark: SparkSession) -> None:
@@ -54,26 +84,7 @@ def ensure_shipped(spark: SparkSession) -> None:
     # no-leak pytests sweep (dot-prefixed dir): the zip is not per-query
     # state, it lives as long as the scratch root does
     ship_dir = os.path.join(tempfile.gettempdir(), ".flod_ship")
-    os.makedirs(ship_dir, exist_ok=True)
-    zpath = os.path.join(ship_dir, "flod_spark_pkg.zip")
-    # rebuild when any source is newer than the cached zip — a stale zip
-    # makes workers fail to unpickle by-reference functions added since
-    src_mtime = max(
-        os.path.getmtime(os.path.join(root, f))
-        for root, _dirs, files in os.walk(pkg_dir)
-        for f in files
-        if f.endswith(".py")
-    )
-    if not os.path.exists(zpath) or os.path.getmtime(zpath) < src_mtime:
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join("flod_spark", os.path.relpath(full, pkg_dir))
-                        z.write(full, rel)
-        os.replace(tmp, zpath)
+    zpath = _package_zip(pkg_dir, ship_dir)
     spark.sparkContext.addPyFile(zpath)
     spark._flod_spark_shipped = True
 

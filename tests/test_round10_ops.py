@@ -621,7 +621,7 @@ def test_sessionize_timeout_checkpoint_recovery(spark, sf_dir, tmp_path):
     assert interrupted == want
 
 
-def test_bpe_apply_merges_matches_registered_form(spark, sf_dir):
+def test_bpe_apply_merges_matches_registered_form(spark, sf_dir, tmp_path):
     """The production inference path (shipped merge table in, no
     re-training) equals the registered bpe_apply bit-for-bit when fed
     the table its train loop produces — and the merge table round-trips
@@ -634,9 +634,7 @@ def test_bpe_apply_merges_matches_registered_form(spark, sf_dir):
     ensure_shipped(spark)
     merges = _bpe_merge_list(spark, sf_dir)
     # ship/load round-trip: write the artifact, read it back in order
-    import tempfile
-
-    ship = tempfile.mkdtemp(prefix="flod_bpe_ship_")
+    ship = str(tmp_path / "bpe_ship")
     spark.createDataFrame(
         merges, "round int, pair string, cnt long"
     ).write.mode("overwrite").parquet(ship)

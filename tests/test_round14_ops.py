@@ -19,7 +19,7 @@ def _uni_trained_vocab(spark, sf_dir):
     return vocab
 
 
-def test_unigram_vocab_delivery_forms_are_bit_identical(spark, sf_dir):
+def test_unigram_vocab_delivery_forms_are_bit_identical(spark, sf_dir, tmp_path):
     """The r13 verdict item-3 pin (fingerprint_winnow's three-
     implementations discipline): the JOIN-form vocab delivery
     (_uni_vmap_by_join — production, no literal ceiling) must produce
@@ -27,8 +27,6 @@ def test_unigram_vocab_delivery_forms_are_bit_identical(spark, sf_dir):
     gate scale. Compares full (doc_id, n_words, n_pieces) outputs of
     unigram_apply (literal) vs unigram_apply_from_table (join, via the
     saved artifact)."""
-    import tempfile
-
     from flod_spark.catalog.text import (
         unigram_apply,
         unigram_apply_from_table,
@@ -38,7 +36,7 @@ def test_unigram_vocab_delivery_forms_are_bit_identical(spark, sf_dir):
 
     lit_rows = sorted(map(tuple, unigram_apply(spark, sf_dir).collect()))
     vocab = _uni_trained_vocab(spark, sf_dir)
-    vdir = tempfile.mkdtemp(prefix="flod_test_univocab_")
+    vdir = str(tmp_path / "univocab")
     unigram_save_vocab(vocab, spark, vdir + "/v")
     docs = load(spark, sf_dir, "documents")
     join_rows = sorted(
@@ -149,29 +147,6 @@ def test_serve_and_cleanup_sweeps_dirs_and_result_survives(spark, tmp_path):
     assert not os.path.exists(d)
     got = sorted((r.id, r.v) for r in out.collect())
     assert got == [(i, 2 * i) for i in range(10)]
-
-
-def test_compacted_lifecycle_gates_do_not_leak_tmp(spark, sf_dir):
-    """r13 ADVICE (low): the compacted lifecycle gates used to leak a
-    full mkdtemp state tree per run. Run both registered queries and
-    assert no new flod-prefixed dirs survive in the temp root."""
-    import tempfile
-
-    import __spark_entry__ as e
-
-    troot = tempfile.gettempdir()
-
-    def snap():
-        return {
-            n
-            for n in os.listdir(troot)
-            if n.startswith(("flod_claims_cpt_", "flod_ivfpq_cpt_"))
-        }
-
-    before = snap()
-    e.queries()["dedup_claims_compacted"](spark, sf_dir).collect()
-    e.queries()["sim_ivfpq_compacted"](spark, sf_dir).collect()
-    assert snap() == before
 
 
 def test_crawl_incremental_matches_oneshot_and_is_nonvacuous(spark, sf_dir):

@@ -88,7 +88,8 @@ def test_crawl_claims_sink_empty_first_batch(spark, tmp_path):
     UNABLE_TO_INFER_SCHEMA. Reads now gate on real part files — pin
     that an all-rejected batch 0 is harmless and batch 1 admits
     normally against an effectively-empty table."""
-    from flod_spark.catalog.surface import _dir_has_parquet, crawl_claims_sink
+    from flod_spark.catalog.surface import crawl_claims_sink
+    from flod_spark.io import dir_has_parquet as _dir_has_parquet
 
     claims_dir = str(tmp_path / "claims")
     advance = crawl_claims_sink(claims_dir)
@@ -225,6 +226,11 @@ def test_bucketed_admission_invisible_and_shuffle_free(spark, sf_dir, tmp_path):
         "sink_tar_shards",
         "sink_warc_shards",
         "scan_bloom_pruned",
+        # the compacted lifecycle gates and the nightly crawl state
+        # machine (claim tree, bucketed files, three shard dirs)
+        "dedup_claims_compacted",
+        "sim_ivfpq_compacted",
+        "crawl_pipeline_incremental",
     ],
 )
 def test_gated_query_leaves_no_tmp_trees(spark, sf_dir, qk):
@@ -245,6 +251,50 @@ def test_gated_query_leaves_no_tmp_trees(spark, sf_dir, qk):
     # the package-ship zip and checkpoint dirs are swept by their own
     # paths; nothing new may remain
     assert not leaked, f"{qk} leaked temp trees: {sorted(leaked)}"
+
+
+def test_shipped_package_zip_is_keyed_by_content(tmp_path, monkeypatch):
+    """Two package trees sharing one temp root each ship their OWN code:
+    the second tree's files are older than the first tree's zip (an
+    archive of an earlier commit checked out later), which an mtime
+    test would take for an up-to-date zip."""
+    import tempfile
+    import time
+    import types
+    import zipfile
+
+    from flod_spark import registry
+
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+
+    def tree(name, body, mtime):
+        pkg = tmp_path / name / "flod_spark"
+        pkg.mkdir(parents=True)
+        (pkg / "registry.py").write_text("# registry\n")
+        (pkg / "mod.py").write_text(body)
+        for f in pkg.iterdir():
+            os.utime(f, (mtime, mtime))
+        return pkg
+
+    def shipped_mod(pkg):
+        added = []
+        spark = types.SimpleNamespace(
+            sparkContext=types.SimpleNamespace(addPyFile=added.append)
+        )
+        monkeypatch.setattr(registry, "__file__", str(pkg / "registry.py"))
+        registry.ensure_shipped(spark)
+        (zpath,) = added
+        with zipfile.ZipFile(zpath) as z:
+            return z.read("flod_spark/mod.py").decode()
+
+    now = time.time()
+    first = tree("a", "X = 'first'\n", now - 100)
+    second = tree("b", "X = 'second'\n", now - 10_000)
+    assert shipped_mod(first) == "X = 'first'\n"
+    assert shipped_mod(second) == "X = 'second'\n"
+    assert shipped_mod(first) == "X = 'first'\n"
 
 
 def test_ivfpq_ingest_sink_batching_invisible(spark, sf_dir, tmp_path):

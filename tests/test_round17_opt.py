@@ -288,9 +288,10 @@ def test_shard_fold_matches_per_key_fold(gate, seed):
 
 @pytest.mark.parametrize("gate", ["ewma", "cusum", "drawdown", "rsi", "boll"])
 def test_shard_fold_invariant_under_chunked_drain(gate):
-    """The _det_drain whole-shard lexsort makes the fold independent of
-    Arrow chunking AND of row order within a trigger (the
-    test_round10 tiny-chunk pin, applied at the fold level)."""
+    """packed_user_fold's whole-shard drain + lexsort (by user_id, us,
+    event_id) makes the fold independent of Arrow chunking AND of row
+    order within a trigger (the test_round10 tiny-chunk pin, applied at
+    the fold level)."""
     shard_fn, ref_fn, vcol = _gate(gate)
     rng = np.random.default_rng(42)
     triggers = _mk_triggers(rng, n_users=11, n_triggers=4, vcol=vcol)

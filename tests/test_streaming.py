@@ -409,3 +409,23 @@ def test_packed_user_state_codec_only_in_packfold():
         if banned.search(line)
     ]
     assert not hits, hits
+
+
+def test_claim_slices_written_only_through_the_claims_seam():
+    """Claim-table slices are written only through catalog/dedup.py's
+    seam: no module flips the session-global partitionOverwriteMode
+    conf, the per-write option is passed in exactly one place
+    (write_claim_slice), and only dedup.py stamps a ``slice`` column."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "flod_spark"
+    sources = {p.relative_to(pkg).as_posix(): p.read_text() for p in pkg.rglob("*.py")}
+    conf_flip = re.compile(r"conf\.set\(\s*[\"'][^\"']*partitionOverwriteMode")
+    option = re.compile(r"[\"']partitionOverwriteMode[\"']")
+    flips = [rel for rel, text in sources.items() if conf_flip.search(text)]
+    options = [(rel, len(option.findall(text))) for rel, text in sources.items()]
+    stampers = [rel for rel, text in sources.items() if 'withColumn("slice"' in text]
+    assert not flips, flips
+    assert [o for o in options if o[1]] == [("catalog/dedup.py", 1)], options
+    assert stampers == ["catalog/dedup.py"], stampers
