@@ -17,6 +17,7 @@ Scale (100 TB embeddings):
 
 from __future__ import annotations
 
+import functools
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -52,6 +53,27 @@ def _dot_spark(a, b):
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _emb_v(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The similarity family's canonical corpus frame: non-null
+    embeddings as (vec_id, v: array<double>) — NULL ordering differs
+    cross-engine, so the oracles apply the same filter."""
+    return (
+        load(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select("vec_id", _as_double("embedding").alias("v"))
+    )
+
+
+def _queries(emb: DataFrame, *extra, v: str = "qv") -> DataFrame:
+    """The first-NQ query set (query_id, v AS ``v``, *extra) — the same
+    vec_id < NQ predicate every oracle's q CTE and the in-plan LUTs
+    use (an orderBy/limit head would diverge from them if any of the
+    first NQ ids were filtered out of the corpus)."""
+    return emb.filter(F.col("vec_id") < NQ).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias(v), *extra
+    )
 
 
 _QVEC_SQL = (
@@ -321,6 +343,22 @@ def _assign_cells(
     )
 
 
+def _probe(q: DataFrame, cent: DataFrame, *carry: str) -> DataFrame:
+    """(query_id, *carry, cell): each query's N_PROBE nearest IVF
+    centroids — cosine of (query_id, qv) against the broadcast (cent_id,
+    cv) table, ties to the smaller cent_id; the one probe rule of the
+    in-plan and loaded-artifact IVF paths (the Spark twin of the
+    oracles' qp CTE)."""
+    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cent_id"))
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .select("query_id", *carry, "cent_id", _cos_spark(F.col("qv"), F.col("cv")).alias("cos"))
+        .withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= N_PROBE)
+        .select("query_id", *carry, F.col("cent_id").alias("cell"))
+    )
+
+
 @query(
     "sim_ivf",
     oracle=(
@@ -378,21 +416,9 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(NQ)
         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     )
-    cos_qc = _dot_spark(F.col("qv"), F.col("cv")) / (
-        F.sqrt(_dot_spark(F.col("qv"), F.col("qv"))) * F.sqrt(_dot_spark(F.col("cv"), F.col("cv")))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cent_id"))
-    qp = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "qv", "cent_id", cos_qc.alias("cos"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= N_PROBE)
-        .select("query_id", "qv", F.col("cent_id").alias("cell"))
-    )
+    qp = _probe(q, cent, "qv")
     cand = a.join(F.broadcast(qp), "cell").filter(F.col("vec_id") != F.col("query_id"))
-    cos_qv = _dot_spark(F.col("qv"), F.col("v")) / (
-        F.sqrt(_dot_spark(F.col("qv"), F.col("qv"))) * F.sqrt(_dot_spark(F.col("v"), F.col("v")))
-    )
+    cos_qv = _cos_spark(F.col("qv"), F.col("v"))
     wk = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
         cand.select("query_id", F.col("vec_id").alias("neighbor_id"), cos_qv.alias("cos"))
@@ -1005,12 +1031,7 @@ def embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side broadcast join with partial-agg argmin, so nothing
     shuffles but (vec, subspace) minima. The 42x compression is what
     lets a 100 TB embedding corpus fit an in-memory ANN index."""
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())  # NULL ordering differs cross-engine
-        .select("vec_id", _as_double("embedding").alias("v"))
-    )
-    best = _pq_scored(emb).groupBy("vec_id", "m").agg(
+    best = _pq_scored(_emb_v(spark, sf_dir)).groupBy("vec_id", "m").agg(
         F.min_by("cid", F.struct("dist", "cid")).alias("cid"),
         F.min("dist").alias("dist"),
     )
@@ -1075,31 +1096,14 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotations, IVF cell pruning via sim_ivf) changes constants, not the
     plan shape — the current constants hold the documented 0.25 recall
     floor (tests/test_similarity.py::test_pq_adc_recall_vs_brute_force)."""
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())  # NULL ordering differs cross-engine
-        .select("vec_id", _as_double("embedding").alias("v"))
-    )
-    scored = _pq_scored(emb)
-    joined = (
-        _pq_codes(scored)
-        .join(F.broadcast(_pq_lut(scored)), ["m", "cid"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "m", "lut")
-    )
-    s = joined.groupBy("query_id", "neighbor_id").agg(_pq_adist_col().alias("adist"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
-    return (
-        s.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= K)
-        .withColumn("rk", F.col("rk").cast("long"))
-    )
+    scored = _pq_scored(_emb_v(spark, sf_dir))
+    return _pq_adc(_pq_codes(scored), _pq_lut(scored.filter(F.col("vec_id") < NQ)))
 
 
 def _pq_subvectors(emb: DataFrame) -> DataFrame:
     """(vec_id, m, sv): each vector's _PQ_M subspace slices — the one
     explode every PQ path (train-time scoring, index save, slice
-    advance) starts from."""
+    advance, query-side LUT encode) starts from."""
     slices = F.array(
         *[F.slice("v", m * _PQ_SUBDIM + 1, _PQ_SUBDIM) for m in range(_PQ_M)]
     )
@@ -1109,9 +1113,10 @@ def _pq_subvectors(emb: DataFrame) -> DataFrame:
 def _pq_score_against(sub: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, m, cid, dist): squared L2 from subvector rows to a
     GIVEN codebook (m, cid, cv) — THE encode rule, shared by train-time
-    scoring (_pq_scored) and slice advancement (ivfpq_index_advance) so
-    the two can never drift an IEEE op apart (codes written by an
-    advance must be bit-identical to save-time codes)."""
+    scoring (_pq_scored), slice advancement (ivfpq_index_advance) and
+    the loaded-artifact query LUTs (_query_lut) so they can never drift
+    an IEEE op apart (codes written by an advance and LUTs built from a
+    loaded codebook must be bit-identical to the in-plan ones)."""
     dist = F.aggregate(
         F.zip_with("sv", "cv", lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -1129,26 +1134,40 @@ def _pq_scored(emb: DataFrame) -> DataFrame:
     sim_pq_adc and sim_ivfpq all build on — codes are its per-(vec, m)
     argmin, query LUTs its vec_id < NQ slice."""
     sub = _pq_subvectors(emb)
-    cent = sub.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("cid"), "m", F.col("sv").alias("cv")
+    return _pq_score_against(sub, _pq_codebook(sub))
+
+
+def _pq_codebook(sub: DataFrame) -> DataFrame:
+    """(m, cid, cv): the Forgy codebook — the subspace slices of the
+    _PQ_K smallest vec_ids; what _pq_scored encodes against and what
+    both index saves persist."""
+    return sub.filter(F.col("vec_id") < _PQ_K).select(
+        "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
     )
-    return _pq_score_against(sub, cent)
 
 
 def _pq_codes(scored: DataFrame) -> DataFrame:
     """(vec_id, m, cid): per-(vector, subspace) argmin code, centroid-id
-    tiebreak — shared by sim_pq_adc and sim_ivfpq."""
+    tiebreak — every code word of every PQ path."""
     return scored.groupBy("vec_id", "m").agg(
         F.min_by("cid", F.struct("dist", "cid")).alias("cid")
     )
 
 
 def _pq_lut(scored: DataFrame) -> DataFrame:
-    """(query_id, m, cid, lut): the first-NQ queries' subspace distance
-    lookup tables — the same rows _pq_scored computed for assignment."""
-    return scored.filter(F.col("vec_id") < NQ).select(
+    """(query_id, m, cid, lut): scored query subvectors as subspace
+    distance lookup tables (vec_id -> query_id, dist -> lut)."""
+    return scored.select(
         F.col("vec_id").alias("query_id"), "m", "cid", F.col("dist").alias("lut")
     )
+
+
+def _query_lut(queries: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(query_id, m, cid, lut) for (query_id, v) queries against a
+    loaded codebook — the encode rule itself, so a LUT served from the
+    artifact is bit-identical to the in-plan one."""
+    sub = _pq_subvectors(queries.select(F.col("query_id").alias("vec_id"), "v"))
+    return _pq_lut(_pq_score_against(sub, codebook))
 
 
 def _pq_adist_col():
@@ -1161,11 +1180,34 @@ def _pq_adist_col():
     return adist
 
 
-def _ivfpq_oracle() -> str:
+def _adc_topk(rows: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, adist, rk): ADC top-K over (query_id,
+    neighbor_id, m, lut) candidate rows — the fixed-order M-term sum
+    per pair, ranked by (adist, neighbor_id) to K (a WindowGroupLimit
+    rank). Every PQ and IVF-PQ serve ends here."""
+    s = rows.groupBy("query_id", "neighbor_id").agg(_pq_adist_col().alias("adist"))
+    w = Window.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
+    return s.withColumn("rk", F.row_number().over(w).cast("long")).filter(F.col("rk") <= K)
+
+
+def _pq_adc(codes: DataFrame, lut: DataFrame) -> DataFrame:
+    """Flat-PQ ADC top-K: every code word (vec_id, m, cid) looked up in
+    the broadcast query LUTs on (m, cid), self excluded — sim_pq_adc's
+    in-plan codes and pq_index_adc_query's loaded ones alike."""
+    return _adc_topk(
+        codes.join(F.broadcast(lut), ["m", "cid"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "m", "lut")
+    )
+
+
+def _ivfpq_oracle(cent_sql: str = _CENT_SQL) -> str:
+    """The IVF-PQ oracle body over the IVF centroid CTE(s) ``cent_sql``
+    (which must define ``cent``)."""
     adist = " + ".join(f"MAX(CASE WHEN m = {m} THEN lut END)" for m in range(_PQ_M))
     return (
         "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL), "
-        + _CENT_SQL
+        + cent_sql
         + ", "
         "sc AS (SELECT e.vec_id, cent_id, "
         f"    {_cos_sql('e.v', 'cv')} AS cos FROM e, cent), "
@@ -1223,42 +1265,20 @@ def sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids and query LUTs broadcast. Retrieval quality is gated by
     a recall floor vs exact top-K (tests/test_similarity.py), which
     composes the PQ loss with the cell-pruning loss."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())  # NULL ordering differs cross-engine
-        .select("vec_id", _as_double("embedding").alias("v"))
-    )
+    e = _emb_v(spark, sf_dir)
     cent = _cent_df(e)
     a = _assign_cells(e, cent).select("vec_id", "cell")
     scored = _pq_scored(e)
-    # queries = vec_id < NQ, the SAME predicate the LUT uses (an
-    # orderBy/limit head would diverge from the LUT keys if any of the
-    # first NQ ids were filtered out above)
-    q = e.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    cos_qc = _cos_spark(F.col("qv"), F.col("cv"))
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cent_id"))
-    qp = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "cent_id", cos_qc.alias("cos"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= N_PROBE)
-        .select("query_id", F.col("cent_id").alias("cell"))
-    )
     cand = (
-        a.join(F.broadcast(qp), "cell")
+        a.join(F.broadcast(_probe(_queries(e), cent)), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    j = cand.join(
-        _pq_codes(scored).withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
-    ).join(F.broadcast(_pq_lut(scored)), ["query_id", "m", "cid"])
-    s = j.groupBy("query_id", "neighbor_id").agg(_pq_adist_col().alias("adist"))
-    wk = Window.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
-    return (
-        s.withColumn("rk", F.row_number().over(wk).cast("long"))
-        .filter(F.col("rk") <= K)
+    lut = _pq_lut(scored.filter(F.col("vec_id") < NQ))
+    return _adc_topk(
+        cand.join(
+            _pq_codes(scored).withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
+        ).join(F.broadcast(lut), ["query_id", "m", "cid"])
     )
 
 
@@ -1295,11 +1315,7 @@ def embed_truncate_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet scan; at 100 TB this is the audit you run BEFORE
     rebuilding the ANN index at a smaller dimension, for the cost of
     one scan."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("v"))
-    )
+    e = _emb_v(spark, sf_dir)
     cols = [
         _dot_spark(F.slice("v", 1, d), F.slice("v", 1, d)).alias(f"e{d}")
         for d in _MRL_DIMS
@@ -1909,13 +1925,8 @@ def pq_index_save(emb: DataFrame, out_dir: str) -> None:
     M small ints per vector, the codebook is M x K rows; at 100 TB the
     codes table partitions/buckets by IVF cell and the codebook ships
     broadcast, so serving never rescans raw vectors."""
-    scored = _pq_scored(emb)
-    sub = _pq_subvectors(emb)
-    cent = sub.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
-    )
-    cent.write.mode("overwrite").parquet(out_dir + "/codebook")
-    _pq_codes(scored).write.mode("overwrite").parquet(out_dir + "/codes")
+    _pq_codebook(_pq_subvectors(emb)).write.mode("overwrite").parquet(out_dir + "/codebook")
+    _pq_codes(_pq_scored(emb)).write.mode("overwrite").parquet(out_dir + "/codes")
 
 
 def pq_index_adc_query(spark: SparkSession, index_dir: str, queries: DataFrame) -> DataFrame:
@@ -1929,33 +1940,27 @@ def pq_index_adc_query(spark: SparkSession, index_dir: str, queries: DataFrame) 
     Scale: the codes scan is the only corpus-sized input (42x less
     I/O than vectors); LUTs broadcast; per-query top-K is a
     WindowGroupLimit rank."""
-    cent = spark.read.parquet(index_dir + "/codebook")
-    codes = spark.read.parquet(index_dir + "/codes")
-    qsub = queries.select(
-        F.col("query_id"),
-        F.posexplode(
-            F.array(*[F.slice("v", m * _PQ_SUBDIM + 1, _PQ_SUBDIM) for m in range(_PQ_M)])
-        ).alias("m", "sv"),
-    )
-    dist = F.aggregate(
-        F.zip_with("sv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    lut = qsub.join(F.broadcast(cent), "m").select(
-        "query_id", "m", "cid", dist.alias("lut")
-    )
-    joined = (
-        codes.join(F.broadcast(lut), ["m", "cid"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "m", "lut")
-    )
-    s = joined.groupBy("query_id", "neighbor_id").agg(_pq_adist_col().alias("adist"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
-    return (
-        s.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= K)
-        .withColumn("rk", F.col("rk").cast("long"))
+    lut = _query_lut(queries, spark.read.parquet(index_dir + "/codebook"))
+    return _pq_adc(spark.read.parquet(index_dir + "/codes"), lut)
+
+
+def _write_codes_by_cell(codes: DataFrame, emb: DataFrame, ivf_cent: DataFrame, path: str) -> None:
+    """Write code words (vec_id, m, cid) PARTITIONED BY their vectors'
+    IVF cell (assigned against ``ivf_cent``) as a whole-directory
+    overwrite of ``path`` — the one writer of the base and of every
+    advanced slice. Repartitioning ON the partition key first makes it
+    one task, hence one file, per cell directory: without it every join
+    task holding rows of k cells opens k files, spraying tasks x cells
+    tiny parquet files the serve then has to list and footer-read
+    (guide §6 small-files; measured on the r16 lifecycle keys). Cells
+    are further bucketed by id inside each partition at real scale."""
+    a = _assign_cells(emb, ivf_cent).select("vec_id", "cell")
+    (
+        codes.join(a, "vec_id")
+        .repartition(F.col("cell"))
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(path)
     )
 
 
@@ -1974,29 +1979,11 @@ def ivfpq_index_save(emb: DataFrame, out_dir: str) -> None:
     partition so the candidate join co-partitions. Centroid tables
     are broadcast-sized by construction."""
     cent = _cent_df(emb)
-    a = _assign_cells(emb, cent).select("vec_id", "cell")
-    codes = _pq_codes(_pq_scored(emb))
-    (
-        # repartition ON the partition key first: without it every join
-        # task holding rows of k cells opens k files, spraying
-        # tasks x cells tiny parquet files the serve then has to list
-        # and footer-read (guide §6 small-files; measured on the r16
-        # lifecycle keys). One task per cell -> one file per cell dir —
-        # the production layout (cells are further bucketed by id
-        # inside each partition at real scale).
-        codes.join(a, "vec_id")
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out_dir + "/codes_by_cell")
-    )
+    _write_codes_by_cell(_pq_codes(_pq_scored(emb)), emb, cent, out_dir + "/codes_by_cell")
     # centroid/codebook tables are broadcast-sized by construction
     # (|cells| and M x K rows): one file each, not one per shuffle task
     cent.coalesce(1).write.mode("overwrite").parquet(out_dir + "/ivf_centroids")
-    sub = _pq_subvectors(emb)
-    pq_cent = sub.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
-    )
+    pq_cent = _pq_codebook(_pq_subvectors(emb))
     pq_cent.coalesce(1).write.mode("overwrite").parquet(out_dir + "/codebook")
 
 
@@ -2025,17 +2012,7 @@ def ivfpq_index_query(
     # healthy state; the crawl_claims_sink discipline on the read side)
     recover_swap_dir(index_dir + "/codes_by_cell")
     ivf_cent = spark.read.parquet(index_dir + "/ivf_centroids")
-    pq_cent = spark.read.parquet(index_dir + "/codebook")
-    q = queries.select("query_id", F.col("v").alias("qv"))
-    cos_qc = _cos_spark(F.col("qv"), F.col("cv"))
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cent_id"))
-    qp = (
-        q.crossJoin(F.broadcast(ivf_cent))
-        .select("query_id", "cent_id", cos_qc.alias("cos"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= N_PROBE)
-        .select("query_id", F.col("cent_id").alias("cell"))
-    )
+    qp = _probe(queries.select("query_id", F.col("v").alias("qv")), ivf_cent)
     probe_rows = qp.collect()  # bounded: <= NQ x N_PROBE id pairs
     probe_cells = sorted({r.cell for r in probe_rows})
     # base codes + (opt-in) every advanced slice dir — each root scans
@@ -2067,27 +2044,11 @@ def ivfpq_index_query(
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "m", "cid")
     )
-    qsub = q.select(
-        "query_id",
-        F.posexplode(
-            F.array(*[F.slice("qv", m * _PQ_SUBDIM + 1, _PQ_SUBDIM) for m in range(_PQ_M)])
-        ).alias("m", "sv"),
-    )
-    dist = F.aggregate(
-        F.zip_with("sv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    lut = qsub.join(F.broadcast(pq_cent), "m").select(
-        "query_id", "m", "cid", dist.alias("lut")
-    )
-    j = cand.join(F.broadcast(lut), ["query_id", "m", "cid"])
-    s = j.groupBy("query_id", "neighbor_id").agg(_pq_adist_col().alias("adist"))
-    wk = Window.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
-    return (
-        s.withColumn("rk", F.row_number().over(wk).cast("long"))
-        .filter(F.col("rk") <= K)
-    )
+    lut = _query_lut(queries, spark.read.parquet(index_dir + "/codebook"))
+    return _adc_topk(cand.join(F.broadcast(lut), ["query_id", "m", "cid"]))
+
+
+_serve_ivfpq_slices = functools.partial(ivfpq_index_query, include_slices=True)
 
 
 # MRL serve-small / rerank-large: prefix dims for the cheap first pass
@@ -2151,27 +2112,16 @@ def sim_mrl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     major layout); the full vectors are fetched for NQ x _MRL_CAND
     rows only. Quality is the energy profile's business: the pytest
     recall floor ties the two."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("v"))
-    )
-    q = e.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    pv = F.slice("v", 1, _MRL_PREFIX)
-    pq = F.slice("qv", 1, _MRL_PREFIX)
-    cos_p = _dot_spark(pq, pv) / (F.sqrt(_dot_spark(pq, pq)) * F.sqrt(_dot_spark(pv, pv)))
+    e = _emb_v(spark, sf_dir)
+    cos_p = _cos_spark(F.slice("qv", 1, _MRL_PREFIX), F.slice("v", 1, _MRL_PREFIX))
     w1 = Window.partitionBy("query_id").orderBy(F.col("cos_p").desc(), F.col("vec_id"))
     cand = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        e.join(F.broadcast(_queries(e)), F.col("vec_id") != F.col("query_id"))
         .select("query_id", "qv", "vec_id", "v", cos_p.alias("cos_p"))
         .withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") <= _MRL_CAND)
     )
-    cos_f = _dot_spark(F.col("qv"), F.col("v")) / (
-        F.sqrt(_dot_spark(F.col("qv"), F.col("qv"))) * F.sqrt(_dot_spark(F.col("v"), F.col("v")))
-    )
+    cos_f = _cos_spark(F.col("qv"), F.col("v"))
     w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         cand.select(
@@ -2182,14 +2132,26 @@ def sim_mrl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _emb_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The similarity family's canonical corpus frame: non-null
-    embeddings as (vec_id, v: array<double>)."""
-    return (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("v"))
-    )
+def _index_gate(spark: SparkSession, sf_dir: str, prefix: str, build, serve, split: bool = False) -> DataFrame:
+    """The persisted-index gate: ``build`` an index under a scoped temp
+    root, then ``serve(spark, index_dir, queries)`` the first-NQ query
+    set from the loaded artifact. ``build`` gets ``(emb, index_dir)``;
+    with ``split`` it gets ``(base, new, index_dir)`` — base the corpus
+    half vec_id <= mid, new the rest (mid from one min/max job) — the
+    train-on-base, advance-with-new lifecycle. The serve materializes
+    (serve_and_cleanup) inside the ``with``, so the result never reads
+    the tree, and a raise anywhere still removes it."""
+    from flod_spark.io import serve_and_cleanup
+
+    emb = _emb_v(spark, sf_dir)
+    parts = (emb,)
+    if split:
+        lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
+        mid = (lo + hi) // 2
+        parts = (emb.filter(F.col("vec_id") <= mid), emb.filter(F.col("vec_id") > mid))
+    with tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True) as idx_dir:
+        build(*parts, idx_dir)
+        return serve_and_cleanup(serve(spark, idx_dir, _queries(emb, v="v")))
 
 
 @query("sim_pq_adc_persisted", oracle=_pq_adc_oracle())
@@ -2209,17 +2171,7 @@ def sim_pq_adc_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching raw vectors; LUTs broadcast; at 100 TB the artifact
     partitions by IVF cell (sim_ivfpq_persisted) and the codebook
     ships in the task closure."""
-    emb = _emb_v(spark, sf_dir)
-    idx_dir = tempfile.mkdtemp(prefix="flod_pq_index_")
-    pq_index_save(emb, idx_dir)
-    queries = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
-    from flod_spark.io import serve_and_cleanup
-
-    return serve_and_cleanup(
-        pq_index_adc_query(spark, idx_dir, queries), idx_dir
-    )
+    return _index_gate(spark, sf_dir, "flod_pq_index_", pq_index_save, pq_index_adc_query)
 
 
 @query("sim_ivfpq_persisted", oracle=_ivfpq_oracle())
@@ -2240,17 +2192,7 @@ def sim_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     both now visible in the physical plan; the cell partitioning is
     the on-disk form of 'bucketed by cell' the sim_ivfpq docstring
     promises."""
-    emb = _emb_v(spark, sf_dir)
-    idx_dir = tempfile.mkdtemp(prefix="flod_ivfpq_index_")
-    ivfpq_index_save(emb, idx_dir)
-    queries = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
-    from flod_spark.io import serve_and_cleanup
-
-    return serve_and_cleanup(
-        ivfpq_index_query(spark, idx_dir, queries), idx_dir
-    )
+    return _index_gate(spark, sf_dir, "flod_ivfpq_index_", ivfpq_index_save, ivfpq_index_query)
 
 
 # Binary (sign-bit) quantization: 64 dims -> two 32-bit sign words
@@ -2366,14 +2308,8 @@ def sim_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full vectors are fetched for the NQ x _BQ_CAND candidates only:
     # broadcast the candidate list against the corpus (map-side), and
     # broadcast the NQ query vectors onto the result
-    qv = e.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    withv = F.broadcast(cand).join(e, "vec_id").join(F.broadcast(qv), "query_id")
-    cos_f = _dot_spark(F.col("qv"), F.col("v")) / (
-        F.sqrt(_dot_spark(F.col("qv"), F.col("qv")))
-        * F.sqrt(_dot_spark(F.col("v"), F.col("v")))
-    )
+    withv = F.broadcast(cand).join(e, "vec_id").join(F.broadcast(_queries(e)), "query_id")
+    cos_f = _cos_spark(F.col("qv"), F.col("v"))
     w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         withv.select(
@@ -2437,17 +2373,7 @@ def ivfpq_index_advance(
     codes = _pq_codes(
         _pq_score_against(_pq_subvectors(new_emb), pq_cent.select("m", "cid", "cv"))
     )
-    a = _assign_cells(new_emb, ivf_cent).select("vec_id", "cell")
-    (
-        # one task per cell -> one file per cell dir (ivfpq_index_save's
-        # layout rationale; without it the slice sprays tasks x cells
-        # tiny files the combined serve then lists and footer-reads)
-        codes.join(a, "vec_id")
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(index_dir + f"/codes_slice_{int(slice_id):05d}")
-    )
+    _write_codes_by_cell(codes, new_emb, ivf_cent, index_dir + f"/codes_slice_{int(slice_id):05d}")
 
 
 def _ivfpq_advanced_oracle() -> str:
@@ -2456,47 +2382,18 @@ def _ivfpq_advanced_oracle() -> str:
     vec_id < _PQ_K subvectors, which sit inside the base half at every
     SF (mid >= _PQ_K), so base-trained and full-corpus codebooks are
     the same rows and only the centroid CTE changes."""
-    adist = " + ".join(f"MAX(CASE WHEN m = {m} THEN lut END)" for m in range(_PQ_M))
-    return (
-        "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL), "
+    return _ivfpq_oracle(
         "mm AS (SELECT (MIN(vec_id) + MAX(vec_id)) // 2 AS mid FROM e), "
         "cent AS (SELECT vec_id AS cent_id, v AS cv FROM e, mm WHERE vec_id <= mid "
-        f"  ORDER BY substr(md5('c|' || CAST(vec_id AS VARCHAR)), 1, 8), vec_id LIMIT {N_CELLS}), "
-        "sc AS (SELECT e.vec_id, cent_id, "
-        f"    {_cos_sql('e.v', 'cv')} AS cos FROM e, cent), "
-        "a AS (SELECT vec_id, cent_id AS cell FROM (SELECT *, "
-        "    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cent_id) AS rn FROM sc) "
-        "  WHERE rn = 1), "
-        f"q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {NQ}), "
-        "qs AS (SELECT query_id, cent_id, "
-        f"    {_cos_sql('qv', 'cv')} AS cos FROM q, cent), "
-        "qp AS (SELECT query_id, cent_id AS cell FROM (SELECT *, "
-        "    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cent_id) AS rn FROM qs) "
-        f"  WHERE rn <= {N_PROBE}), "
-        f"ms AS (SELECT unnest(range({_PQ_M})) AS m), "
-        "sub AS (SELECT vec_id, m, "
-        f"    list_slice(v, m * {_PQ_SUBDIM} + 1, (m + 1) * {_PQ_SUBDIM}) AS sv "
-        "  FROM e, ms), "
-        f"pcent AS (SELECT vec_id AS cid, m, sv AS cv FROM sub WHERE vec_id < {_PQ_K}), "
-        "d AS (SELECT s.vec_id, s.m, p.cid, "
-        "    list_reduce(list_transform(list_zip(s.sv, p.cv), "
-        "      x -> (x[1] - x[2]) * (x[1] - x[2])), (acc, t) -> acc + t) AS dist "
-        "  FROM sub s JOIN pcent p USING (m)), "
-        "codes AS (SELECT vec_id, m, cid FROM (SELECT *, "
-        "    row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rk FROM d) "
-        "  WHERE rk = 1), "
-        f"lut AS (SELECT vec_id AS query_id, m, cid, dist AS lut FROM d WHERE vec_id < {NQ}), "
-        "cand AS (SELECT qp.query_id, a.vec_id AS neighbor_id FROM qp "
-        "  JOIN a USING (cell) WHERE a.vec_id <> qp.query_id), "
-        "j AS (SELECT c.query_id, c.neighbor_id, codes.m, l.lut FROM cand c "
-        "  JOIN codes ON codes.vec_id = c.neighbor_id "
-        "  JOIN lut l ON l.query_id = c.query_id AND l.m = codes.m AND l.cid = codes.cid), "
-        f"s AS (SELECT query_id, neighbor_id, {adist} AS adist "
-        "  FROM j GROUP BY query_id, neighbor_id), "
-        "t AS (SELECT query_id, neighbor_id, adist, "
-        "    row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk FROM s) "
-        f"SELECT query_id, neighbor_id, adist, CAST(rk AS BIGINT) AS rk FROM t WHERE rk <= {K}"
+        f"  ORDER BY substr(md5('c|' || CAST(vec_id AS VARCHAR)), 1, 8), vec_id LIMIT {N_CELLS})"
     )
+
+
+def _build_advanced(base: DataFrame, new: DataFrame, idx_dir: str) -> None:
+    """Train the IVF-PQ index on ``base``, then advance it with ``new``
+    as slice 1 (encoded against the loaded artifacts)."""
+    ivfpq_index_save(base, idx_dir)
+    ivfpq_index_advance(new, new.sparkSession, idx_dir, slice_id=1)
 
 
 @query("sim_ivfpq_advanced", oracle=_ivfpq_advanced_oracle())
@@ -2519,21 +2416,8 @@ def sim_ivfpq_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast codebook + centroids), prior codes are never rescanned
     or rewritten, and serving I/O stays probe-fraction x 42x
     compression; compaction folds slices like compact_claim_table."""
-    emb = _emb_v(spark, sf_dir)
-    mm = emb.agg(F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")).first()
-    mid = (mm.mn + mm.mx) // 2
-    idx_dir = tempfile.mkdtemp(prefix="flod_ivfpq_adv_")
-    ivfpq_index_save(emb.filter(F.col("vec_id") <= mid), idx_dir)
-    ivfpq_index_advance(
-        emb.filter(F.col("vec_id") > mid), spark, idx_dir, slice_id=1
-    )
-    queries = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
-    from flod_spark.io import serve_and_cleanup
-
-    return serve_and_cleanup(
-        ivfpq_index_query(spark, idx_dir, queries, include_slices=True), idx_dir
+    return _index_gate(
+        spark, sf_dir, "flod_ivfpq_adv_", _build_advanced, _serve_ivfpq_slices, split=True
     )
 
 
@@ -2629,26 +2513,15 @@ def sim_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (manifest commit on object stores); it caps the serving read
     side's file count at one directory no matter how many nightly
     advances have landed, which is what keeps probe-fraction scan
-    economics true after months of appends. The gate's temp index tree
-    is swept after the serve materializes (serve_and_cleanup — r13
-    advice: the lifecycle gates used to leak their mkdtemp state)."""
-    emb = _emb_v(spark, sf_dir)
-    mm = emb.agg(F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")).first()
-    mid = (mm.mn + mm.mx) // 2
-    idx_dir = tempfile.mkdtemp(prefix="flod_ivfpq_cpt_")
-    ivfpq_index_save(emb.filter(F.col("vec_id") <= mid), idx_dir)
-    ivfpq_index_advance(
-        emb.filter(F.col("vec_id") > mid), spark, idx_dir, slice_id=1
-    )
-    compact_ivfpq_index(spark, idx_dir)
-    queries = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
-    from flod_spark.io import serve_and_cleanup
+    economics true after months of appends. The gate's index tree is a
+    scoped temp root (_index_gate), removed once the serve has
+    materialized or when any step raises."""
 
-    return serve_and_cleanup(
-        ivfpq_index_query(spark, idx_dir, queries, include_slices=True), idx_dir
-    )
+    def build(base: DataFrame, new: DataFrame, idx_dir: str) -> None:
+        _build_advanced(base, new, idx_dir)
+        compact_ivfpq_index(spark, idx_dir)
+
+    return _index_gate(spark, sf_dir, "flod_ivfpq_cpt_", build, _serve_ivfpq_slices, split=True)
 
 
 def ivfpq_ingest_sink(index_dir: str):
@@ -2728,26 +2601,15 @@ def stream_ivfpq_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     × 42× compression across base + slices; compaction folds slices
     nightly (sim_ivfpq_compacted). Swap the replay source for Kafka
     with zero changes downstream."""
-    from flod_spark.io import serve_and_cleanup
     from flod_spark.streaming.gate import drain, spool
 
-    emb = _emb_v(spark, sf_dir)
-    mm = emb.agg(F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")).first()
-    mid = (mm.mn + mm.mx) // 2
-    idx_dir = tempfile.mkdtemp(prefix="flod_ivfpq_ing_")
-    ivfpq_index_save(emb.filter(F.col("vec_id") <= mid), idx_dir)
+    def build(base: DataFrame, new: DataFrame, idx_dir: str) -> None:
+        ivfpq_index_save(base, idx_dir)
+        feed = new.withColumn("ingest_ts", F.timestamp_micros(F.col("vec_id") * 1_000_000))
+        with spool(spark, feed, "ingest_ts", n_batches=3, tiebreak=("vec_id",)) as sp:
+            drain(sp.stream, spark, foreach_batch=ivfpq_ingest_sink(idx_dir))
 
-    feed = emb.filter(F.col("vec_id") > mid).withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("vec_id") * 1_000_000)
-    )
-    with spool(spark, feed, "ingest_ts", n_batches=3, tiebreak=("vec_id",)) as sp:
-        drain(sp.stream, spark, foreach_batch=ivfpq_ingest_sink(idx_dir))
-    queries = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
-    return serve_and_cleanup(
-        ivfpq_index_query(spark, idx_dir, queries, include_slices=True), idx_dir
-    )
+    return _index_gate(spark, sf_dir, "flod_ivfpq_ing_", build, _serve_ivfpq_slices, split=True)
 
 
 # Hybrid retrieval constants: per-leg candidate depth, the RRF damping
@@ -2861,11 +2723,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps the per-side projects from re-inlining. cos is the same three
     # doubles combined in the same order as _cos_spark (dot / (q_norm *
     # c_norm)), so every value is bit-identical.
-    q = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.sqrt(_dot_spark(F.col("v"), F.col("v"))).alias("qn"),
-    )
+    q = _queries(emb, F.sqrt(_dot_spark(F.col("v"), F.col("v"))).alias("qn"))
     c = emb.select(
         F.col("vec_id").alias("cand"),
         F.col("v").alias("cv"),
@@ -2922,15 +2780,18 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work. Now ONE codegen explode over the tokens feeds a broadcast
     # semi-join against the tiny query-term set (drops non-matching
     # tokens BEFORE any shuffle), a (doc, term) count gives tf, a
-    # count-over-term window gives df, and only MATCHED (query, cand)
-    # pairs ever materialize. Value equivalence: tf is the same
-    # occurrence count size(filter(toks, = term)) computed by explode +
-    # count; df the same contains-count; every score double is the same
-    # WHEN tf>0 expression over the same (tf, df, dl, nd, tt) longs —
-    # pairs with all-zero tf contributed nothing (they were filtered)
-    # and cannot rank. Pinned bitwise against the verbatim old leg in
-    # tests/test_round17_opt.py; oracle unchanged and green.
-    matched_tf = (
+    # per-term count of those rows gives df — a partial-agg groupBy over
+    # the <= 3·NQ query terms, broadcast back (a count over a term
+    # window would send every matched row of a hot term to one task) —
+    # and only MATCHED (query, cand) pairs ever materialize. Value
+    # equivalence: tf is the same occurrence count size(filter(toks, =
+    # term)) computed by explode + count; df the same contains-count;
+    # every score double is the same WHEN tf>0 expression over the same
+    # (tf, df, dl, nd, tt) longs — pairs with all-zero tf contributed
+    # nothing (they were filtered) and cannot rank. Pinned bitwise
+    # against the verbatim old leg in tests/test_round17_opt.py; oracle
+    # unchanged and green.
+    doc_tf = (
         t.select(
             "doc_id",
             F.size("toks").cast("long").alias("dl"),
@@ -2939,9 +2800,9 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(terms), "term")
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("long").alias("tf"), F.max("dl").alias("dl"))
-        .withColumn(
-            "df", F.count("*").over(Window.partitionBy("term")).cast("long")
-        )
+    )
+    matched_tf = doc_tf.join(
+        F.broadcast(doc_tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))), "term"
     )
     qslots = None
     for i in (1, 2, 3):

@@ -28,7 +28,6 @@ from __future__ import annotations
 import functools
 import glob
 import importlib
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -469,62 +468,62 @@ def stream_foreach_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of stream length; each merge is one broadcast-or-shuffle
     join of batch-partials against the state table."""
     ev = load(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="flod_fb_state_")
-    state = {"path": None, "last_batch": -1}
+    with tempfile.TemporaryDirectory(prefix="flod_fb_state_", ignore_cleanup_errors=True) as root:
+        state = {"path": None, "last_batch": -1}
 
-    def _partials(df: DataFrame) -> DataFrame:
-        return df.groupBy("user_id", "event_type").agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_dec"),
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= state["last_batch"]:
-            return  # replayed trigger: already merged (idempotence guard)
-        inc = _partials(batch_df)
-        if state["path"] is not None:
-            old = batch_df.sparkSession.read.parquet(state["path"])
-            merged = (
-                old.select(
-                    "user_id", "event_type",
-                    F.col("n_events").alias("n0"), F.col("first_ts").alias("f0"),
-                    F.col("last_ts").alias("l0"), F.col("sum_dec").alias("s0"),
-                )
-                .join(inc, ["user_id", "event_type"], "full_outer")
-                .select(
-                    "user_id", "event_type",
-                    (F.coalesce("n0", F.lit(0)) + F.coalesce("n_events", F.lit(0))).alias("n_events"),
-                    F.least("f0", "first_ts").alias("first_ts"),
-                    F.greatest("l0", "last_ts").alias("last_ts"),
-                    (
-                        F.coalesce(F.col("s0"), F.lit(0).cast("decimal(18,6)"))
-                        + F.coalesce(F.col("sum_dec"), F.lit(0).cast("decimal(18,6)"))
-                    ).alias("sum_dec"),
-                )
+        def _partials(df: DataFrame) -> DataFrame:
+            return df.groupBy("user_id", "event_type").agg(
+                F.count("*").alias("n_events"),
+                F.min("ts").alias("first_ts"),
+                F.max("ts").alias("last_ts"),
+                F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_dec"),
             )
-        else:
-            merged = inc
-        nxt = f"{root}/v{batch_id}"
-        merged.write.mode("overwrite").parquet(nxt)
-        state["path"] = nxt
-        state["last_batch"] = batch_id
 
-    with spool(spark, ev, "ts", n_batches=5, tiebreak=("event_id",)) as sp:
-        drain(sp.stream, spark, foreach_batch=upsert)
-    # empty-first-run guard: a zero-batch stream (empty events input
-    # writes no replay files, so foreachBatch never fires) leaves no
-    # state version — the merged-schema empty aggregate IS the answer
-    if state["path"] is None:
-        final = _partials(ev.limit(0))
-    else:
-        final = spark.read.parquet(state["path"])
-    out = final.select(
-        "user_id", "event_type", "n_events", "first_ts", "last_ts",
-        F.col("sum_dec").cast("double").alias("sum_value"),
-    )
-    return serve_and_cleanup(out, root)
+        def upsert(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_id <= state["last_batch"]:
+                return  # replayed trigger: already merged (idempotence guard)
+            inc = _partials(batch_df)
+            if state["path"] is not None:
+                old = batch_df.sparkSession.read.parquet(state["path"])
+                merged = (
+                    old.select(
+                        "user_id", "event_type",
+                        F.col("n_events").alias("n0"), F.col("first_ts").alias("f0"),
+                        F.col("last_ts").alias("l0"), F.col("sum_dec").alias("s0"),
+                    )
+                    .join(inc, ["user_id", "event_type"], "full_outer")
+                    .select(
+                        "user_id", "event_type",
+                        (F.coalesce("n0", F.lit(0)) + F.coalesce("n_events", F.lit(0))).alias("n_events"),
+                        F.least("f0", "first_ts").alias("first_ts"),
+                        F.greatest("l0", "last_ts").alias("last_ts"),
+                        (
+                            F.coalesce(F.col("s0"), F.lit(0).cast("decimal(18,6)"))
+                            + F.coalesce(F.col("sum_dec"), F.lit(0).cast("decimal(18,6)"))
+                        ).alias("sum_dec"),
+                    )
+                )
+            else:
+                merged = inc
+            nxt = f"{root}/v{batch_id}"
+            merged.write.mode("overwrite").parquet(nxt)
+            state["path"] = nxt
+            state["last_batch"] = batch_id
+
+        with spool(spark, ev, "ts", n_batches=5, tiebreak=("event_id",)) as sp:
+            drain(sp.stream, spark, foreach_batch=upsert)
+        # empty-first-run guard: a zero-batch stream (empty events input
+        # writes no replay files, so foreachBatch never fires) leaves no
+        # state version — the merged-schema empty aggregate IS the answer
+        if state["path"] is None:
+            final = _partials(ev.limit(0))
+        else:
+            final = spark.read.parquet(state["path"])
+        out = final.select(
+            "user_id", "event_type", "n_events", "first_ts", "last_ts",
+            F.col("sum_dec").cast("double").alias("sum_value"),
+        )
+        return serve_and_cleanup(out)
 
 
 def _prep_live_oracle() -> str:
@@ -1029,43 +1028,40 @@ def stream_split_router_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").withColumn(
         "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
     )
-    root = tempfile.mkdtemp(prefix="flod_router_")
-    hp = _hash_prefix("p|", F.col("doc_id"))
-    split = (
-        F.when(hp < _thr(TRAIN_FRAC), "train")
-        .when(hp < _thr(TRAIN_FRAC + VAL_FRAC), "val")
-        .otherwise("test")
-    )
+    with tempfile.TemporaryDirectory(prefix="flod_router_", ignore_cleanup_errors=True) as root:
+        hp = _hash_prefix("p|", F.col("doc_id"))
+        split = (
+            F.when(hp < _thr(TRAIN_FRAC), "train")
+            .when(hp < _thr(TRAIN_FRAC + VAL_FRAC), "val")
+            .otherwise("test")
+        )
 
-    def route(batch_df: DataFrame, batch_id: int) -> None:
-        tagged = batch_df.withColumn("split", split)
+        def route(batch_df: DataFrame, batch_id: int) -> None:
+            tagged = batch_df.withColumn("split", split)
+            for s in ("train", "val", "test"):
+                part = tagged.filter(F.col("split") == s).drop("split", "ingest_ts")
+                # (batch, split)-scoped overwrite dir: retries replace, never
+                # double-append; empty parts still write a dir (harmless)
+                part.write.mode("overwrite").parquet(f"{root}/{s}/b{batch_id}")
+
+        with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
+            drain(sp.stream, spark, foreach_batch=route)
+        outs = []
         for s in ("train", "val", "test"):
-            part = tagged.filter(F.col("split") == s).drop("split", "ingest_ts")
-            # (batch, split)-scoped overwrite dir: retries replace, never
-            # double-append; empty parts still write a dir (harmless)
-            part.write.mode("overwrite").parquet(f"{root}/{s}/b{batch_id}")
-
-    with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
-        drain(sp.stream, spark, foreach_batch=route)
-    outs = []
-    for s in ("train", "val", "test"):
-        if glob.glob(f"{root}/{s}/b*/part-*"):
-            outs.append(
-                spark.read.parquet(f"{root}/{s}/b*").select(
-                    F.lit(s).alias("split"), "lang"
+            if glob.glob(f"{root}/{s}/b*/part-*"):
+                outs.append(
+                    spark.read.parquet(f"{root}/{s}/b*").select(
+                        F.lit(s).alias("split"), "lang"
+                    )
                 )
-            )
-    if not outs:
-        return spark.createDataFrame([], "split string, lang string, n_docs bigint")
-    u = outs[0]
-    for o in outs[1:]:
-        u = u.unionByName(o)
-    # materialize the audit BEFORE removing the routed trees (the
-    # returned frame must not depend on temp files)
-    import pandas as pd
-
-    counts = u.groupBy("split", "lang").agg(F.count("*").alias("n_docs")).toPandas()
-    shutil.rmtree(root, ignore_errors=True)
+        if not outs:
+            return spark.createDataFrame([], "split string, lang string, n_docs bigint")
+        u = outs[0]
+        for o in outs[1:]:
+            u = u.unionByName(o)
+        # materialize the audit BEFORE the routed trees go (the returned
+        # frame must not depend on temp files)
+        counts = u.groupBy("split", "lang").agg(F.count("*").alias("n_docs")).toPandas()
     return spark.createDataFrame(counts.astype({"n_docs": "int64"}), "split string, lang string, n_docs long")
 
 

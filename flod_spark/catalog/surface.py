@@ -811,10 +811,10 @@ def scan_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard archives to ~100 MB-1 GB for parallelism, exactly how WARC
     corpora ship."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    adir = tempfile.mkdtemp(prefix="flod_arch_")
-    _pack_archive_fixture(docs, adir)
-    raw = spark.read.format("binaryFile").load(adir)
-    return serve_and_cleanup(archive_member_rows(raw), adir)
+    with tempfile.TemporaryDirectory(prefix="flod_arch_", ignore_cleanup_errors=True) as adir:
+        _pack_archive_fixture(docs, adir)
+        raw = spark.read.format("binaryFile").load(adir)
+        return serve_and_cleanup(archive_member_rows(raw))
 
 
 @query(
@@ -855,11 +855,11 @@ def sink_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    out_dir = tempfile.mkdtemp(prefix="flod_shards_")
-    manifest = pack_tar_shards(docs, out_dir).collect()  # one row per shard
-    assert all(os.path.getsize(r.path) == r.n_bytes for r in manifest)
-    raw = spark.read.format("binaryFile").load(out_dir)
-    return serve_and_cleanup(archive_member_rows(raw), out_dir)
+    with tempfile.TemporaryDirectory(prefix="flod_shards_", ignore_cleanup_errors=True) as out_dir:
+        manifest = pack_tar_shards(docs, out_dir).collect()  # one row per shard
+        assert all(os.path.getsize(r.path) == r.n_bytes for r in manifest)
+        raw = spark.read.format("binaryFile").load(out_dir)
+        return serve_and_cleanup(archive_member_rows(raw))
 
 
 @query("stream_archive_live", oracle=_archive_oracle())
@@ -1116,11 +1116,11 @@ def sink_warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    out_dir = tempfile.mkdtemp(prefix="flod_warcshards_")
-    manifest = pack_warc_shards(docs, out_dir).collect()  # one row per shard
-    assert all(os.path.getsize(r.path) == r.n_bytes for r in manifest)
-    raw = spark.read.format("binaryFile").load(out_dir)
-    return serve_and_cleanup(archive_member_rows(raw), out_dir)
+    with tempfile.TemporaryDirectory(prefix="flod_warcshards_", ignore_cleanup_errors=True) as out_dir:
+        manifest = pack_warc_shards(docs, out_dir).collect()  # one row per shard
+        assert all(os.path.getsize(r.path) == r.n_bytes for r in manifest)
+        raw = spark.read.format("binaryFile").load(out_dir)
+        return serve_and_cleanup(archive_member_rows(raw))
 
 
 @query(
@@ -1163,13 +1163,13 @@ def stream_sink_tar_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "timestampadd(MICROSECOND, doc_id, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
         ),
     )
-    out = tempfile.mkdtemp(prefix="flod_sinktar_out_")
-    with spool(spark, timed, "ts", n_batches=4) as sp:
-        drain(sp.stream.select("doc_id", "text"), spark, foreach_batch=stream_pack_tar_shards(out))
-    raw = spark.read.format("binaryFile").load(out)
-    return serve_and_cleanup(
-        archive_member_rows(raw).select("member", "n_bytes", "content_md5"), out
-    )
+    with tempfile.TemporaryDirectory(prefix="flod_sinktar_out_", ignore_cleanup_errors=True) as out:
+        with spool(spark, timed, "ts", n_batches=4) as sp:
+            drain(sp.stream.select("doc_id", "text"), spark, foreach_batch=stream_pack_tar_shards(out))
+        raw = spark.read.format("binaryFile").load(out)
+        return serve_and_cleanup(
+            archive_member_rows(raw).select("member", "n_bytes", "content_md5")
+        )
 
 
 @query(
@@ -1223,28 +1223,28 @@ def stream_curate_loop_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_docs = docs.count()
     shard_docs = max(1, -(-n_docs // 5))  # 5 original + 5 copy shards
-    out = tempfile.mkdtemp(prefix="flod_curate_out_")
-    with tempfile.TemporaryDirectory(prefix="flod_curate_in_") as adir:
-        manifest = pack_tar_shards(
-            docs.unionByName(redelivered), adir, shard_docs=shard_docs
-        ).collect()
-        for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
-            os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
-        members = stream_archive_members(
-            spark, adir, max_files_per_trigger=1, keep_content=True
+    with tempfile.TemporaryDirectory(prefix="flod_curate_out_", ignore_cleanup_errors=True) as out:
+        with tempfile.TemporaryDirectory(prefix="flod_curate_in_") as adir:
+            manifest = pack_tar_shards(
+                docs.unionByName(redelivered), adir, shard_docs=shard_docs
+            ).collect()
+            for i, r in enumerate(sorted(manifest, key=lambda r: r.shard)):
+                os.utime(r.path, (1_600_000_000 + i, 1_600_000_000 + i))
+            members = stream_archive_members(
+                spark, adir, max_files_per_trigger=1, keep_content=True
+            )
+            admitted = drop_duplicates_unbounded(members, "content_md5")
+            clean = admitted.select(
+                F.regexp_extract("member", r"doc_(\d+)\.txt", 1)
+                .cast("long")
+                .alias("doc_id"),
+                F.col("content").cast("string").alias("text"),
+            )
+            drain(clean, spark, foreach_batch=stream_pack_tar_shards(out, shard_docs=100))
+        raw = spark.read.format("binaryFile").load(out)
+        return serve_and_cleanup(
+            archive_member_rows(raw).select("member", "n_bytes", "content_md5")
         )
-        admitted = drop_duplicates_unbounded(members, "content_md5")
-        clean = admitted.select(
-            F.regexp_extract("member", r"doc_(\d+)\.txt", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("content").cast("string").alias("text"),
-        )
-        drain(clean, spark, foreach_batch=stream_pack_tar_shards(out, shard_docs=100))
-    raw = spark.read.format("binaryFile").load(out)
-    return serve_and_cleanup(
-        archive_member_rows(raw).select("member", "n_bytes", "content_md5"), out
-    )
 
 
 def pack_wds_shards(
@@ -1363,33 +1363,32 @@ def scan_wds_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round12_ops.py; JSON parsing is a JVM expression, never
     Python."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
-    adir = tempfile.mkdtemp(prefix="flod_wds_")
-    manifest = pack_wds_shards(docs, adir).collect()  # one row per shard
-    assert manifest
-    raw = spark.read.format("binaryFile").load(adir)
-    members = archive_member_rows(raw, keep_content=True)
-    m = members.select(
-        F.regexp_extract("member", r"^(s_\d+)\.", 1).alias("stem"),
-        F.regexp_extract("member", r"\.([a-z]+)$", 1).alias("ext"),
-        "content",
-    )
-    g = m.groupBy("stem").agg(
-        F.max(F.when(F.col("ext") == "txt", F.col("content"))).alias("txt"),
-        F.max(F.when(F.col("ext") == "json", F.col("content"))).alias("js"),
-        F.max(F.when(F.col("ext") == "img", F.col("content"))).alias("img"),
-    )
-    js = F.col("js").cast("string")
-    return serve_and_cleanup(
-        g.select(
-            F.regexp_extract("stem", r"s_(\d+)", 1).cast("long").alias("sample_id"),
-            F.col("txt").cast("string").alias("text"),
-            F.get_json_object(js, "$.lang").alias("lang"),
-            F.get_json_object(js, "$.source").alias("source"),
-            F.md5("img").alias("img_md5"),
-            F.length("img").cast("long").alias("img_bytes"),
-        ),
-        adir,
-    )
+    with tempfile.TemporaryDirectory(prefix="flod_wds_", ignore_cleanup_errors=True) as adir:
+        manifest = pack_wds_shards(docs, adir).collect()  # one row per shard
+        assert manifest
+        raw = spark.read.format("binaryFile").load(adir)
+        members = archive_member_rows(raw, keep_content=True)
+        m = members.select(
+            F.regexp_extract("member", r"^(s_\d+)\.", 1).alias("stem"),
+            F.regexp_extract("member", r"\.([a-z]+)$", 1).alias("ext"),
+            "content",
+        )
+        g = m.groupBy("stem").agg(
+            F.max(F.when(F.col("ext") == "txt", F.col("content"))).alias("txt"),
+            F.max(F.when(F.col("ext") == "json", F.col("content"))).alias("js"),
+            F.max(F.when(F.col("ext") == "img", F.col("content"))).alias("img"),
+        )
+        js = F.col("js").cast("string")
+        return serve_and_cleanup(
+            g.select(
+                F.regexp_extract("stem", r"s_(\d+)", 1).cast("long").alias("sample_id"),
+                F.col("txt").cast("string").alias("text"),
+                F.get_json_object(js, "$.lang").alias("lang"),
+                F.get_json_object(js, "$.source").alias("source"),
+                F.md5("img").alias("img_md5"),
+                F.length("img").cast("long").alias("img_bytes"),
+            )
+        )
 
 
 # Per-shard Bloom skipping index: bits per shard bitset, probe hashes
@@ -1588,31 +1587,33 @@ def scan_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('which shards might carry this fingerprint') before any claim
     join."""
     docs = load(spark, sf_dir, "documents")
-    ddir = tempfile.mkdtemp(prefix="flod_blshards_")
-    keyed = docs.select(
-        "doc_id",
-        F.expr(f"doc_id div {_LOOKUP_SHARD_DOCS}").alias("shard"),
-        F.md5(F.col("text").cast("binary")).alias("key"),
-    )
-    keyed.write.mode("overwrite").partitionBy("shard").parquet(ddir)
-    # the index build and needle derivation read the 3-column table
-    # BACK from the just-written corpus — the documents source is
-    # scanned and hashed exactly once (the replay_stream rescan rule)
-    stored = spark.read.parquet(ddir)
-    bdir = tempfile.mkdtemp(prefix="flod_blindex_")
-    build_shard_bloom(stored.select("shard", "key"), bdir)
-    present = stored.filter(F.col("doc_id") % 97 == 5).select(
-        F.col("doc_id").alias("needle_id"), "key"
-    )
-    absent = spark.range(_ABSENT_NEEDLES).select(
-        (F.col("id") + 1_000_000).alias("needle_id"),
-        F.md5(
-            F.concat(F.lit("missing|"), F.col("id").cast("string")).cast("binary")
-        ).alias("key"),
-    )
-    return serve_and_cleanup(
-        bloom_lookup(spark, ddir, bdir, present.unionByName(absent)), ddir, bdir
-    )
+    with (
+        tempfile.TemporaryDirectory(prefix="flod_blshards_", ignore_cleanup_errors=True) as ddir,
+        tempfile.TemporaryDirectory(prefix="flod_blindex_", ignore_cleanup_errors=True) as bdir,
+    ):
+        keyed = docs.select(
+            "doc_id",
+            F.expr(f"doc_id div {_LOOKUP_SHARD_DOCS}").alias("shard"),
+            F.md5(F.col("text").cast("binary")).alias("key"),
+        )
+        keyed.write.mode("overwrite").partitionBy("shard").parquet(ddir)
+        # the index build and needle derivation read the 3-column table
+        # BACK from the just-written corpus — the documents source is
+        # scanned and hashed exactly once (the replay_stream rescan rule)
+        stored = spark.read.parquet(ddir)
+        build_shard_bloom(stored.select("shard", "key"), bdir)
+        present = stored.filter(F.col("doc_id") % 97 == 5).select(
+            F.col("doc_id").alias("needle_id"), "key"
+        )
+        absent = spark.range(_ABSENT_NEEDLES).select(
+            (F.col("id") + 1_000_000).alias("needle_id"),
+            F.md5(
+                F.concat(F.lit("missing|"), F.col("id").cast("string")).cast("binary")
+            ).alias("key"),
+        )
+        return serve_and_cleanup(
+            bloom_lookup(spark, ddir, bdir, present.unionByName(absent))
+        )
 
 
 def wds_assemble_members(raw: DataFrame) -> DataFrame:
@@ -1802,17 +1803,16 @@ def crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     pages = _crawl_pages(docs)
-    out_dir = tempfile.mkdtemp(prefix="flod_crawl_")
-    manifest = pack_warc_shards(pages, out_dir).collect()  # one row per shard
-    assert all(os.path.getsize(r.path) == r.n_bytes for r in manifest)
-    raw = spark.read.format("binaryFile").load(out_dir)
-    members = archive_member_rows(raw, keep_content=True)
-    ext = _crawl_extract_quality(members)
-    w = Window.partitionBy("fp")
-    return serve_and_cleanup(
-        ext.withColumn("admitted", F.col("doc_id") == F.min("doc_id").over(w)),
-        out_dir,
-    )
+    with tempfile.TemporaryDirectory(prefix="flod_crawl_", ignore_cleanup_errors=True) as out_dir:
+        manifest = pack_warc_shards(pages, out_dir).collect()  # one row per shard
+        assert all(os.path.getsize(r.path) == r.n_bytes for r in manifest)
+        raw = spark.read.format("binaryFile").load(out_dir)
+        members = archive_member_rows(raw, keep_content=True)
+        ext = _crawl_extract_quality(members)
+        w = Window.partitionBy("fp")
+        return serve_and_cleanup(
+            ext.withColumn("admitted", F.col("doc_id") == F.min("doc_id").over(w))
+        )
 
 
 def _crawl_pages(docs: DataFrame) -> DataFrame:

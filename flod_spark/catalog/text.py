@@ -1908,12 +1908,11 @@ def bpe_apply_from_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flod_spark.io import serve_and_cleanup
 
     merges = _bpe_merge_list(spark, sf_dir)
-    mdir = tempfile.mkdtemp(prefix="flod_bpe_merges_")
-    mpath = os.path.join(mdir, "merges")
-    bpe_save_merges(merges, spark, mpath)
-    docs = load(spark, sf_dir, "documents")
-    out = bpe_apply_merges(docs, bpe_load_merges(spark, mpath))
-    return serve_and_cleanup(out, mdir)
+    with tempfile.TemporaryDirectory(prefix="flod_bpe_merges_", ignore_cleanup_errors=True) as mdir:
+        mpath = os.path.join(mdir, "merges")
+        bpe_save_merges(merges, spark, mpath)
+        docs = load(spark, sf_dir, "documents")
+        return serve_and_cleanup(bpe_apply_merges(docs, bpe_load_merges(spark, mpath)))
 
 
 def _novelty_grams(docs):
@@ -2694,8 +2693,8 @@ def unigram_apply_from_table_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     from flod_spark.io import serve_and_cleanup
 
     _, vocab = _unigram_rounds(spark, sf_dir, _UNI_ROUNDS)
-    vdir = tempfile.mkdtemp(prefix="flod_uni_vocab_")
-    vpath = os.path.join(vdir, "vocab")
-    unigram_save_vocab(vocab, spark, vpath)
-    docs = load(spark, sf_dir, "documents")
-    return serve_and_cleanup(unigram_apply_from_table(docs, spark, vpath), vdir)
+    with tempfile.TemporaryDirectory(prefix="flod_uni_vocab_", ignore_cleanup_errors=True) as vdir:
+        vpath = os.path.join(vdir, "vocab")
+        unigram_save_vocab(vocab, spark, vpath)
+        docs = load(spark, sf_dir, "documents")
+        return serve_and_cleanup(unigram_apply_from_table(docs, spark, vpath))

@@ -274,27 +274,20 @@ def dir_has_parquet(d: str) -> bool:
     return bool(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
 
 
-def serve_and_cleanup(df: DataFrame, *dirs: str) -> DataFrame:
+def serve_and_cleanup(df: DataFrame) -> DataFrame:
     """Materialize a lifecycle query's serve result (eager
-    localCheckpoint), then remove the temp state directories it was
-    computed from — the batch analog of streaming/gate.py::spool, which
-    removes a stream's replay spool on exit (r13 advice: the gated
-    lifecycle queries leaked their ``mkdtemp`` index/claim trees on
-    every run). With no ``dirs`` it only materializes, for callers
-    whose temp dirs are already scoped by a ``with`` block.
-    The checkpoint pins the result's partitions in executor storage,
-    so the returned DataFrame no longer reads the swept paths; callers
-    return it directly to the driver, which collects as usual.
+    localCheckpoint) so it no longer reads the temp state it was
+    computed from — the batch analog of streaming/gate.py::spool.
+    Callers own that state as a scoped ``tempfile.TemporaryDirectory``
+    and serve through this inside the ``with``, so the tree is removed
+    on return and on any raise alike. The checkpoint pins the result's
+    partitions in executor storage; callers return it directly to the
+    driver, which collects as usual.
 
     Scale note: the serve outputs these gates return are top-k /
     verdict tables (orders of magnitude smaller than the state), so
     the extra materialization is noise; a production nightly job keeps
-    its state dirs instead of sweeping them — this helper exists for
+    its state dirs instead of removing them — this helper exists for
     the self-contained gate shape that builds state, serves once, and
     must not leak."""
-    import shutil
-
-    out = df.localCheckpoint(eager=True)
-    for d in dirs:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+    return df.localCheckpoint(eager=True)

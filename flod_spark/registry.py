@@ -24,10 +24,12 @@ Determinism rules (so the driver's order-insensitive value-hash matches):
 from __future__ import annotations
 
 import functools
+import glob
 import hashlib
 import importlib
 import os
 import tempfile
+import time
 import zipfile
 from collections.abc import Callable
 
@@ -39,12 +41,21 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
+# A shipped zip (or a half-built .tmp) untouched for this long is pruned:
+# a session's executors fetch the zip at their first task, and every
+# _package_zip call touches the zip it returns, so a week cannot take
+# one a live session still serves.
+_SHIP_ZIP_MAX_AGE_S = 7 * 24 * 3600
+
+
 def _package_zip(pkg_dir: str, ship_dir: str) -> str:
     """The zip of ``pkg_dir``'s ``.py`` files under ``ship_dir``, named
     by a hash of their relative paths and bytes and built only when no
     zip of that content exists. Keying on content, not mtimes, means
     two checkouts sharing one temp root can never ship each other's
-    code, whatever their file times."""
+    code, whatever their file times. The returned zip is touched, and
+    any other zip older than _SHIP_ZIP_MAX_AGE_S is removed, so the
+    directory holds the recent package contents only."""
     sources = sorted(
         os.path.relpath(os.path.join(root, f), pkg_dir)
         for root, _dirs, files in os.walk(pkg_dir)
@@ -65,6 +76,15 @@ def _package_zip(pkg_dir: str, ship_dir: str) -> str:
             for rel in sources:
                 z.write(os.path.join(pkg_dir, rel), os.path.join("flod_spark", rel))
         os.replace(tmp, zpath)
+    os.utime(zpath)
+    cutoff = time.time() - _SHIP_ZIP_MAX_AGE_S
+    for old in glob.glob(os.path.join(ship_dir, "flod_spark_pkg_*.zip*")):
+        if old != zpath and old.endswith((".zip", ".zip.tmp")):
+            try:
+                if os.path.getmtime(old) < cutoff:
+                    os.remove(old)
+            except OSError:  # another session pruned or replaced it first
+                pass
     return zpath
 
 

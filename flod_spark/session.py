@@ -20,7 +20,7 @@ def _fast_scratch_root() -> str | None:
     leave the system defaults alone.
 
     $SPARK_GRAFT_SCRATCH points shuffle/spill files and the engine's
-    tempfile.mkdtemp state (replay spools, checkpoints, lifecycle dirs)
+    tempfile state (replay spools, checkpoints, lifecycle dirs)
     at a specific device — the knob a production deployment sets to its
     local NVMe. The DEFAULT is deliberately None: an r16 interleaved A/B
     at sf0.1 measured /dev/shm (tmpfs) as neutral-to-WORSE than the
@@ -60,11 +60,11 @@ def get_spark(
     scratch = _fast_scratch_root()
     if scratch is not None:
         # JVM-side ephemeral state (shuffle files, spill, broadcast blocks)
-        # and Python-side engine temp dirs (tempfile.mkdtemp call sites:
-        # replay spools, stream checkpoints, index/claim lifecycle dirs)
-        # share the same fast scratch root. tempfile.tempdir is process-
-        # global by design: every mkdtemp in the engine and its tests
-        # moves together, with no per-call-site drift.
+        # and Python-side engine temp dirs (tempfile call sites: replay
+        # spools, stream checkpoints, index/claim lifecycle dirs) share
+        # the same fast scratch root. tempfile.tempdir is process-global
+        # by design: every temp root in the engine and its tests moves
+        # together, with no per-call-site drift.
         tempfile.tempdir = scratch
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

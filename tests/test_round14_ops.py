@@ -6,8 +6,6 @@ implementations pin on the scale-safe unigram vocab delivery."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -135,16 +133,18 @@ def test_bpe_merge_artifact_round_trip(spark, sf_dir, tmp_path):
     assert via_table == direct and direct
 
 
-def test_serve_and_cleanup_sweeps_dirs_and_result_survives(spark, tmp_path):
-    """serve_and_cleanup must materialize BEFORE sweeping: the returned
-    DataFrame stays collectable after its source parquet is gone, and
-    the swept dirs are gone."""
+def test_serve_and_cleanup_result_survives_source_removal(spark, tmp_path):
+    """serve_and_cleanup must materialize: the returned DataFrame stays
+    collectable after its source parquet is removed (the scoped temp
+    root a gate serves from goes when its ``with`` exits)."""
+    import shutil
+
     from flod_spark.io import serve_and_cleanup
 
     d = str(tmp_path / "state")
     spark.range(100).withColumn("v", F.col("id") * 2).write.parquet(d)
-    out = serve_and_cleanup(spark.read.parquet(d).filter("id < 10"), d)
-    assert not os.path.exists(d)
+    out = serve_and_cleanup(spark.read.parquet(d).filter("id < 10"))
+    shutil.rmtree(d)
     got = sorted((r.id, r.v) for r in out.collect())
     assert got == [(i, 2 * i) for i in range(10)]
 

@@ -231,6 +231,11 @@ def test_bucketed_admission_invisible_and_shuffle_free(spark, sf_dir, tmp_path):
         "dedup_claims_compacted",
         "sim_ivfpq_compacted",
         "crawl_pipeline_incremental",
+        # the router's routed trees and the two tokenizer artifact
+        # roots, scoped temp dirs like every catalog state root
+        "stream_split_router_live",
+        "bpe_apply_from_table",
+        "unigram_apply_from_table",
     ],
 )
 def test_gated_query_leaves_no_tmp_trees(spark, sf_dir, qk):
@@ -295,6 +300,38 @@ def test_shipped_package_zip_is_keyed_by_content(tmp_path, monkeypatch):
     assert shipped_mod(first) == "X = 'first'\n"
     assert shipped_mod(second) == "X = 'second'\n"
     assert shipped_mod(first) == "X = 'first'\n"
+
+
+def test_shipped_package_zips_pruned_by_age(tmp_path):
+    """Each _package_zip call touches the zip it returns and removes
+    other package zips (and half-built .tmp files) untouched for longer
+    than _SHIP_ZIP_MAX_AGE_S; a recent foreign zip, which a live session
+    may still serve, stays."""
+    import time
+
+    from flod_spark import registry
+
+    pkg = tmp_path / "pkg" / "flod_spark"
+    pkg.mkdir(parents=True)
+    (pkg / "mod.py").write_text("X = 1\n")
+    ship = tmp_path / "ship"
+    ship.mkdir()
+    old = time.time() - 8 * 24 * 3600
+    stale = ship / "flod_spark_pkg_00000000000000aa.zip"
+    stale_tmp = ship / "flod_spark_pkg_00000000000000bb.zip.tmp"
+    fresh = ship / "flod_spark_pkg_00000000000000cc.zip"
+    other = ship / "unrelated.zip"
+    for f in (stale, stale_tmp, fresh, other):
+        f.write_bytes(b"x")
+    for f in (stale, stale_tmp, other):
+        os.utime(f, (old, old))
+    current = registry._package_zip(str(pkg), str(ship))
+    os.utime(current, (old, old))  # an old zip of the live tree is reused...
+    assert registry._package_zip(str(pkg), str(ship)) == current
+    assert os.path.getmtime(current) > time.time() - 3600  # ...and touched
+    assert sorted(p.name for p in ship.iterdir()) == sorted(
+        [os.path.basename(current), fresh.name, other.name]
+    )
 
 
 def test_ivfpq_ingest_sink_batching_invisible(spark, sf_dir, tmp_path):

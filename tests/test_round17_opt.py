@@ -500,6 +500,27 @@ def test_assign_cells_hoisted_norms_bitwise(spark, sf_dir):
     assert got == ref
 
 
+def test_assign_cells_row_norm_fold_appears_once(spark, sf_dir):
+    """Plan-shape pin of the hoist above: in _assign_cells' optimized
+    plan the norm fold sqrt(aggregate(zip_with(x, x, ...))) appears
+    exactly twice — once per centroid (in the broadcast struct) and
+    once per row, as the 1-element array the per-centroid lambda binds
+    — so an optimizer change that re-inlines the row norm into the
+    per-centroid lambda fails here instead of only running slower."""
+    import re
+
+    from flod_spark.catalog.similarity import _as_double, _assign_cells, _cent_df
+    from flod_spark.io import load
+
+    e = load(spark, sf_dir, "embeddings").select(
+        "vec_id", _as_double("embedding").alias("v")
+    )
+    plan = _assign_cells(e, _cent_df(e))._jdf.queryExecution().optimizedPlan().toString()
+    folds = re.findall(r"(\w*\()?sqrt\(aggregate\(zip_with\((\w+#\d+), \2,", plan, re.I)
+    assert len(folds) == 2, plan
+    assert [f for f, _ in folds].count("array(") == 1, plan
+
+
 def test_kmeans_fit_repartition_gate_results_identical(spark, sf_dir):
     """r17 scale-adaptive input parallelism pin: kmeans_fit repartitions
     its input once before round 0 when the scan has fewer splits than

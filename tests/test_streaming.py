@@ -429,3 +429,29 @@ def test_claim_slices_written_only_through_the_claims_seam():
     assert not flips, flips
     assert [o for o in options if o[1]] == [("catalog/dedup.py", 1)], options
     assert stampers == ["catalog/dedup.py"], stampers
+
+
+def test_ann_stages_and_temp_roots_written_once():
+    """The ANN family is one seam and every catalog temp root is scoped:
+    no catalog module calls tempfile.mkdtemp (state lives in a
+    ``TemporaryDirectory`` the serve runs inside), serve_and_cleanup
+    takes only the frame, and in similarity.py the PQ encode fold, the
+    ADC sum and the N_PROBE rank filter are each written once."""
+    import ast
+    import inspect
+    import pathlib
+    import re
+
+    from flod_spark.io import serve_and_cleanup
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "flod_spark"
+    mkdtemp = [
+        p.name for p in sorted((pkg / "catalog").glob("*.py")) if "mkdtemp(" in p.read_text()
+    ]
+    assert not mkdtemp, mkdtemp
+    assert len(inspect.signature(serve_and_cleanup).parameters) == 1
+    sim = (pkg / "catalog" / "similarity.py").read_text()
+    code = ast.unparse(ast.parse(sim))  # Spark code only: no comments, no SQL
+    assert sim.count('zip_with("sv", "cv"') == 1
+    assert len(re.findall(r"(?<!def )\b_pq_adist_col\(\)", sim)) == 1
+    assert len(re.findall(r"\bF\.col\('rn'\) <= N_PROBE\b", code)) == 1
