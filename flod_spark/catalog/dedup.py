@@ -202,11 +202,13 @@ def _simhash_votes(docs: DataFrame, width: int) -> DataFrame:
     groupBy(doc_id) whose N SUM(±1) aggregates combine map-side. The
     shuffle carries |docs| rows of N ints; the old per-position explode
     shuffled |tokens| x N rows and was the bench's slowest stage."""
+    from flod_spark.catalog.text import TOKEN_RE
+
     norm = docs.select("doc_id", _norm_col().alias("t"))
     tok = norm.select(
         "doc_id",
         F.explode(
-            F.array_distinct(F.regexp_extract_all(F.col("t"), F.lit("[a-z0-9]+"), F.lit(0)))
+            F.array_distinct(F.regexp_extract_all(F.col("t"), F.lit(TOKEN_RE), F.lit(0)))
         ).alias("tk"),
     ).distinct()
     tokh = tok.select("doc_id", F.md5(F.col("tk").cast("binary")).alias("h"))
@@ -284,12 +286,14 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc pair rows; the degree is a partial-agg count over distinct
     signatures weighted by multiplicity. The cap's row_number rewrites
     to WindowGroupLimit, pruning hot buckets BEFORE the join."""
+    from flod_spark.catalog.text import TOKEN_RE
+
     docs = load(spark, sf_dir, "documents", spread=True, amplify=2000)
     norm = docs.select("doc_id", _norm_col().alias("t"))
     tok = norm.select(
         "doc_id",
         F.explode(
-            F.array_distinct(F.regexp_extract_all(F.col("t"), F.lit("[a-z0-9]+"), F.lit(0)))
+            F.array_distinct(F.regexp_extract_all(F.col("t"), F.lit(TOKEN_RE), F.lit(0)))
         ).alias("tk"),
     ).distinct()
     # both halves from ONE tokenize pass: 2 md5s per distinct token,
@@ -715,9 +719,11 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: benchmark grams broadcast; the train side stays map-only plus
     one partial-agg count."""
+    from flod_spark.catalog.text import TOKEN_RE
+
     docs = load(spark, sf_dir, "documents", spread=True, amplify=2000)
     tok = docs.select(
-        "doc_id", F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0)).alias("tk")
+        "doc_id", F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_RE), F.lit(0)).alias("tk")
     )
     ng = tok.select("doc_id", F.explode(_ngram_arr_col()).alias("g"))
     bench = ng.filter(F.col("doc_id") % DECON_BENCH_MOD == 0).select("g").distinct()
@@ -1201,12 +1207,14 @@ def dedup_semantic_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the df pass, so the fallback reuses that partitioning). Signatures
     are then ONE groupBy(doc) of 16 weighted sums combining map-side,
     and text never crosses an exchange."""
+    from flod_spark.catalog.text import TOKEN_RE
+
     docs = load(spark, sf_dir, "documents", spread=True, amplify=2000)
     norm = docs.select("doc_id", _norm_col().alias("t"))
     tok = norm.select(
         "doc_id",
         F.explode(
-            F.array_distinct(F.regexp_extract_all(F.col("t"), F.lit("[a-z0-9]+"), F.lit(0)))
+            F.array_distinct(F.regexp_extract_all(F.col("t"), F.lit(TOKEN_RE), F.lit(0)))
         ).alias("tk"),
     ).distinct()
     ilog2 = lambda c: F.length(F.conv(c.cast("string"), 10, 2)).cast("long")  # noqa: E731

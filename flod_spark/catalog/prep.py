@@ -100,7 +100,7 @@ def prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast benchmark grams, one fingerprint shuffle, ~15-group audit."""
     docs = load(spark, sf_dir, "documents")
     q = docs.filter(quality_keep_col())
-    tok_arr = F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0))
+    tok_arr = F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_RE), F.lit(0))
     bench_ng = (
         docs.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
         .select(tok_arr.alias("tk"))

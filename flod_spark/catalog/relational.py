@@ -1517,10 +1517,12 @@ def quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: bucketed rank machinery — one hash exchange; no
     single-partition window in the plan."""
+    from flod_spark.catalog.text import TOKEN_RE
+
     docs = load(spark, sf_dir, "documents")
     s = docs.select(
         "doc_id",
-        F.size(F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0)))
+        F.size(F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_RE), F.lit(0)))
         .cast("long")
         .alias("n_tokens"),
     )

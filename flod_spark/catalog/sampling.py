@@ -539,11 +539,13 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     SHIPPED skew path is sample_token_budget_sharded below: the budget
     splits across salted sub-strata (budget/S per shard), S-way
     parallel per language, composing to the same per-lang budget."""
+    from flod_spark.catalog.text import TOKEN_RE
+
     docs = load(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         "lang",
-        F.size(F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0)))
+        F.size(F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_RE), F.lit(0)))
         .cast("long")
         .alias("n_tok"),
         _hash_prefix("tb|", F.col("doc_id")).alias("rk"),
@@ -598,11 +600,13 @@ def sample_token_budget_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     form cannot scale on; still one shuffle + one running SUM with O(1)
     state. S tracks the skew ratio (dominant share * parallelism
     target), a config knob, not data-dependent."""
+    from flod_spark.catalog.text import TOKEN_RE
+
     docs = load(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         "lang",
-        F.size(F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0)))
+        F.size(F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_RE), F.lit(0)))
         .cast("long")
         .alias("n_tok"),
         _hash_prefix("tb|", F.col("doc_id")).alias("rk"),

@@ -66,6 +66,152 @@ def _borrowed_oracle(module: str, qkey: str) -> str:
     return ORACLES[qkey]
 
 
+def _doc_arrival(df: DataFrame) -> DataFrame:
+    """The doc-ordered feed every document stream replays: ``df`` plus
+    ``ingest_ts``, one second per doc_id, so replay order is doc_id
+    order and a horizon in docs is a horizon in seconds."""
+    return df.withColumn("ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000))
+
+
+_SHARDS = 8
+
+
+def _shard(col):
+    """The ``shard`` column of every per-shard fold gate. Results never
+    depend on _SHARDS, since a key's fold never crosses shards; 8
+    matches the drain partition pin."""
+    return F.pmod(F.xxhash64(col), F.lit(_SHARDS)).alias("shard")
+
+
+def _shard_fold(output_ddl: str, state_ddl: str):
+    """Declare a per-shard ``(key, pdfs, state)`` fold's operator
+    schemas next to its body, as packed_user_fold and _ttl_shard_fold
+    do for theirs, so _fold_shards can run it."""
+
+    def deco(fn):
+        fn.output_ddl, fn.state_ddl = output_ddl, state_ddl
+        return fn
+
+    return deco
+
+
+def _fold_shards(src: DataFrame, fold, spark: SparkSession) -> DataFrame:
+    """The one runner of every per-shard fold gate: group ``src`` by
+    its ``shard`` column, run ``fold`` under the schemas it declares
+    (packed_user_fold, _ttl_shard_fold or _shard_fold) in update mode
+    with no timeout, and drain. Called inside the gate's spool."""
+    out = src.groupBy("shard").applyInPandasWithState(
+        fold,
+        outputStructType=fold.output_ddl,
+        stateStructType=fold.state_ddl,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return drain(out, spark, output_mode="update")
+
+
+def _dup_rule(part: str, order: str, ttl: int | None = None) -> tuple[str, str]:
+    """The claim stage of a claim-evidence oracle, as (window column,
+    dup condition) over rows ordered by ``order`` within each ``part``
+    key. Without ``ttl`` it is first arrival: every row after the key's
+    first is dup evidence (the exact-live twins). With ``ttl`` it is a
+    LAG within the horizon: dup iff the key's previous occurrence is at
+    most ``ttl`` doc_ids back (the bounded twins; beyond the horizon
+    the key claims again)."""
+    if ttl is None:
+        return f"row_number() OVER (PARTITION BY {part} ORDER BY {order}) AS rn", "rn > 1"
+    return (
+        f"lag(doc_id) OVER (PARTITION BY {part} ORDER BY {order}) AS prev",
+        f"prev IS NOT NULL AND doc_id - prev <= {ttl}",
+    )
+
+
+def _passage_oracle(ttl: int | None = None) -> str:
+    """Oracle of both passage twins: text.anchor_report_oracle over the
+    _dup_rule claim on anchor hashes in (doc_id, p) arrival order
+    (within-doc repeats have gap 0)."""
+    from flod_spark.catalog.text import anchor_report_oracle
+
+    win, dup = _dup_rule("hv", "doc_id, p", ttl)
+    return anchor_report_oracle(
+        "r AS (SELECT doc_id, n, n_anchors, p, "
+        f"    {win} FROM arows), "
+        f"dup AS (SELECT doc_id, list_sort(list(p)) AS ps FROM r WHERE {dup} GROUP BY doc_id)",
+        "dup",
+    )
+
+
+def _passage_stream(spark: SparkSession, sf_dir: str, claim) -> DataFrame:
+    """Source and sink of both passage twins: documents replayed in
+    doc_id order, ``claim(stream)`` drains the (doc_id, p) anchors that
+    claimed their hash, and the batch side reports every other anchor
+    as passage-dup evidence (text.anchor_dup_report)."""
+    from flod_spark.catalog.text import anchor_dup_report, winnow_anchor_rows
+
+    docs = _doc_arrival(load(spark, sf_dir, "documents"))
+    with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
+        kept = claim(sp.stream).select("doc_id", "p")
+    # batch-side recount: the kernel is deterministic, so recomputing
+    # anchors over the same table reproduces the stream's rows exactly
+    anchors = winnow_anchor_rows(load(spark, sf_dir, "documents"))
+    dup = anchors.join(kept, ["doc_id", "p"], "left_anti")
+    return anchor_dup_report(anchors, dup, "n_dup_anchors")
+
+
+def _band_oracle(ttl: int | None = None) -> str:
+    """Oracle of both MinHash twins: the generated signature CTE, the
+    _dup_rule claim on (band, signature) in doc_id arrival order, and
+    per-doc dup-band counts — near-dups against the arrival prefix, not
+    the symmetric batch pair report."""
+    from flod_spark.catalog.dedup import _minhash_ctes
+
+    ctes, _pair_select = _minhash_ctes()
+    win, dup = _dup_rule("band, bs", "doc_id", ttl)
+    flag = f"CASE WHEN {dup} THEN 1 ELSE 0 END"
+    return (
+        f"WITH {ctes}, "
+        "r AS (SELECT doc_id, band, "
+        f"    {win} FROM sig) "
+        "SELECT doc_id, "
+        f"  CAST(SUM({flag}) AS BIGINT) AS n_dup_bands, "
+        f"  SUM({flag}) > 0 AS near_dup "
+        "FROM r GROUP BY doc_id"
+    )
+
+
+def _band_stream(spark: SparkSession, sf_dir: str, claim) -> DataFrame:
+    """Source and sink of both MinHash twins: ONE deterministic,
+    persisted signature table is both the replayed feed (doc_id order)
+    and the recount base; ``claim(stream)`` drains the (doc_id, band)
+    rows that claimed their signature, and the anti-join recount counts
+    every other band of a doc as near-dup evidence."""
+    from flod_spark.catalog.dedup import BANDS, SEEDS, SHINGLE
+    from flod_spark.operators.minhash import minhash_signatures, shingles
+
+    sigs = minhash_signatures(
+        shingles(
+            load(spark, sf_dir, "documents", spread=True, amplify=2000),
+            shingle=SHINGLE,
+            distinct=False,
+        ),
+        seeds=SEEDS,
+        bands=BANDS,
+    ).persist()
+    feed = _doc_arrival(sigs)
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "band")) as sp:
+        kept = claim(sp.stream).select("doc_id", "band")
+    dup = (
+        sigs.select("doc_id", "band")
+        .join(kept, ["doc_id", "band"], "left_anti")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_dup_bands"))
+    )
+    base = sigs.select("doc_id").distinct()
+    j = base.join(dup, "doc_id", "left")
+    n_dup = F.coalesce("n_dup_bands", F.lit(0)).cast("long")
+    return j.select("doc_id", n_dup.alias("n_dup_bands"), (n_dup > 0).alias("near_dup"))
+
+
 @query(
     "stream_window_live",
     oracle=(
@@ -576,9 +722,7 @@ def stream_prep_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flod_spark.catalog.text import quality_keep_col
     from flod_spark.streaming.dedup import drop_duplicates_unbounded
 
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
-    )
+    docs = _doc_arrival(load(spark, sf_dir, "documents"))
     with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
         kept = sp.stream.filter(quality_keep_col()).select(
             "doc_id", "lang", F.md5(_norm_col().cast("binary")).alias("fp")
@@ -587,32 +731,10 @@ def stream_prep_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         return drain(deduped, spark).select("doc_id", "lang", "fp")
 
 
-def _dedup_substring_live_oracle() -> str:
-    from flod_spark.catalog.text import _KR_K, winnow_arows_cte
-
-    return (
-        # first arrival per anchor hash = min (doc_id, p) under the
-        # replay order; every later arrival of that hash is a dup
-        # anchor; coverage = interval union of dup spans per doc
-        f"WITH {winnow_arows_cte()}, "
-        "r AS (SELECT doc_id, n, n_anchors, p, "
-        "    row_number() OVER (PARTITION BY hv ORDER BY doc_id, p) AS rn FROM arows), "
-        "dup AS (SELECT doc_id, list_sort(list(p)) AS ps FROM r WHERE rn > 1 GROUP BY doc_id), "
-        "cov AS (SELECT doc_id, len(ps) AS n_dup, "
-        f"    COALESCE(list_sum(list_transform(range(1, len(ps)), "
-        f"      i -> least({_KR_K}, ps[i+1] - ps[i]))), 0) + {_KR_K} AS dup_chars "
-        "  FROM dup), "
-        "base AS (SELECT DISTINCT doc_id, n, n_anchors FROM arows) "
-        "SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_chars, "
-        "  CAST(b.n_anchors AS BIGINT) AS n_anchors, "
-        "  CAST(COALESCE(c.n_dup, 0) AS BIGINT) AS n_dup_anchors, "
-        "  CAST(COALESCE(c.dup_chars, 0) AS BIGINT) AS dup_chars, "
-        "  CAST(COALESCE(c.dup_chars, 0) AS DOUBLE) / b.n AS dup_frac "
-        "FROM base b LEFT JOIN cov c USING (doc_id)"
-    )
-
-
-@query("stream_dedup_substring_live", oracle=_dedup_substring_live_oracle())
+# first arrival per anchor hash = min (doc_id, p) under the replay
+# order; every later arrival of that hash is a dup anchor; coverage =
+# interval union of dup spans per doc
+@query("stream_dedup_substring_live", oracle=_passage_oracle())
 def stream_dedup_substring_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SUBSTRING-level passage dedup as INCREMENTAL INGESTION — the
     streaming capstone of the prep story: documents replayed as
@@ -635,63 +757,20 @@ def stream_dedup_substring_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     regime, same as stream_dedup_live; dropDuplicatesWithinWatermark
     bounds it when the dup horizon is known. The recount is one
     anti-join on (doc, p) and per-doc array math."""
-    from flod_spark.catalog.text import anchor_coverage_chars, winnow_anchor_rows
+    from flod_spark.catalog.text import winnow_anchor_rows
     from flod_spark.streaming.dedup import drop_duplicates_unbounded
 
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
-    )
-    with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
-        survivors = drop_duplicates_unbounded(winnow_anchor_rows(sp.stream), "h")
-        kept = drain(survivors, spark).select("doc_id", "p")
-    # batch-side recount: the kernel is deterministic, so recomputing
-    # anchors over the same table reproduces the stream's rows exactly
-    anchors = winnow_anchor_rows(load(spark, sf_dir, "documents"))
-    base = anchors.groupBy("doc_id").agg(
-        F.first("n_chars").alias("n_chars"), F.first("n_anchors").alias("n_anchors")
-    )
-    dup = (
-        anchors.join(kept, ["doc_id", "p"], "left_anti")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list("p")).alias("ps"))
-        .select(
-            "doc_id",
-            F.size("ps").cast("long").alias("n_dup_anchors"),
-            anchor_coverage_chars().alias("dup_chars"),
-        )
-    )
-    j = base.join(dup, "doc_id", "left")
-    dc = F.coalesce("dup_chars", F.lit(0)).cast("long")
-    return j.select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_anchors").cast("long").alias("n_anchors"),
-        F.coalesce("n_dup_anchors", F.lit(0)).cast("long").alias("n_dup_anchors"),
-        dc.alias("dup_chars"),
-        (dc.cast("double") / F.col("n_chars")).alias("dup_frac"),
+    return _passage_stream(
+        spark,
+        sf_dir,
+        lambda s: drain(drop_duplicates_unbounded(winnow_anchor_rows(s), "h"), spark),
     )
 
 
-def _dedup_minhash_live_oracle() -> str:
-    from flod_spark.catalog.dedup import _minhash_ctes
-
-    ctes, _pair_select = _minhash_ctes()
-    return (
-        # first arrival per (band, signature) = min doc_id under the
-        # replay order; a later doc failing to claim a band is near-dup
-        # evidence vs the arrival prefix — same composition trick as
-        # _dedup_substring_live_oracle, over the minhash sig CTE
-        f"WITH {ctes}, "
-        "r AS (SELECT doc_id, band, "
-        "    row_number() OVER (PARTITION BY band, bs ORDER BY doc_id) AS rn FROM sig) "
-        "SELECT doc_id, "
-        "  CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_bands, "
-        "  SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) > 0 AS near_dup "
-        "FROM r GROUP BY doc_id"
-    )
-
-
-@query("stream_dedup_minhash_live", oracle=_dedup_minhash_live_oracle())
+# first arrival per (band, signature) = min doc_id under the replay
+# order; a later doc failing to claim a band is near-dup evidence vs the
+# arrival prefix
+@query("stream_dedup_minhash_live", oracle=_band_oracle())
 def stream_dedup_minhash_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FUZZY (MinHash-LSH) dedup as INCREMENTAL INGESTION — the live
     twin the fuzzy-dedup family was missing (r6 verdict item 3), and
@@ -726,37 +805,11 @@ def stream_dedup_minhash_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join on (doc, band) over signature-width rows. Reference:
     flod has no streaming engine — this extends its dedup surface per
     SURVEY §2.5."""
-    from flod_spark.catalog.dedup import BANDS, SEEDS, SHINGLE
-    from flod_spark.operators.minhash import minhash_signatures, shingles
     from flod_spark.streaming.dedup import drop_duplicates_unbounded
 
-    # ONE deterministic signature table serves as both the replayed
-    # ingestion feed and the recount base
-    sigs = minhash_signatures(
-        shingles(
-            load(spark, sf_dir, "documents", spread=True, amplify=2000),
-            shingle=SHINGLE,
-            distinct=False,
-        ),
-        seeds=SEEDS,
-        bands=BANDS,
-    ).persist()
-    feed = sigs.withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
+    return _band_stream(
+        spark, sf_dir, lambda s: drain(drop_duplicates_unbounded(s, "band", "bs"), spark)
     )
-    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "band")) as sp:
-        claimed = drop_duplicates_unbounded(sp.stream, "band", "bs")
-        kept = drain(claimed, spark).select("doc_id", "band")
-    dup = (
-        sigs.select("doc_id", "band")
-        .join(kept, ["doc_id", "band"], "left_anti")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_dup_bands"))
-    )
-    base = sigs.select("doc_id").distinct()
-    j = base.join(dup, "doc_id", "left")
-    n_dup = F.coalesce("n_dup_bands", F.lit(0)).cast("long")
-    return j.select("doc_id", n_dup.alias("n_dup_bands"), (n_dup > 0).alias("near_dup"))
 
 
 @query(
@@ -1025,9 +1078,7 @@ def stream_split_router_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         _thr,
     )
 
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
-    )
+    docs = _doc_arrival(load(spark, sf_dir, "documents"))
     with tempfile.TemporaryDirectory(prefix="flod_router_", ignore_cleanup_errors=True) as root:
         hp = _hash_prefix("p|", F.col("doc_id"))
         split = (
@@ -1365,6 +1416,7 @@ def stream_bars_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shard_fold("shard long, user_id long", "ks array<long>, vs array<long>")
 def _mg_shard_fn(key, pdfs, state):
     """Per-shard streaming Misra-Gries (bounded state: two arrays of at
     most analytics._HH_C entries), merged across micro-batches. Emits
@@ -1430,16 +1482,9 @@ def stream_heavy_hitters_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             with_event_time(sp.stream)
             .filter(F.col("user_id").isNotNull())
             .withWatermark("ts", _WATERMARK)
-            .select(F.pmod(F.xxhash64("user_id"), F.lit(8)).alias("shard"), "user_id")
+            .select(_shard("user_id"), "user_id")
         )
-        snapshots = src.groupBy("shard").applyInPandasWithState(
-            _mg_shard_fn,
-            outputStructType="shard long, user_id long",
-            stateStructType="ks array<long>, vs array<long>",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(snapshots, spark, output_mode="update")
+        got = _fold_shards(src, _mg_shard_fn, spark)
     cand = got.select("user_id").distinct()
     ev_b = load(spark, sf_dir, "events").select("user_id").filter(
         F.col("user_id").isNotNull()
@@ -1688,30 +1733,24 @@ def stream_market_basket_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DET_SHARDS = 8
-
-
-def _det_shard(col):
-    return F.pmod(F.xxhash64(col), F.lit(_DET_SHARDS)).alias("shard")
-
-
 def _detector_stream(spark: SparkSession, sf_dir: str, fold, value) -> DataFrame:
     """The one stream runner of the five per-user detector gates
     (ewma, cusum, drawdown, rsi, bollinger): events -> quantized
     ``value`` (aliased to the fold's value column) -> spool ->
     watermark -> shard select -> ``fold`` (a
-    streaming/packfold.py::packed_user_fold) -> drain.
-    Returns the drained emissions; each gate finishes batch-side.
+    streaming/packfold.py::packed_user_fold) run by _fold_shards, the
+    runner it shares with the TTL claim gates, both novelty gates,
+    heavy hitters and the weighted sample. Returns the drained
+    emissions; each gate finishes batch-side.
 
-    Each gate groups by pmod(xxhash64(user_id), _DET_SHARDS) and keeps
+    Each gate groups by _shard(user_id) and keeps
     every user's state packed inside its shard's row, so a trigger
     costs one Python call per shard instead of one per user. The
     per-user arithmetic is identical op for op (the same int64
     operations in the same order, seeded with the same carried
     values), so every emitted row is bit-identical to a per-user fold
     and the gates keep their batch-window oracles verbatim. Results do
-    not depend on _DET_SHARDS, since a user's fold never crosses
-    shards; 8 matches the novelty gates and the drain partition pin."""
+    not depend on _SHARDS, since a user's fold never crosses shards."""
     ev = load(spark, sf_dir, "events")
     feed = ev.select("event_id", "user_id", "ts", value.alias(fold.value))
     with spool(spark, feed, "ts", n_batches=4, tiebreak=("event_id",)) as sp:
@@ -1719,21 +1758,14 @@ def _detector_stream(spark: SparkSession, sf_dir: str, fold, value) -> DataFrame
             with_event_time(sp.stream)
             .withWatermark("ts", _WATERMARK)
             .select(
-                _det_shard("user_id"),
+                _shard("user_id"),
                 "user_id",
                 "event_id",
                 ts_micros("ts").alias("us"),
                 fold.value,
             )
         )
-        out = src.groupBy("shard").applyInPandasWithState(
-            fold,
-            outputStructType=fold.output_ddl,
-            stateStructType=fold.state_ddl,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        return drain(out, spark, output_mode="update")
+        return _fold_shards(src, fold, spark)
 
 
 @packed_user_fold("xq", {"hcnt": 1, "h": _EWMA_H - 1}, ("num", "den"))
@@ -1919,6 +1951,10 @@ def stream_drawdown_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shard_fold(
+    "shard long, doc_id long, n_chars long, priority double",
+    "ids array<long>, ws array<long>, ps array<double>",
+)
 def _wsample_shard_fn(key, pdfs, state):
     """Per-shard top-k priority heap (k = sampling._PRI_K): state is
     the shard's current best (priority, doc_id, n_chars) triples.
@@ -1999,30 +2035,13 @@ def stream_weighted_sample_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         16, 10,
     ).cast("long")
-    feed = docs.select(
-        "doc_id",
-        "n_chars",
-        (
-            F.col("n_chars").cast("double")
-            / ((h32 + F.lit(1)) / F.lit(4294967296.0))
-        ).alias("priority"),
-        F.timestamp_micros(F.col("doc_id") * 1_000_000).alias("ingest_ts"),
-    )
+    priority = F.col("n_chars").cast("double") / ((h32 + F.lit(1)) / F.lit(4294967296.0))
+    feed = _doc_arrival(docs.select("doc_id", "n_chars", priority.alias("priority")))
     with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
         src = with_event_time(sp.stream, "ingest_ts").select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("shard"),
-            "doc_id",
-            "n_chars",
-            "priority",
+            _shard("doc_id"), "doc_id", "n_chars", "priority"
         )
-        snaps = src.groupBy("shard").applyInPandasWithState(
-            _wsample_shard_fn,
-            outputStructType="shard long, doc_id long, n_chars long, priority double",
-            stateStructType="ids array<long>, ws array<long>, ps array<double>",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(snaps, spark, output_mode="update")
+        got = _fold_shards(src, _wsample_shard_fn, spark)
     # the FINAL top-k per doc survives every later snapshot of its
     # shard, so the max-priority row per doc over all emissions equals
     # its final-snapshot row; global top-k merges the dedup'd union
@@ -2295,13 +2314,14 @@ def stream_token_budget_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     determinism already requires — out-of-order ingestion composes by
     buffering on the same (rk, doc_id) key upstream."""
     from flod_spark.catalog.sampling import _TOK_SHARDS, _hash_prefix
+    from flod_spark.catalog.text import TOKEN_RE
 
     docs = load(spark, sf_dir, "documents")
     rk_int = F.conv(_hash_prefix("tb|", F.col("doc_id")), 16, 10).cast("long")
     feed = docs.select(
         "doc_id",
         "lang",
-        F.size(F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0)))
+        F.size(F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_RE), F.lit(0)))
         .cast("long")
         .alias("n_tok"),
         salted_mod(F.col("doc_id"), "tbs|", _TOK_SHARDS).alias("shard"),
@@ -2393,16 +2413,23 @@ def _ttl_claim_fold(ks, lasts, mx, bk, bus, ttl):
     return claim, mk[keep], ml[keep], int(mx)
 
 
-def _ttl_shard_fold(kdtype, cols, keys, ttl):
+_TTL_KEY_DDL = {"object": "string", "int64": "long"}
+
+
+def _ttl_shard_fold(kdtype, cols, keys, ttl, output_ddl):
     """Declare a per-shard TTL claim gate over _ttl_claim_fold;
     decorates its ``emit(b, claim)`` and returns the ``(key, pdfs,
     state)`` function. State is (keys as ``kdtype``, last-seen times,
     max time), seeded with _TTL_NONE. The batch drains ``cols`` sorted
     by ``keys`` = (claim key, time, *tiebreaks) — the (key, time)
     lexsort the fold requires — and folds with horizon ``ttl``.
-    ``emit`` turns the drained batch and its claim mask into the output
-    frame. The returned function keeps emit's name and module, so it
-    pickles by reference."""
+    ``emit`` turns the drained batch and its claim mask into the
+    ``output_ddl`` frame. The returned function keeps emit's name and
+    module, so it pickles by reference, and carries ``output_ddl`` and
+    the ``state_ddl`` derived from ``kdtype`` — the one place the TTL
+    state layout is written. The four bounded gates (dedup, n-gram
+    novelty, MinHash bands, passages) are declarations over it, run
+    by _fold_shards."""
     kcol, tcol = keys[:2]
 
     def deco(emit):
@@ -2423,30 +2450,35 @@ def _ttl_shard_fold(kdtype, cols, keys, ttl):
             state.update((ks2.tolist(), ls2.tolist(), mx2))
             yield emit(b, claim)
 
+        fold.output_ddl = output_ddl
+        fold.state_ddl = f"ks array<{_TTL_KEY_DDL[kdtype]}>, lasts array<long>, mx long"
         return fold
 
     return deco
 
 
-def _novelty_frac(docs, g, got):
-    """The novelty gates' batch-side finish: per doc, its gram count
-    (from the gram table ``g``), its novel-gram count (the drained
-    per-doc claim counts ``got``) and their ratio — ngram_novelty's
-    output shape, zero-filled for docs with no grams or no claims."""
+def _novelty_stream(spark: SparkSession, sf_dir: str, fold, gram) -> DataFrame:
+    """Source and sink of both novelty twins: the gram table
+    (text._novelty_grams) replayed in doc_id order and sharded by gram
+    hash; ``fold`` claims grams per shard from (doc_id, ``gram``) rows
+    and emits per-doc claim counts. Batch side, each doc's gram count
+    and summed claim count go to text.novelty_report, the report
+    ngram_novelty ends in too."""
+    from flod_spark.catalog.text import _novelty_grams, novelty_report
+
+    docs = load(spark, sf_dir, "documents")
+    g = _novelty_grams(docs)
+    feed = _doc_arrival(g)
+    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "h")) as sp:
+        src = with_event_time(sp.stream, "ingest_ts").select(_shard("h"), "doc_id", gram)
+        got = _fold_shards(src, fold, spark)
     nv = got.groupBy("doc_id").agg(F.sum("n").alias("n_novel"))
     ng = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     base = docs.select("doc_id")
-    j = base.join(ng, "doc_id", "left").join(nv, "doc_id", "left")
-    ngc = F.coalesce("n_grams", F.lit(0)).cast("long")
-    nvc = F.coalesce("n_novel", F.lit(0)).cast("long")
-    return j.select(
-        "doc_id",
-        ngc.alias("n_grams"),
-        nvc.alias("n_novel"),
-        (nvc.cast("double") / F.nullif(ngc, F.lit(0))).alias("novelty_frac"),
-    )
+    return novelty_report(base.join(ng, "doc_id", "left").join(nv, "doc_id", "left"))
 
 
+@_shard_fold("doc_id long, n long", "seen binary")
 def _novelty_claim_fn(key, pdfs, state):
     """Per-shard gram claim state: state = the gram hashes this shard
     has ever seen, carried as ONE packed binary blob of 16-byte md5s
@@ -2513,32 +2545,11 @@ def stream_ngram_novelty_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     novelty-within-horizon); the fixed-budget Bloom pre-filter =
     streaming/bloom.py::bloom_admit (pytest-gated, constant m-bit
     state, suppression exact / membership approximate)."""
-    from flod_spark.catalog.text import _novelty_grams
-
-    docs = load(spark, sf_dir, "documents")
-    g = _novelty_grams(docs)
-    feed = g.withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
-    )
-    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "h")) as sp:
-        # the 16-byte binary form of the gram hash crosses the exchange and
-        # lives in state; the hex form never leaves the batch side (shard
-        # assignment hashes the SAME hex string as before, so shard
-        # membership — and therefore every claim — is unchanged)
-        src = with_event_time(sp.stream, "ingest_ts").select(
-            F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"),
-            "doc_id",
-            F.unhex("h").alias("hb"),
-        )
-        claims = src.groupBy("shard").applyInPandasWithState(
-            _novelty_claim_fn,
-            outputStructType="doc_id long, n long",
-            stateStructType="seen binary",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(claims, spark, output_mode="update")
-    return _novelty_frac(docs, g, got)
+    # the 16-byte binary form of the gram hash crosses the exchange and
+    # lives in state; the hex form never leaves the batch side (shard
+    # assignment hashes the SAME hex string, so shard membership — and
+    # therefore every claim — is unchanged)
+    return _novelty_stream(spark, sf_dir, _novelty_claim_fn, F.unhex("h").alias("hb"))
 
 
 # Novelty horizon for the BOUNDED claim state: a gram is novel when its
@@ -2547,7 +2558,9 @@ def stream_ngram_novelty_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NOV_TTL_DOCS = 20
 
 
-@_ttl_shard_fold("object", ("h", "doc_id"), ("h", "doc_id"), _NOV_TTL_DOCS)
+@_ttl_shard_fold(
+    "object", ("h", "doc_id"), ("h", "doc_id"), _NOV_TTL_DOCS, "doc_id long, n long"
+)
 def _novelty_ttl_fn(b, claim):
     """Per-shard BOUNDED gram claim state: _ttl_claim_fold over
     (gram hash, doc_id) — state holds only the grams seen within the
@@ -2569,25 +2582,18 @@ def _novelty_ttl_fn(b, claim):
 
 
 def _novelty_bounded_oracle() -> str:
+    from flod_spark.catalog.text import novelty_oracle
+
     # same gram construction as ngram_novelty; novelty is the LAG
     # contract (previous occurrence more than the horizon back), not
     # corpus-first-occurrence
-    return (
-        "WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS a "
-        "  FROM documents), "
-        "g AS (SELECT DISTINCT doc_id, "
-        "    md5(a[i] || ' ' || a[i+1] || ' ' || a[i+2]) AS h "
-        "  FROM (SELECT doc_id, a, unnest(range(1, len(a) - 1)) AS i FROM toks) "
-        "  WHERE len(a) >= 3), "
+    return novelty_oracle(
         "p AS (SELECT doc_id, h, lag(doc_id) OVER (PARTITION BY h ORDER BY doc_id) AS prev "
         "  FROM g), "
         "d AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams, "
         "    CAST(SUM(CASE WHEN prev IS NULL OR doc_id - prev > "
         f"{_NOV_TTL_DOCS} THEN 1 ELSE 0 END) AS BIGINT) AS n_novel "
-        "  FROM p GROUP BY doc_id) "
-        "SELECT doc_id, COALESCE(n_grams, 0) AS n_grams, COALESCE(n_novel, 0) AS n_novel, "
-        "  CAST(n_novel AS DOUBLE) / NULLIF(n_grams, 0) AS novelty_frac "
-        "FROM documents LEFT JOIN d USING (doc_id)"
+        "  FROM p GROUP BY doc_id)"
     )
 
 
@@ -2616,26 +2622,7 @@ def stream_ngram_novelty_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact corpus-first-occurrence form remains available batch-side
     (ngram_novelty) and unbounded-live (stream_ngram_novelty_live);
     this is the always-on admission signal between them."""
-    from flod_spark.catalog.text import _novelty_grams
-
-    docs = load(spark, sf_dir, "documents")
-    g = _novelty_grams(docs)
-    feed = g.withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
-    )
-    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "h")) as sp:
-        src = with_event_time(sp.stream, "ingest_ts").select(
-            F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"), "doc_id", "h"
-        )
-        claims = src.groupBy("shard").applyInPandasWithState(
-            _novelty_ttl_fn,
-            outputStructType="doc_id long, n long",
-            stateStructType="hs array<string>, lasts array<long>, mx long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(claims, spark, output_mode="update")
-    return _novelty_frac(docs, g, got)
+    return _novelty_stream(spark, sf_dir, _novelty_ttl_fn, "h")
 
 
 # Duplicate horizon for the BOUNDED streaming dedup: an arrival is
@@ -2648,6 +2635,7 @@ _DEDUP_TTL_US = 2 * 60 * 60 * 1_000_000
     ("k", "us", "event_id", "user_id", "event_type"),
     ("k", "us", "event_id"),
     _DEDUP_TTL_US,
+    "user_id long, event_type string, event_id long, us long",
 )
 def _dedup_ttl_fn(b, claim):
     """Per-shard BOUNDED first-arrival state: _ttl_claim_fold over
@@ -2705,7 +2693,7 @@ def stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             with_event_time(sp.stream)
             .withWatermark("ts", _WATERMARK)
             .select(
-                F.pmod(F.xxhash64(k), F.lit(8)).alias("shard"),
+                _shard(k),
                 k.alias("k"),
                 "user_id",
                 "event_type",
@@ -2713,16 +2701,7 @@ def stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ts_micros("ts").alias("us"),
             )
         )
-        out = src.groupBy("shard").applyInPandasWithState(
-            _dedup_ttl_fn,
-            outputStructType=(
-                "user_id long, event_type string, event_id long, us long"
-            ),
-            stateStructType="ks array<string>, lasts array<long>, mx long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        got = drain(out, spark, output_mode="update")
+        got = _fold_shards(src, _dedup_ttl_fn, spark)
     return got.select(
         "user_id",
         "event_type",
@@ -2736,7 +2715,9 @@ def stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MH_TTL_DOCS = 40
 
 
-@_ttl_shard_fold("object", ("k", "doc_id", "band"), ("k", "doc_id"), _MH_TTL_DOCS)
+@_ttl_shard_fold(
+    "object", ("k", "doc_id", "band"), ("k", "doc_id"), _MH_TTL_DOCS, "doc_id long, band int"
+)
 def _mh_ttl_fn(b, claim):
     """Per-shard BOUNDED band-claim state: _ttl_claim_fold over
     ((band|signature) composite key, doc_id) — the TTL retrofit of
@@ -2751,27 +2732,10 @@ def _mh_ttl_fn(b, claim):
     return pd.DataFrame({"doc_id": b["doc_id"][claim], "band": b["band"][claim]})
 
 
-def _dedup_minhash_bounded_oracle() -> str:
-    from flod_spark.catalog.dedup import _minhash_ctes
-
-    ctes, _pair_select = _minhash_ctes()
-    return (
-        # dup evidence = the band signature's previous occurrence is at
-        # most the horizon back (the LAG contract, like
-        # stream_dedup_bounded; beyond-horizon recurrences re-claim)
-        f"WITH {ctes}, "
-        "p AS (SELECT doc_id, band, "
-        "    lag(doc_id) OVER (PARTITION BY band, bs ORDER BY doc_id) AS prev FROM sig) "
-        "SELECT doc_id, "
-        "  CAST(SUM(CASE WHEN prev IS NOT NULL AND doc_id - prev <= "
-        f"{_MH_TTL_DOCS} THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_bands, "
-        f"  SUM(CASE WHEN prev IS NOT NULL AND doc_id - prev <= {_MH_TTL_DOCS} "
-        "    THEN 1 ELSE 0 END) > 0 AS near_dup "
-        "FROM p GROUP BY doc_id"
-    )
-
-
-@query("stream_dedup_minhash_bounded", oracle=_dedup_minhash_bounded_oracle())
+# dup evidence = the band signature's previous occurrence is at most the
+# horizon back (the LAG contract, like stream_dedup_bounded;
+# beyond-horizon recurrences re-claim)
+@query("stream_dedup_minhash_bounded", oracle=_band_oracle(_MH_TTL_DOCS))
 def stream_dedup_minhash_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOUNDED-STATE fuzzy (MinHash-LSH) streaming dedup — near-dup-
     WITHIN-HORIZON, the TTL recipe (_ttl_claim_fold) retrofitted onto
@@ -2798,54 +2762,24 @@ def stream_dedup_minhash_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     searchsorted merge, zero per-event Python). The feed is the
     codegen signature table (the live twin's precompute argument,
     unchanged)."""
-    from flod_spark.catalog.dedup import BANDS, SEEDS, SHINGLE
-    from flod_spark.operators.minhash import minhash_signatures, shingles
 
-    sigs = minhash_signatures(
-        shingles(
-            load(spark, sf_dir, "documents", spread=True, amplify=2000),
-            shingle=SHINGLE,
-            distinct=False,
-        ),
-        seeds=SEEDS,
-        bands=BANDS,
-    ).persist()
-    feed = sigs.withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
-    )
-    with spool(spark, feed, "ingest_ts", n_batches=4, tiebreak=("doc_id", "band")) as sp:
+    def claim(stream):
         k = F.concat_ws("|", F.col("band").cast("string"), F.col("bs"))
-        src = with_event_time(sp.stream, "ingest_ts").select(
-            F.pmod(F.xxhash64(k), F.lit(8)).alias("shard"),
-            k.alias("k"),
-            "doc_id",
-            "band",
+        src = with_event_time(stream, "ingest_ts").select(
+            _shard(k), k.alias("k"), "doc_id", "band"
         )
-        claims = src.groupBy("shard").applyInPandasWithState(
-            _mh_ttl_fn,
-            outputStructType="doc_id long, band int",
-            stateStructType="ks array<string>, lasts array<long>, mx long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        kept = drain(claims, spark, output_mode="update")
-    dup = (
-        sigs.select("doc_id", "band")
-        .join(kept, ["doc_id", "band"], "left_anti")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_dup_bands"))
-    )
-    base = sigs.select("doc_id").distinct()
-    j = base.join(dup, "doc_id", "left")
-    n_dup = F.coalesce("n_dup_bands", F.lit(0)).cast("long")
-    return j.select("doc_id", n_dup.alias("n_dup_bands"), (n_dup > 0).alias("near_dup"))
+        return _fold_shards(src, _mh_ttl_fn, spark)
+
+    return _band_stream(spark, sf_dir, claim)
 
 
 # Passage-dup horizon for the BOUNDED substring dedup, in docs.
 _SS_TTL_DOCS = 25
 
 
-@_ttl_shard_fold("int64", ("h", "doc_id", "p"), ("h", "doc_id", "p"), _SS_TTL_DOCS)
+@_ttl_shard_fold(
+    "int64", ("h", "doc_id", "p"), ("h", "doc_id", "p"), _SS_TTL_DOCS, "doc_id long, p long"
+)
 def _ss_ttl_fn(b, claim):
     """Per-shard BOUNDED anchor-claim state: _ttl_claim_fold over
     (anchor hash, doc_id) at ANCHOR granularity — the TTL retrofit of
@@ -2861,34 +2795,11 @@ def _ss_ttl_fn(b, claim):
     return pd.DataFrame({"doc_id": b["doc_id"][claim], "p": b["p"][claim]})
 
 
-def _dedup_substring_bounded_oracle() -> str:
-    from flod_spark.catalog.text import _KR_K, winnow_arows_cte
-
-    return (
-        # dup anchor = its hash's previous occurrence (ordered by
-        # (doc_id, p) — within-doc repeats have gap 0) is at most the
-        # horizon back; coverage = interval union of dup spans per doc
-        # (the live twin's formula over the TTL dup set)
-        f"WITH {winnow_arows_cte()}, "
-        "r AS (SELECT doc_id, n, n_anchors, p, "
-        "    lag(doc_id) OVER (PARTITION BY hv ORDER BY doc_id, p) AS prev FROM arows), "
-        "dup AS (SELECT doc_id, list_sort(list(p)) AS ps FROM r "
-        f"  WHERE prev IS NOT NULL AND doc_id - prev <= {_SS_TTL_DOCS} GROUP BY doc_id), "
-        "cov AS (SELECT doc_id, len(ps) AS n_dup, "
-        f"    COALESCE(list_sum(list_transform(range(1, len(ps)), "
-        f"      i -> least({_KR_K}, ps[i+1] - ps[i]))), 0) + {_KR_K} AS dup_chars "
-        "  FROM dup), "
-        "base AS (SELECT DISTINCT doc_id, n, n_anchors FROM arows) "
-        "SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_chars, "
-        "  CAST(b.n_anchors AS BIGINT) AS n_anchors, "
-        "  CAST(COALESCE(c.n_dup, 0) AS BIGINT) AS n_dup_anchors, "
-        "  CAST(COALESCE(c.dup_chars, 0) AS BIGINT) AS dup_chars, "
-        "  CAST(COALESCE(c.dup_chars, 0) AS DOUBLE) / b.n AS dup_frac "
-        "FROM base b LEFT JOIN cov c USING (doc_id)"
-    )
-
-
-@query("stream_dedup_substring_bounded", oracle=_dedup_substring_bounded_oracle())
+# dup anchor = its hash's previous occurrence (ordered by (doc_id, p) —
+# within-doc repeats have gap 0) is at most the horizon back; coverage =
+# interval union of dup spans per doc (the live twin's formula over the
+# TTL dup set)
+@query("stream_dedup_substring_bounded", oracle=_passage_oracle(_SS_TTL_DOCS))
 def stream_dedup_substring_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOUNDED-STATE passage (substring) streaming dedup — passage-dup-
     WITHIN-HORIZON: winnow anchors extracted map-side on the stream
@@ -2909,50 +2820,13 @@ def stream_dedup_substring_bounded(spark: SparkSession, sf_dir: str) -> DataFram
     where the unbounded form's ever-seen anchor store grows without
     bound; per-batch work is the vectorized int64 fold. The recount is
     the live twin's: one anti-join on (doc, p) + per-doc array math."""
-    from flod_spark.catalog.text import anchor_coverage_chars, winnow_anchor_rows
+    from flod_spark.catalog.text import winnow_anchor_rows
 
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
-    )
-    with spool(spark, docs, "ingest_ts", n_batches=4, tiebreak=("doc_id",)) as sp:
-        anchors_s = winnow_anchor_rows(with_event_time(sp.stream, "ingest_ts"))
-        src = anchors_s.select(
-            F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"), "h", "doc_id", "p"
-        )
-        claims = src.groupBy("shard").applyInPandasWithState(
-            _ss_ttl_fn,
-            outputStructType="doc_id long, p long",
-            stateStructType="ks array<long>, lasts array<long>, mx long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        kept = drain(claims, spark, output_mode="update").select(
-            "doc_id", "p"
-        )
-    anchors = winnow_anchor_rows(load(spark, sf_dir, "documents"))
-    base = anchors.groupBy("doc_id").agg(
-        F.first("n_chars").alias("n_chars"), F.first("n_anchors").alias("n_anchors")
-    )
-    dup = (
-        anchors.join(kept, ["doc_id", "p"], "left_anti")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list("p")).alias("ps"))
-        .select(
-            "doc_id",
-            F.size("ps").cast("long").alias("n_dup_anchors"),
-            anchor_coverage_chars().alias("dup_chars"),
-        )
-    )
-    j = base.join(dup, "doc_id", "left")
-    dc = F.coalesce("dup_chars", F.lit(0)).cast("long")
-    return j.select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_anchors").cast("long").alias("n_anchors"),
-        F.coalesce("n_dup_anchors", F.lit(0)).cast("long").alias("n_dup_anchors"),
-        dc.alias("dup_chars"),
-        (dc.cast("double") / F.col("n_chars")).alias("dup_frac"),
-    )
+    def claim(stream):
+        anchors = winnow_anchor_rows(with_event_time(stream, "ingest_ts"))
+        return _fold_shards(anchors.select(_shard("h"), "h", "doc_id", "p"), _ss_ttl_fn, spark)
+
+    return _passage_stream(spark, sf_dir, claim)
 
 
 @query(

@@ -1101,7 +1101,8 @@ def anchor_coverage_chars():
     """Interval-union length of [p, p+K-1] spans over a sorted anchor
     position array column ``ps``: consecutive gaps clipped at K, plus K
     for the last anchor — exact covered-chars, pure per-doc array math.
-    Shared by substring_dup_report and the live streaming twin."""
+    Called only by anchor_dup_report, so the batch report and both
+    streaming twins measure coverage with one expression."""
     sz = F.size("ps")
     diffs = F.zip_with(
         F.slice("ps", 1, sz - 1),
@@ -1111,14 +1112,43 @@ def anchor_coverage_chars():
     return F.aggregate(diffs, F.lit(0).cast("long"), lambda a, x: a + x) + _KR_K
 
 
+def anchor_dup_report(anchors: DataFrame, dup_rows: DataFrame, count_col: str) -> DataFrame:
+    """The passage family's one per-doc report: every doc with anchors
+    (``anchors`` = winnow_anchor_rows output), its dup-anchor count as
+    ``count_col`` and the interval-union coverage of the ``dup_rows``
+    (doc_id, p) anchors. dedup_substring passes the anchors whose hash
+    is shared by >= 2 docs; stream_dedup_substring_live and
+    stream_dedup_substring_bounded pass the anchors that failed to
+    claim their hash."""
+    base = anchors.groupBy("doc_id").agg(
+        F.first("n_chars").alias("n_chars"), F.first("n_anchors").alias("n_anchors")
+    )
+    cov = (
+        dup_rows.groupBy("doc_id")
+        .agg(F.array_sort(F.collect_list("p")).alias("ps"))
+        .select(
+            "doc_id",
+            F.size("ps").cast("long").alias(count_col),
+            anchor_coverage_chars().alias("dup_chars"),
+        )
+    )
+    j = base.join(cov, "doc_id", "left")
+    dc = F.coalesce("dup_chars", F.lit(0)).cast("long")
+    return j.select(
+        "doc_id",
+        F.col("n_chars").cast("long").alias("n_chars"),
+        F.col("n_anchors").cast("long").alias("n_anchors"),
+        F.coalesce(count_col, F.lit(0)).cast("long").alias(count_col),
+        dc.alias("dup_chars"),
+        (dc.cast("double") / F.col("n_chars")).alias("dup_frac"),
+    )
+
+
 def substring_dup_report(docs: DataFrame) -> DataFrame:
     """Core of dedup_substring, reusable on any (doc_id, text) frame
     (the planted-passage tests feed it directly). See the gated query's
     docstring for semantics and the 100 TB argument."""
     anchors = winnow_anchor_rows(docs)
-    base = anchors.groupBy("doc_id").agg(
-        F.first("n_chars").alias("n_chars"), F.first("n_anchors").alias("n_anchors")
-    )
     # anchor-hash document frequency: (h, doc) distinct -> count. This
     # is a pure aggregate — no posting-list materialization, so a
     # boilerplate hash shared by millions of docs costs one partial-agg
@@ -1132,32 +1162,17 @@ def substring_dup_report(docs: DataFrame) -> DataFrame:
         .filter(F.col("nd") >= 2)
         .select("h")
     )
-    shared = anchors.join(df_h, "h").groupBy("doc_id").agg(
-        F.array_sort(F.collect_list("p")).alias("ps")
-    )
-    cov = shared.select(
-        "doc_id",
-        F.size("ps").cast("long").alias("n_shared_anchors"),
-        anchor_coverage_chars().alias("dup_chars"),
-    )
-    j = base.join(cov, "doc_id", "left")
-    dc = F.coalesce("dup_chars", F.lit(0)).cast("long")
-    return j.select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_anchors").cast("long").alias("n_anchors"),
-        F.coalesce("n_shared_anchors", F.lit(0)).cast("long").alias("n_shared_anchors"),
-        dc.alias("dup_chars"),
-        (dc.cast("double") / F.col("n_chars")).alias("dup_frac"),
-    )
+    return anchor_dup_report(anchors, anchors.join(df_h, "h"), "n_shared_anchors")
 
 
 def winnow_arows_cte() -> str:
     """The winnow-anchor CTE chain (documents -> arows(doc_id, n,
-    n_anchors, p, hv)) shared by dedup_substring's oracle and the live
-    streaming twin — same Horner gram hashes and leftmost-window-min
-    anchors as fingerprint_winnow, extended with positions. One source
-    so a constant change moves every oracle together."""
+    n_anchors, p, hv)) under every passage oracle: anchor_report_oracle
+    opens with it (dedup_substring and both streaming twins), and the
+    TTL-state tests read arows directly — same Horner gram hashes and
+    leftmost-window-min anchors as fingerprint_winnow, extended with
+    positions. One source so a constant change moves every oracle
+    together."""
     return (
         "nrm AS (SELECT doc_id, "
         f"    substr(regexp_replace(lower(text), '[ \\t\\r\\n]+', ' ', 'g'), 1, {_KR_CAP}) AS t "
@@ -1175,27 +1190,40 @@ def winnow_arows_cte() -> str:
     )
 
 
-@query(
-    "dedup_substring",
-    oracle=(
-        # shared = anchor hash in >= 2 docs; covered chars = interval
-        # union of [p, p+K-1] over the sorted shared positions
-        f"WITH {winnow_arows_cte()}, "
-        "dfh AS (SELECT hv FROM (SELECT hv, COUNT(DISTINCT doc_id) AS nd "
-        "  FROM arows GROUP BY hv) WHERE nd >= 2), "
-        "shared AS (SELECT doc_id, list_sort(list(p)) AS ps "
-        "  FROM arows JOIN dfh USING (hv) GROUP BY doc_id), "
-        "cov AS (SELECT doc_id, len(ps) AS n_shared, "
+def anchor_report_oracle(dup_ctes: str, name: str) -> str:
+    """The passage family's one oracle body, anchor_dup_report in SQL:
+    winnow_arows_cte, then ``dup_ctes`` — CTEs over arows that end in
+    one named ``name`` holding (doc_id, ps = sorted dup positions) —
+    then per-doc coverage (interval union of the dup spans) for every
+    doc with anchors, the count column named ``n_{name}_anchors``.
+    dedup_substring's dup set is the shared hashes; the streaming
+    twins' is the claim rule (streaming_live._passage_oracle)."""
+    return (
+        f"WITH {winnow_arows_cte()}, {dup_ctes}, "
+        f"cov AS (SELECT doc_id, len(ps) AS n_{name}, "
         f"    COALESCE(list_sum(list_transform(range(1, len(ps)), "
         f"      i -> least({_KR_K}, ps[i+1] - ps[i]))), 0) + {_KR_K} AS dup_chars "
-        "  FROM shared), "
+        f"  FROM {name}), "
         "base AS (SELECT DISTINCT doc_id, n, n_anchors FROM arows) "
         "SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_chars, "
         "  CAST(b.n_anchors AS BIGINT) AS n_anchors, "
-        "  CAST(COALESCE(c.n_shared, 0) AS BIGINT) AS n_shared_anchors, "
+        f"  CAST(COALESCE(c.n_{name}, 0) AS BIGINT) AS n_{name}_anchors, "
         "  CAST(COALESCE(c.dup_chars, 0) AS BIGINT) AS dup_chars, "
         "  CAST(COALESCE(c.dup_chars, 0) AS DOUBLE) / b.n AS dup_frac "
         "FROM base b LEFT JOIN cov c USING (doc_id)"
+    )
+
+
+@query(
+    "dedup_substring",
+    oracle=anchor_report_oracle(
+        # shared = anchor hash in >= 2 docs; covered chars = interval
+        # union of [p, p+K-1] over the sorted shared positions
+        "dfh AS (SELECT hv FROM (SELECT hv, COUNT(DISTINCT doc_id) AS nd "
+        "  FROM arows GROUP BY hv) WHERE nd >= 2), "
+        "shared AS (SELECT doc_id, list_sort(list(p)) AS ps "
+        "  FROM arows JOIN dfh USING (hv) GROUP BY doc_id)",
+        "shared",
     ),
 )
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1916,15 +1944,17 @@ def bpe_apply_from_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _novelty_grams(docs):
-    """Distinct (doc_id, md5(trigram)) pairs — the gram table both
-    ngram_novelty and its live twin score over. Projects the token
-    array ONCE, then builds grams by zipping three shifted slices: a
+    """Distinct (doc_id, md5(trigram)) pairs — the gram table
+    ngram_novelty and both streaming twins (stream_ngram_novelty_live,
+    stream_ngram_novelty_bounded) score over; _novelty_grams_cte is its
+    SQL form. Projects the token array ONCE, then builds grams by
+    zipping three shifted slices: a
     transform(sequence, element_at(a, i)) form re-evaluates the regexp
     extraction per element_at and measured 11x slower at sf0.1
     (28 s -> 2.5 s for the same 260k grams)."""
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0)).alias("a"),
+        F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_RE), F.lit(0)).alias("a"),
     )
     a = F.col("a")
     n2 = F.size(a) - 2
@@ -1946,22 +1976,56 @@ def _novelty_grams(docs):
     )
 
 
-@query(
-    "ngram_novelty",
-    oracle=(
-        "WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS a "
+def _novelty_grams_cte() -> str:
+    """_novelty_grams in SQL: toks, then g(doc_id, h) — the gram CTEs
+    under both novelty oracles (novelty_oracle)."""
+    return (
+        f"toks AS (SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_RE}') AS a "
         "  FROM documents), "
         "g AS (SELECT DISTINCT doc_id, "
         "    md5(a[i] || ' ' || a[i+1] || ' ' || a[i+2]) AS h "
         "  FROM (SELECT doc_id, a, unnest(range(1, len(a) - 1)) AS i FROM toks) "
-        "  WHERE len(a) >= 3), "
-        "f AS (SELECT h, MIN(doc_id) AS first_doc FROM g GROUP BY h), "
-        "d AS (SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams, "
-        "    CAST(SUM(CASE WHEN g.doc_id = f.first_doc THEN 1 ELSE 0 END) AS BIGINT) AS n_novel "
-        "  FROM g JOIN f USING (h) GROUP BY g.doc_id) "
+        "  WHERE len(a) >= 3)"
+    )
+
+
+def novelty_oracle(claim_ctes: str) -> str:
+    """The novelty family's one oracle body, novelty_report in SQL:
+    the gram CTEs, then ``claim_ctes`` — ending in d(doc_id, n_grams,
+    n_novel) — then every document zero-filled with its ratio. The
+    claim rule is first occurrence (ngram_novelty, borrowed verbatim by
+    stream_ngram_novelty_live) or a LAG within the horizon
+    (stream_ngram_novelty_bounded)."""
+    return (
+        f"WITH {_novelty_grams_cte()}, {claim_ctes} "
         "SELECT doc_id, COALESCE(n_grams, 0) AS n_grams, COALESCE(n_novel, 0) AS n_novel, "
         "  CAST(n_novel AS DOUBLE) / NULLIF(n_grams, 0) AS novelty_frac "
         "FROM documents LEFT JOIN d USING (doc_id)"
+    )
+
+
+def novelty_report(j: DataFrame) -> DataFrame:
+    """The novelty family's one per-doc report over ``j`` (every doc
+    with its n_grams and n_novel, NULL where it has none): zero-filled
+    counts and their ratio. ngram_novelty and both streaming twins
+    (through streaming_live._novelty_stream) finish here."""
+    ng = F.coalesce("n_grams", F.lit(0)).cast("long")
+    nv = F.coalesce("n_novel", F.lit(0)).cast("long")
+    return j.select(
+        "doc_id",
+        ng.alias("n_grams"),
+        nv.alias("n_novel"),
+        (nv.cast("double") / F.nullif(ng, F.lit(0))).alias("novelty_frac"),
+    )
+
+
+@query(
+    "ngram_novelty",
+    oracle=novelty_oracle(
+        "f AS (SELECT h, MIN(doc_id) AS first_doc FROM g GROUP BY h), "
+        "d AS (SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams, "
+        "    CAST(SUM(CASE WHEN g.doc_id = f.first_doc THEN 1 ELSE 0 END) AS BIGINT) AS n_novel "
+        "  FROM g JOIN f USING (h) GROUP BY g.doc_id)"
     ),
 )
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1993,16 +2057,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_novel"),
         )
     )
-    base = docs.select("doc_id")
-    j = base.join(d, "doc_id", "left")
-    ng = F.coalesce("n_grams", F.lit(0)).cast("long")
-    nv = F.coalesce("n_novel", F.lit(0)).cast("long")
-    return j.select(
-        "doc_id",
-        ng.alias("n_grams"),
-        nv.alias("n_novel"),
-        (nv.cast("double") / F.nullif(ng, F.lit(0))).alias("novelty_frac"),
-    )
+    return novelty_report(docs.select("doc_id").join(d, "doc_id", "left"))
 
 
 # ---------------------------------------------------------------------------

@@ -406,7 +406,7 @@ def test_ttl_state_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.window import Window
 
-    from flod_spark.catalog.streaming_live import _WATERMARK, _dedup_ttl_fn
+    from flod_spark.catalog.streaming_live import _WATERMARK, _dedup_ttl_fn, _shard
     from flod_spark.io import load, ts_micros
     from flod_spark.streaming import replay_stream
     from flod_spark.streaming.windows import with_event_time
@@ -441,7 +441,7 @@ def test_ttl_state_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
                 with_event_time(stream)
                 .withWatermark("ts", _WATERMARK)
                 .select(
-                    F.pmod(F.xxhash64(k), F.lit(8)).alias("shard"),
+                    _shard(k),
                     k.alias("k"),
                     "user_id",
                     "event_type",
@@ -451,10 +451,8 @@ def test_ttl_state_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
             )
             out = src.groupBy("shard").applyInPandasWithState(
                 _dedup_ttl_fn,
-                outputStructType=(
-                    "user_id long, event_type string, event_id long, us long"
-                ),
-                stateStructType="ks array<string>, lasts array<long>, mx long",
+                outputStructType=_dedup_ttl_fn.output_ddl,
+                stateStructType=_dedup_ttl_fn.state_ddl,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )

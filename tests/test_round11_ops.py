@@ -298,13 +298,18 @@ def test_int64_ttl_state_checkpoint_recovery(spark, sf_dir, tmp_path):
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.window import Window
 
-    from flod_spark.catalog.streaming_live import _SS_TTL_DOCS, _ss_ttl_fn
+    from flod_spark.catalog.streaming_live import (
+        _SS_TTL_DOCS,
+        _doc_arrival,
+        _shard,
+        _ss_ttl_fn,
+    )
     from flod_spark.catalog.text import winnow_anchor_rows
     from flod_spark.io import load
     from flod_spark.streaming import replay_stream
 
-    anchors = winnow_anchor_rows(load(spark, sf_dir, "documents")).withColumn(
-        "ingest_ts", F.timestamp_micros(F.col("doc_id") * 1_000_000)
+    anchors = _doc_arrival(
+        winnow_anchor_rows(load(spark, sf_dir, "documents"))
     ).localCheckpoint()
     src_dir = str(tmp_path / "src_ss")
     replay_stream(spark, anchors, "ingest_ts", src_dir, n_batches=4, tiebreak=("doc_id", "p"))
@@ -327,13 +332,11 @@ def test_int64_ttl_state_checkpoint_recovery(spark, sf_dir, tmp_path):
                 .option("maxFilesPerTrigger", 1)
                 .parquet(live)
             )
-            src = stream.select(
-                F.pmod(F.xxhash64("h"), F.lit(8)).alias("shard"), "h", "doc_id", "p"
-            )
+            src = stream.select(_shard("h"), "h", "doc_id", "p")
             out = src.groupBy("shard").applyInPandasWithState(
                 _ss_ttl_fn,
-                outputStructType="doc_id long, p long",
-                stateStructType="ks array<long>, lasts array<long>, mx long",
+                outputStructType=_ss_ttl_fn.output_ddl,
+                stateStructType=_ss_ttl_fn.state_ddl,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )

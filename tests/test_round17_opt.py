@@ -1,7 +1,7 @@
 """Round-17 optimization pins.
 
 The five per-user detector gates (ewma/cusum/drawdown/rsi/bollinger)
-moved from one applyInPandasWithState group PER USER to _DET_SHARDS
+moved from one applyInPandasWithState group PER USER to _SHARDS
 shard groups with packed per-user state, vectorized across users
 (streaming_live.py r17). The oracle gate proves end-to-end equality at
 the registered SFs; these tests prove the shard folds are BIT-IDENTICAL

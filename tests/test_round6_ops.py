@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pytest
 import pyspark.sql.functions as F  # noqa: F401  (used by later test classes)
 
 
@@ -62,11 +63,26 @@ class TestStreamDedupSubstringLive:
         assert got[4]["n_dup_anchors"] == got[4]["n_anchors"]
         assert got[4]["dup_frac"] > 0.8
 
-    def test_empty_documents(self, spark, tmp_path):
-        from flod_spark.catalog.streaming_live import stream_dedup_substring_live
 
-        got = stream_dedup_substring_live(spark, _docs_dir(tmp_path, []))
-        assert got.count() == 0
+@pytest.mark.parametrize(
+    "qkey",
+    [
+        "stream_prep_live",
+        "stream_dedup_substring_live",
+        "stream_dedup_substring_bounded",
+        "stream_dedup_minhash_live",
+        "stream_dedup_minhash_bounded",
+        "stream_ngram_novelty_live",
+        "stream_ngram_novelty_bounded",
+    ],
+)
+def test_doc_arrival_streams_on_empty_documents(spark, tmp_path, qkey):
+    """Every stream over the doc-arrival feed — the six claim-evidence
+    twins and stream_prep_live — returns no rows on an empty corpus."""
+    from flod_spark.catalog import streaming_live
+
+    got = getattr(streaming_live, qkey)(spark, _docs_dir(tmp_path, []))
+    assert got.count() == 0
 
 
 class TestWindowRollingRegression:

@@ -455,3 +455,30 @@ def test_ann_stages_and_temp_roots_written_once():
     assert sim.count('zip_with("sv", "cv"') == 1
     assert len(re.findall(r"(?<!def )\b_pq_adist_col\(\)", sim)) == 1
     assert len(re.findall(r"\bF\.col\('rn'\) <= N_PROBE\b", code)) == 1
+
+
+def test_claim_evidence_steps_written_once():
+    """The claim-evidence seam: under catalog/, the per-shard
+    applyInPandasWithState call lives only in the one runner
+    (streaming_live._fold_shards), the doc-arrival timestamp is written
+    once, passage coverage is computed in one place, and no gate spells
+    out the TTL state layout."""
+    import ast
+    import pathlib
+    import re
+
+    cat = pathlib.Path(__file__).resolve().parents[1] / "flod_spark" / "catalog"
+    sources = {p.name: p.read_text() for p in sorted(cat.glob("*.py"))}
+    call = 'groupBy("shard").applyInPandasWithState('
+    runners = [
+        (name, fn.name)
+        for name, text in sources.items()
+        for fn in ast.parse(text).body
+        if isinstance(fn, ast.FunctionDef) and call in (ast.get_source_segment(text, fn) or "")
+    ]
+    assert runners == [("streaming_live.py", "_fold_shards")], runners
+    assert sum(t.count(call) for t in sources.values()) == 1
+    assert sum(t.count('doc_id") * 1_000_000') for t in sources.values()) == 1
+    coverage = re.compile(r"(?<!def )\banchor_coverage_chars\(\)")
+    assert sum(len(coverage.findall(t)) for t in sources.values()) == 1
+    assert not [n for n, t in sources.items() if 'stateStructType="ks array' in t]

@@ -5,7 +5,10 @@ pushdown) at a glance. tests/test_plans.py imports ``iter_plans`` /
 plan-shape regression gate can never disagree.
 
 Usage: python tools/plan_report.py [sf_dir]
-Live-streaming queries are skipped (their plan is per-micro-batch).
+``SKIP`` names the keys whose plan is not built: eager or side-effecting
+keys and 17 of the live-streaming keys. Every other live key is built —
+its stream runs to completion — and the batch DataFrame it returns (the
+drained sink plus any batch-side finish) is the plan checked.
 """
 
 from __future__ import annotations
