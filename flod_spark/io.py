@@ -164,12 +164,10 @@ def atomic_swap_dir(df: DataFrame, target: str, partition_by: str) -> None:
 def pinned_stream_partitions(spark: SparkSession, wide: bool = False):
     """Context manager pinning spark.sql.shuffle.partitions for one
     gate-scale stream's LIFETIME, restored on exit — entered once per
-    stream by streaming/gate.py::drain: state stores pay a
-    per-partition-per-trigger commit (32 partitions x 5 triggers of
-    mostly-empty state measured ~12% of gate wall time), and results
-    are partition-count independent (keys hash to exactly one state
-    partition either way; the RocksDB-vs-default pin covers the
-    backends).
+    stream by streaming/gate.py::drain: state stores pay one commit per
+    partition per trigger, and results are partition-count independent
+    (keys hash to exactly one state partition either way; the
+    RocksDB-vs-default pin covers the backends).
 
     The value is DERIVED — min(8, defaultParallelism) — not a literal
     (r16 verdict item 7): on the bench hosts (8+ cores) it is the
@@ -180,7 +178,12 @@ def pinned_stream_partitions(spark: SparkSession, wide: bool = False):
     partitions (none exists as of 4.1). The narrow pin is intentional
     for small-state (gate-scale) streams at any cluster size: their
     state is too small for more partitions to add anything but more
-    per-partition commits.
+    per-partition commits. With session.get_spark's FileSystem-based
+    checkpoint manager a commit costs ~5 ms (stream_window_live at
+    sf0.1, 4-core host: state commit 126 ms over 6 triggers x 4
+    partitions; ~87 ms each while FileContext renames forked
+    `readlink`), so the pin now saves little time per trigger; it is
+    kept because widening it buys nothing at gate scale.
 
     ``wide=True`` is for gates whose state is CORPUS-scale (one key per
     observed pair/content hash, not per user): those want every core's

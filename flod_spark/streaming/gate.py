@@ -111,8 +111,10 @@ def drain(
 
     Without ``foreach_batch`` the rows land in a memory sink (unique
     name: re-entrant per call) and the materialized table is returned;
-    with it, each micro-batch goes to that function and None is
-    returned. Shuffle partitions are pinned for the stream's lifetime —
+    the sink's temp view is dropped first, so the rows live as long as
+    the returned DataFrame, not the session. With ``foreach_batch``,
+    each micro-batch goes to that function and None is returned.
+    Shuffle partitions are pinned for the stream's lifetime —
     ``wide_state`` picks the corpus-scale pin (see
     io.pinned_stream_partitions for both)."""
     name = "live_" + uuid.uuid4().hex[:12]
@@ -127,4 +129,8 @@ def drain(
             q.processAllAvailable()
         finally:
             q.stop()
-    return None if foreach_batch else spark.table(name)
+    if foreach_batch:
+        return None
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out

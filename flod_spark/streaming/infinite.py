@@ -89,5 +89,6 @@ def take_infinite(
         rows = spark.table(name).orderBy(time_col, *rest).limit(n).collect()
     finally:
         q.stop()
+        spark.catalog.dropTempView(name)
         shutil.rmtree(ckpt, ignore_errors=True)
     return rows

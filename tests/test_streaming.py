@@ -255,6 +255,56 @@ def test_drain_cleans_up_when_the_stream_raises(spark, events):
     assert not any(os.path.exists(d) for d in seen["ckpt"])
 
 
+def test_stateful_drain_forks_no_readlink(spark, tmp_path):
+    """Checkpoint renames must not shell out. Spark's default
+    FileContext-based checkpoint manager asks RawLocalFileSystem for the
+    link status of every renamed file, which without libhadoop forks one
+    `readlink` per state delta, checksum, offset and commit file.
+    session.get_spark pins the FileSystem-based manager; a
+    JFR recording of process starts proves the drain forks none. The
+    `chmod` forks of RawLocalFileSystem.setPermission are not asserted:
+    no conf turns them off."""
+    jvm = spark._jvm
+    df = spark.range(2000).select(
+        (F.col("id") % 50).alias("k"), F.timestamp_seconds("id").alias("ts")
+    )
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        with spool(spark, df, "ts", n_batches=3) as sp:
+            got = drain(sp.stream.groupBy("k").count(), spark, output_mode="complete")
+            assert got.count() == 50
+    finally:
+        rec.stop()
+    path = jvm.java.io.File(str(tmp_path / "drain.jfr")).toPath()
+    rec.dump(path)
+    rec.close()
+    started = [e.getString("command") for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)]
+    readlinks = [c for c in started if c.startswith("readlink")]
+    assert not readlinks, f"{len(readlinks)} readlink forks, first: {readlinks[0]}"
+
+
+def test_drain_and_take_leave_no_temp_views(spark, events):
+    """The memory sinks behind drain and take_infinite are registered as
+    temp views; both drop them, so neither the views nor their rows
+    outlive what the caller holds. The drained frame still reads its
+    rows after the drop."""
+    from flod_spark.streaming import rate_source, take_infinite
+
+    def leaked():
+        return [t.name for t in spark.catalog.listTables() if t.name.startswith(("live_", "take_inf_"))]
+
+    before = leaked()
+    with spool(spark, events, "ts", n_batches=2) as sp:
+        got = drain(sp.stream.groupBy("event_type").count(), spark, output_mode="complete")
+    assert leaked() == before
+    expect = events.groupBy("event_type").count().orderBy("event_type").collect()
+    assert got.orderBy("event_type").collect() == expect
+    assert len(take_infinite(rate_source(spark, rows_per_second=200), 3, spark)) == 3
+    assert leaked() == before
+
+
 def test_windowed_agg_under_rocksdb_state_store(spark, events, tmp_path):
     """The production state backend: swapping the HDFS-backed default
     store for RocksDBStateStoreProvider (the 100 TB choice — state
