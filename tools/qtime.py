@@ -4,7 +4,9 @@ driver artifact.
 
 Usage: python tools/qtime.py [--runs N] [sf_dir] qkey [qkey ...]
 Prints one line per key: min and all run times (noop-sink forced, same
-timed region as bench.py).
+timed region as bench.py), and each run's CPU seconds (user plus system)
+of this process and all its descendants — the driver JVM and its Python
+workers — read with perfbench's ``tree_cpu_s``.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ def main() -> int:
 
     import __spark_entry__ as entry
     from flod_spark.session import get_spark
+    from perfbench.probes import tree_cpu_s
 
     spark = get_spark("flod-qtime")
     qs = entry.queries()
@@ -43,17 +46,20 @@ def main() -> int:
     spark.range(1000).selectExpr("sum(id)").collect()
 
     for name in keys:
-        times = []
+        times, cpus = [], []
         for _ in range(runs):
             spark.sparkContext.setJobDescription(f"qtime:{name}")
-            t0 = time.perf_counter()
+            t0, cpu0 = time.perf_counter(), tree_cpu_s(os.getpid())
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
+            cpus.append(tree_cpu_s(os.getpid()) - cpu0)
             spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: min={min(times):.3f} runs="
-            + ",".join(f"{t:.3f}" for t in times),
+            + ",".join(f"{t:.3f}" for t in times)
+            + " cpu="
+            + ",".join(f"{c:.2f}" for c in cpus),
             flush=True,
         )
     return 0
