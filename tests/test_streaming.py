@@ -220,6 +220,206 @@ def test_replay_partition_contract(spark, events, tmp_path):
             assert sp.max == frame.agg(F.max("ts")).collect()[0][0]
 
 
+def _jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it ran (its own job
+    group, read after the listener bus drained)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "spool_memo_" + uuid.uuid4().hex
+    sc.setJobGroup(group, "spool memo test")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _spool_files(d):
+    """{name: (bytes, mtime_ns)} of a spool's batch files."""
+    import glob
+    import os
+
+    return {
+        os.path.basename(f): (open(f, "rb").read(), os.stat(f).st_mtime_ns)
+        for f in glob.glob(os.path.join(d, "part-b*.parquet"))
+    }
+
+
+def _ts_table(spark, path, lo, hi):
+    """Write ids lo..hi-1 with one-second timestamps as one parquet file
+    under path, without checksum sidecars (tests rewrite it in place)."""
+    import glob
+    import os
+
+    spark.range(lo, hi).select("id", F.timestamp_seconds("id").alias("ts")).coalesce(
+        1
+    ).write.mode("overwrite").parquet(path)
+    for crc in glob.glob(os.path.join(path, ".*.crc")):
+        os.remove(crc)
+
+
+def test_spool_memo_links_an_unchanged_spool(spark, sf_dir):
+    """A second spool of an equal plan over unchanged files runs no Spark
+    job and publishes byte-identical files with the same mod-times, so
+    the same max; a different parameter is its own entry."""
+
+    def spooled(df, **kw):
+        with spool(spark, df, "ts", **kw) as sp:
+            return _spool_files(sp.dir), sp.max
+
+    first, _ = _jobs(spark, lambda: spooled(load(spark, sf_dir, "events"), n_batches=7))
+    df = load(spark, sf_dir, "events")  # a new frame: schema inference runs a job
+    again, n_again = _jobs(spark, lambda: spooled(df, n_batches=7))
+    assert first[0] and again == first
+    assert n_again == 0, f"{n_again} Spark jobs on an unchanged spool"
+    _, n_other = _jobs(spark, lambda: spooled(df, n_batches=6))
+    assert n_other > 0
+
+
+def test_spool_memo_misses_when_input_files_change(spark, tmp_path):
+    """The key re-stats every file of the analyzed plan's file leaves:
+    rewriting the source in place and adding a file to the table
+    directory are misses that replay the new rows. A feed derived from a
+    persisted frame is keyed on the same files (DataFrame.inputFiles()
+    lists none for it)."""
+    import glob
+    import os
+    import shutil
+
+    src = str(tmp_path / "src")
+    _ts_table(spark, src, 0, 200)
+
+    def replay(df, tag):
+        out = str(tmp_path / tag)
+        shutil.rmtree(out, ignore_errors=True)
+        _, n = _jobs(spark, lambda: replay_stream(spark, df, "ts", out, n_batches=4))
+        return n, sorted(r.id for r in spark.read.parquet(out).collect())
+
+    assert replay(spark.read.parquet(src), "a")[0] > 0
+    assert replay(spark.read.parquet(src), "b") == (0, list(range(200)))
+    # rewritten in place: the same path (and inode), new rows
+    (part,) = glob.glob(os.path.join(src, "part-*.parquet"))
+    _ts_table(spark, str(tmp_path / "new"), 200, 300)
+    (new,) = glob.glob(str(tmp_path / "new" / "part-*.parquet"))
+    shutil.copyfile(new, part)
+    n, ids = replay(spark.read.parquet(src), "c")
+    assert n > 0 and ids == list(range(200, 300))
+    # one more file in the table directory
+    _ts_table(spark, str(tmp_path / "more"), 300, 350)
+    (more,) = glob.glob(str(tmp_path / "more" / "part-*.parquet"))
+    shutil.copyfile(more, os.path.join(src, "part-extra.parquet"))
+    n, ids = replay(spark.read.parquet(src), "d")
+    assert n > 0 and ids == list(range(200, 350))
+
+    base = spark.read.parquet(src).persist()
+    try:
+        feed = base.withColumn("k", F.col("id") % 7)
+        assert feed.inputFiles() == []
+        replay(feed, "e")
+        assert replay(feed, "f")[0] == 0
+        os.utime(part, (1_000_000, 1_000_000))
+        assert replay(feed, "g")[0] > 0
+    finally:
+        base.unpersist()
+
+
+def test_spool_memo_skips_nondeterministic_and_rdd_plans(spark, tmp_path):
+    """F.rand() plans and createDataFrame's LogicalRDD leaves are rebuilt
+    on every call."""
+    src = str(tmp_path / "src")
+    _ts_table(spark, src, 0, 100)
+    rows = [(i, r.ts) for i, r in enumerate(spark.read.parquet(src).collect())]
+    frames = {
+        "rand": lambda: spark.read.parquet(src).withColumn("r", F.rand(7)),
+        "rdd": lambda: spark.createDataFrame(rows, "id long, ts timestamp"),
+    }
+    for tag, frame in frames.items():
+        for i in range(2):
+            _, n = _jobs(
+                spark,
+                lambda: replay_stream(spark, frame(), "ts", str(tmp_path / f"{tag}{i}"), n_batches=3),
+            )
+            assert n > 0, (tag, i)
+
+
+def test_spool_memo_evicts_a_retimed_file_and_stays_bounded(spark, tmp_path):
+    """The published files are links to the stored ones: re-timing one
+    evicts its entry (the next call rewrites the spool with the pinned
+    mod-times), and the memo never holds more than _MEMO_ENTRIES."""
+    import glob
+    import os
+
+    from flod_spark.streaming import replay
+
+    src = str(tmp_path / "src")
+    _ts_table(spark, src, 0, 100)
+    df = spark.read.parquet(src)
+    a = str(tmp_path / "a")
+    replay_stream(spark, df, "ts", a, n_batches=3)
+    want = _spool_files(a)
+    os.utime(sorted(glob.glob(os.path.join(a, "part-b*")))[0], (5.0, 5.0))
+    b = str(tmp_path / "b")
+    _, n = _jobs(spark, lambda: replay_stream(spark, df, "ts", b, n_batches=3))
+    assert n > 0
+    assert _spool_files(b) == want
+    _, n = _jobs(spark, lambda: replay_stream(spark, df, "ts", str(tmp_path / "c"), n_batches=3))
+    assert n == 0
+
+    for k in range(2, 2 + replay._MEMO_ENTRIES + 1):
+        replay_stream(spark, df, "ts", str(tmp_path / f"k{k}"), n_batches=k)
+    assert len(replay._memo) == replay._MEMO_ENTRIES
+    stored = os.path.dirname(replay._memo[0].dir)
+    assert sorted(os.listdir(stored)) == sorted(os.path.basename(e.dir) for e in replay._memo)
+
+
+def test_spool_memo_dies_with_its_spark_context(tmp_path):
+    """Spark removes the memo's directory at stop(), and a new session
+    over the same files replays them anew (run in a child process: the
+    suite's session must stay up)."""
+    import pathlib
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = str(pathlib.Path(__file__).resolve().parents[1])
+    script = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {repo!r})
+        from pyspark import SparkFiles
+        from pyspark.sql import SparkSession, functions as F
+        from flod_spark.streaming.replay import replay_stream
+
+        def session():
+            return (SparkSession.builder.master("local[1]")
+                    .config("spark.ui.enabled", "false")
+                    .config("spark.driver.memory", "1g").getOrCreate())
+
+        def jobs(spark, out):
+            df, sc = spark.read.parquet({str(tmp_path / "src")!r}), spark.sparkContext
+            sc.setJobGroup(out, "memo")
+            replay_stream(spark, df, "ts", out, n_batches=3)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            return len(sc.statusTracker().getJobIdsForGroup(out))
+
+        s = session()
+        s.range(60).select("id", F.timestamp_seconds("id").alias("ts")).write.parquet({str(tmp_path / "src")!r})
+        jobs(s, {str(tmp_path / "a")!r})
+        assert jobs(s, {str(tmp_path / "b")!r}) == 0
+        memo = os.path.join(SparkFiles.getRootDirectory(), "flod_spool_memo")
+        assert os.listdir(memo)
+        s.stop()
+        assert not os.path.exists(memo), os.listdir(memo)
+        assert jobs(session(), {str(tmp_path / "c")!r}) > 0
+        print("MEMO-OK")
+        """
+    )
+    r = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True, timeout=300)
+    assert "MEMO-OK" in r.stdout, r.stderr[-3000:]
+
+
 def test_drain_cleans_up_when_the_stream_raises(spark, events):
     """A stream that fails inside drain still leaves nothing behind: the
     spool dir and the checkpoint are removed and the shuffle-partition
