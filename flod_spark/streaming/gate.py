@@ -8,12 +8,12 @@
   exit, error or not. It also hands back the exact max of the order
   column, read from the replay's own parquet files (footer statistics)
   — the horizon the watermark gates cut at, with no Spark job.
-  The spool may be served from replay's memo: when an equal plan over
-  unchanged input files was spooled before, its files are hard links
-  to the stored ones and no Spark job runs. So the spool's files are
-  read-only; ``replay.append_sentinel_batches`` only adds new files
-  after them, and a caller that re-times or rewrites one copies it
-  first.
+  The spool may be served from replay's memo: when an equal plan with
+  the same output schema over unchanged input files was spooled before,
+  its files are hard links to the stored ones and no Spark job runs. So
+  the spool's files are read-only; ``replay.append_sentinel_batches``
+  only adds new files after them, and a caller that re-times or
+  rewrites one copies it first.
 - ``drain`` is the one start -> processAllAvailable -> stop loop: a fresh
   checkpoint, the stream partition pin (io.pinned_stream_partitions) for
   the stream's lifetime, checkpoint removal on the way out. It runs the

@@ -20,17 +20,20 @@ full determinism contract catalog/streaming_live.py relies on.
 Memo: a spool is a pure function of the call's parameters and its
 input's analyzed plan, and through the plan's file leaves, of the
 files it lists. So ``replay_stream`` and ``replay_buckets`` keep the
-last ``_MEMO_ENTRIES`` spools they wrote, per SparkContext, as hard
-links under ``<SparkFiles root>/flod_spool_memo/`` (Spark removes that
-root at ``stop()``). A call with the same parameters over a
-deterministic plan that ``sameResult``s a stored one, whose every input
-file still has the same (path, size, mtime_ns, inode), links the stored
-files into ``out_dir`` and runs no Spark job. A plan with any other leaf
+spools they wrote, up to ``_MEMO_BYTES`` of files (least recently used
+evicted), as hard links under ``<SparkFiles root>/flod_spool_memo/``.
+A call with the same parameters and output schema over a deterministic
+plan that ``sameResult``s a stored one, whose every input file still
+has the same (path, size, mtime_ns, inode), links the stored files into
+``out_dir`` and runs no Spark job. A plan with any other leaf
 (``createDataFrame``'s LogicalRDD, a memory-sink table, a non-file
 source) is never memoized. The published files are therefore shared,
 read-only links: a caller that re-times or rewrites a spool file must
 copy it first (as the restart tests do). A stored file whose size or
-mtime changed anyway is evicted, not served.
+mtime changed anyway is evicted, not served; so is every entry of a
+stopped SparkContext, whose SparkFiles root Spark removes at ``stop()``.
+The memo pays off only for repeated calls over unchanged inputs; a
+first call pays the full build plus the key and the links.
 """
 
 from __future__ import annotations
@@ -48,7 +51,11 @@ from pyspark import SparkFiles, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_MEMO_ENTRIES = 8  # stored spools per process, least recently used evicted
+# Bytes of stored spool files kept per process, least recently used
+# evicted; a spool larger than this is not stored. One sweep of the 48
+# stream gates asks for 19 distinct spools: 3.1 MB at sf0.01, 25.4 MB at
+# sf0.1 (a perfbench workload's one spool: 0.5-1.8 MB).
+_MEMO_BYTES = 64 << 20
 
 # Leaves whose rows are fixed by the plan itself or by the files it lists.
 _PURE_LEAVES = frozenset(
@@ -63,7 +70,7 @@ _FILE_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
 
 
 class _Stored(NamedTuple):
-    key: tuple  # (params, applicationId, input file stamps)
+    key: tuple  # (params, output schema, input file stamps)
     plan: Any  # the analyzed JVM plan the spool was written from
     dir: str  # one hard link (or copy) per spool file
     files: tuple[tuple[str, int, int], ...]  # (name, st_size, st_mtime_ns)
@@ -72,7 +79,7 @@ class _Stored(NamedTuple):
 _memo: list[_Stored] = []  # least recently used first
 
 
-def _memo_key(spark: SparkSession, df: DataFrame, params: tuple):
+def _memo_key(df: DataFrame, params: tuple):
     """``(key, plan)`` if ``df``'s rows are a pure function of its
     analyzed plan and the files that plan lists, else None.
 
@@ -80,7 +87,9 @@ def _memo_key(spark: SparkSession, df: DataFrame, params: tuple):
     reads the cache-substituted plan and lists no file for a frame built
     over a persisted one. Every listed file is re-``stat``ed here, so a
     rewrite in place changes the key; a file added to a table directory
-    changes a freshly read frame's listing."""
+    changes a freshly read frame's listing. The output schema is part of
+    the key because ``sameResult`` compares canonical plans, which erase
+    column and alias names, and the spool's files carry the names."""
     plan = df._jdf.queryExecution().analyzed()
     if not plan.deterministic():
         return None
@@ -105,7 +114,7 @@ def _memo_key(spark: SparkSession, df: DataFrame, params: tuple):
             except OSError:
                 return None
             stamps.append((uri, st.st_size, st.st_mtime_ns, st.st_ino))
-    return (params, spark.sparkContext.applicationId, tuple(sorted(stamps))), plan
+    return (params, df.schema.json(), tuple(sorted(stamps))), plan
 
 
 def _link(src: str, dst: str) -> None:
@@ -132,15 +141,16 @@ def _size_mtime(path: str) -> tuple[int, int] | None:
 
 def _memo_hit(key: tuple, plan, out_dir: str) -> bool:
     """Publish a stored spool equal to ``(key, plan)`` into ``out_dir``;
-    False (evicting the entry if its files changed) when there is none."""
-    # entries of a stopped SparkContext: their directory went with it
-    _memo[:] = [e for e in _memo if e.key[1] == key[1]]
-    for e in _memo:
-        if e.key == key and plan.sameResult(e.plan):
+    False when there is none. An entry whose stored files changed, or
+    went with a stopped SparkContext's SparkFiles root, is evicted."""
+    for e in list(_memo):
+        if e.key != key:
+            continue
+        if any(_size_mtime(os.path.join(e.dir, n)) != (s, m) for n, s, m in e.files):
             _memo.remove(e)
-            if any(_size_mtime(os.path.join(e.dir, n)) != (s, m) for n, s, m in e.files):
-                shutil.rmtree(e.dir, ignore_errors=True)
-                return False
+            shutil.rmtree(e.dir, ignore_errors=True)
+        elif plan.sameResult(e.plan):
+            _memo.remove(e)
             _memo.append(e)
             os.makedirs(out_dir, exist_ok=True)
             for n, _, _ in e.files:
@@ -150,18 +160,19 @@ def _memo_hit(key: tuple, plan, out_dir: str) -> bool:
 
 
 def _memo_store(key: tuple, plan, out_dir: str, names: list[str]) -> None:
+    files = tuple((n, *_size_mtime(os.path.join(out_dir, n))) for n in names)
+    if sum(s for _, s, _ in files) > _MEMO_BYTES:
+        return
     d = os.path.join(SparkFiles.getRootDirectory(), "flod_spool_memo", uuid.uuid4().hex)
     os.makedirs(d)
     for n in names:
         _link(os.path.join(out_dir, n), os.path.join(d, n))
-    files = tuple((n, *_size_mtime(os.path.join(d, n))) for n in names)
     _memo.append(_Stored(key, plan, d, files))
-    while len(_memo) > _MEMO_ENTRIES:
+    while sum(s for e in _memo for _, s, _ in e.files) > _MEMO_BYTES:
         shutil.rmtree(_memo.pop(0).dir, ignore_errors=True)
 
 
 def _memoized(
-    spark: SparkSession,
     df: DataFrame,
     params: tuple,
     out_dir: str,
@@ -170,7 +181,7 @@ def _memoized(
     """Fill ``out_dir`` with the spool of ``(params, df)``: from the memo
     if it holds one, else by ``write()`` (which returns the names of the
     files it published), storing the result when ``df`` is memoizable."""
-    memo = _memo_key(spark, df, params)
+    memo = _memo_key(df, params)
     if memo is not None and _memo_hit(*memo, out_dir):
         return
     names = write()
@@ -215,7 +226,6 @@ def replay_stream(
     An equal earlier call's files are linked, not rewritten (module
     docstring: memo)."""
     _memoized(
-        spark,
         df,
         ("range", order_col, n_batches, tuple(tiebreak)),
         out_dir,
@@ -318,7 +328,6 @@ def replay_buckets(
     (micro-batch count, a test-harness constant — never rows); every
     bucket file comes from ONE write job over the persisted input."""
     _memoized(
-        spark,
         df,
         ("buckets", bucket_col),
         out_dir,

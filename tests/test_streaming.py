@@ -325,6 +325,33 @@ def test_spool_memo_misses_when_input_files_change(spark, tmp_path):
         base.unpersist()
 
 
+def test_spool_memo_keys_on_column_names(spark, tmp_path):
+    """Plan canonicalization erases alias names, so two frames that differ
+    only in a column's name sameResult each other; the stored spool's
+    files carry the first name. Each name is its own entry, and every
+    replayed value arrives (a served file with the other name would read
+    as NULL)."""
+    from flod_spark.streaming.replay import replay_buckets
+
+    src = str(tmp_path / "src")
+    _ts_table(spark, src, 0, 120)
+    for name in ("a", "b"):
+        df = spark.read.parquet(src).select("ts", (F.col("id") % 5).alias(name))
+        out = str(tmp_path / f"range_{name}")
+        _, n = _jobs(spark, lambda: replay_stream(spark, df, "ts", out, n_batches=3))
+        assert n > 0, name
+        got = spark.read.schema(df.schema).parquet(out)
+        assert got.filter(F.col(name).isNull()).count() == 0, name
+        assert got.count() == 120
+
+        out = str(tmp_path / f"buckets_{name}")
+        _, n = _jobs(spark, lambda: replay_buckets(spark, df, name, out))
+        assert n > 0, name
+        got = spark.read.schema(df.drop(name).schema).parquet(out)
+        assert got.filter(F.col("ts").isNull()).count() == 0, name
+        assert got.count() == 120
+
+
 def test_spool_memo_skips_nondeterministic_and_rdd_plans(spark, tmp_path):
     """F.rand() plans and createDataFrame's LogicalRDD leaves are rebuilt
     on every call."""
@@ -344,10 +371,11 @@ def test_spool_memo_skips_nondeterministic_and_rdd_plans(spark, tmp_path):
             assert n > 0, (tag, i)
 
 
-def test_spool_memo_evicts_a_retimed_file_and_stays_bounded(spark, tmp_path):
+def test_spool_memo_evicts_a_retimed_file_and_stays_bounded(spark, tmp_path, monkeypatch):
     """The published files are links to the stored ones: re-timing one
     evicts its entry (the next call rewrites the spool with the pinned
-    mod-times), and the memo never holds more than _MEMO_ENTRIES."""
+    mod-times). The stored files never exceed _MEMO_BYTES, and a spool
+    larger than that is not stored."""
     import glob
     import os
 
@@ -367,11 +395,21 @@ def test_spool_memo_evicts_a_retimed_file_and_stays_bounded(spark, tmp_path):
     _, n = _jobs(spark, lambda: replay_stream(spark, df, "ts", str(tmp_path / "c"), n_batches=3))
     assert n == 0
 
-    for k in range(2, 2 + replay._MEMO_ENTRIES + 1):
+    def held():
+        return sum(s for e in replay._memo for _, s, _ in e.files)
+
+    one = sum(os.path.getsize(f) for f in glob.glob(os.path.join(b, "part-b*")))
+    monkeypatch.setattr(replay, "_MEMO_BYTES", 3 * one)
+    for k in range(4, 10):
         replay_stream(spark, df, "ts", str(tmp_path / f"k{k}"), n_batches=k)
-    assert len(replay._memo) == replay._MEMO_ENTRIES
+        assert 0 < held() <= replay._MEMO_BYTES
+    assert [e.key[0][2] for e in replay._memo][-1] == 9
     stored = os.path.dirname(replay._memo[0].dir)
     assert sorted(os.listdir(stored)) == sorted(os.path.basename(e.dir) for e in replay._memo)
+    before = list(replay._memo)
+    monkeypatch.setattr(replay, "_MEMO_BYTES", 0)
+    replay_stream(spark, df, "ts", str(tmp_path / "big"), n_batches=2)
+    assert replay._memo == before
 
 
 def test_spool_memo_dies_with_its_spark_context(tmp_path):
